@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -42,7 +43,7 @@ object Bench {
       // here is discarded unexecuted, and queries without eager staging
       // are unaffected. Staging errors are ignored here so they surface
       // (and are counted) in the timed loop below.
-      try fn(spark, sfDir) catch { case _: Throwable => () }
+      try fn(spark, sfDir) catch { case NonFatal(_) => () }
       // noop sink: forces full materialization of every result column
       // (count() would let Catalyst prune the aggregates themselves).
       // Best of `reps` (default 3): co-tenant noise on the box otherwise
@@ -53,7 +54,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name: $e"); failures += 1; false
           }
         // a query that dies in ~0ms must not report a flattering time
@@ -109,7 +110,7 @@ object Bench {
       val dir = new java.io.File("bench"); dir.mkdirs()
       val w = new java.io.PrintWriter(new java.io.File(dir, "last_run.json"))
       try w.println(detail) finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] detail file write failed: $e") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] detail file write failed: $e") }
     println(detail)
     println(s"""{"queries_file":"bench/last_run.json","reps":$reps,"failures":$failures,"noisy_count":${noisy.size},"sf":"$sfDir","unit":"sec","n_queries":$nOk,"sec_per_query":$secPerQuery,"metric":"total","value":${r3(total)}}""")
   }

@@ -25,7 +25,10 @@ import org.apache.spark.sql.types._
   *
   * Out-of-range indices fail loudly (ArrayIndexOutOfBounds) rather than
   * silently scoring a truncated model — the feature builder and the
-  * weight vector share `dim`, so a mismatch is a caller bug.
+  * weight vector share `dim`, so a mismatch is a caller bug. Arrays
+  * typed `containsNull = true` are accepted (every parquet or JSON round
+  * trip of a feature column produces that type); an actual null element
+  * fails the row loudly instead of scoring as index 0.
   */
 case class WeightSum(child: Expression, weights: Array[Long])
     extends UnaryExpression {
@@ -40,10 +43,9 @@ case class WeightSum(child: Expression, weights: Array[Long])
   // fail-loudly convention documented above, enforced where Catalyst
   // reports it
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, false) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      "WeightSum needs array<int> (containsNull=false) active indices, " +
-        s"got ${other.sql}")
+      s"WeightSum needs array<int> active indices, got ${other.sql}")
   }
 
   override def nullSafeEval(input: Any): Any =
@@ -66,6 +68,8 @@ object WeightSum {
     var i = 0
     val n = js.numElements()
     while (i < n) {
+      if (js.isNullAt(i)) throw new IllegalArgumentException(
+        s"WeightSum: null active index at position $i")
       acc += weights(js.getInt(i))
       i += 1
     }

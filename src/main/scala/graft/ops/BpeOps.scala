@@ -438,48 +438,18 @@ object BpeOps {
     // 0.3 s at sf0.1. Materializing pins the rewrite to the dict-sized
     // relation; it stays distributed (no driver collect), so the
     // operator's Zipf accounting is unchanged.
-    tokenizeTail(pw, applyMerges(d0, merges).lineageBarrier())
+    tokenizeTail(pw, applyMerges(d0, merges).materialize())
 
   /** Post-segmentation tail shared by the merge-replay tokenizers and
     * the greedy [[wordpieceTokenize]]: token ids by binary order over
     * the segmented dictionary's emitted symbols, then the corpus
-    * position join. `segmented` is (word, symbols array). */
-  /** Dictionary-side broadcast gate. `segmented` MUST already be
-    * eagerly checkpointed ([[Checkpoints.BarrierOps.lineageBarrier]],
-    * as every [[tokenizeTail]] caller does): the sizing aggregate below
-    * then reads cached blocks; an un-materialized plan would execute
-    * the full segmentation twice (once to size, once to join) —
-    * enforced here, not just documented, by refusing plans whose leaves
-    * are not barriered RDD scans. Checkpointed inputs carry NO size
-    * statistics — without a hint the dictionary⋈token-stream join
-    * always plans sort-merge, fully sorting the corpus-sized token
-    * stream. The gate is a measured BYTE estimate (framed width per
-    * (word, symbols) row: UTF-16 word chars, ~word-length symbol chars
-    * plus per-element array overhead, row header), not a bare row
-    * count — an explicit hint bypasses autoBroadcastJoinThreshold, so a
-    * dictionary of pathologically long words must not ride a several-
-    * hundred-MB broadcast. Default budget 128 MB (inside the "few
-    * hundred MB is fine" guidance, far under the 8 GB cap), conf
-    * `spark.graft.bpe.dictBroadcastBytes`; past it the planner's
-    * shuffle join stands (the web-scale heavy-tail-vocabulary regime). */
-  private def maybeBroadcastDict(segmented: DataFrame): DataFrame = {
-    require(segmented.queryExecution.analyzed.collectLeaves().forall(
-      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
-      "maybeBroadcastDict needs an eagerly checkpointed dictionary " +
-        "(lineageBarrier() first) — sizing an un-materialized plan " +
-        "would run the segmentation twice")
-    val budget = segmented.sparkSession.conf
-      .getOption("spark.graft.bpe.dictBroadcastBytes")
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    val est = segmented.agg(sum(
-      length(col("word")).cast("long") * 4 +
-        size(col("symbols")).cast("long") * 16 + 64)).collect()(0)
-    if (!est.isNullAt(0) && est.getLong(0) <= budget) broadcast(segmented)
-    else segmented
-  }
-
-  private def tokenizeTail(pw: DataFrame, segmented0: DataFrame): DataFrame = {
-    val segmented = maybeBroadcastDict(segmented0)
+    * position join. `segmented` is (word, symbols array), materialized
+    * by [[Checkpoints.materialize]]: its measured bytes let the planner
+    * broadcast the dictionary into the corpus join while it fits the
+    * session's threshold (a dictionary of pathologically long words is
+    * sized in bytes, so it does not), instead of sort-merging the
+    * corpus-sized token stream. */
+  private def tokenizeTail(pw: DataFrame, segmented: DataFrame): DataFrame = {
     // |vocab| <= alphabet + merges + 1: the one-partition window is fine
     val vocab = broadcast(
       segmented.select(explode(col("symbols")).as("token")).distinct()
@@ -664,20 +634,14 @@ object BpeOps {
           PipelineOps.idBucketCol(col("doc_id"), idBuckets, seed))
       else base0
     val w = Window.partitionBy(shard: _*).orderBy("doc_id")
-    val offsets0 = base
+    val offsets = base
       .join(nTok, Seq("doc_id"))
       .withColumn("start_tok", sum(col("n_tok")).over(w) - col("n_tok"))
       .select((col("doc_id") +: shard :+ col("start_tok")): _*)
-      .lineageBarrier()
-    // doc-sized, barriered (stats-less): broadcast under a measured cap
-    // so the token join keeps its hash build instead of sort-merging
-    // the token relation (rows are id + shard strings + a long; conf
-    // `spark.graft.pipeline.broadcastRows`, 0 disables)
-    val offCap = docs.sparkSession.conf
-      .getOption("spark.graft.pipeline.broadcastRows")
-      .map(_.toLong).getOrElse(2000000L)
-    val offsets =
-      if (offsets0.count() <= offCap) broadcast(offsets0) else offsets0
+      .materialize()
+    // doc-sized and measured: the planner broadcasts it into the token
+    // join while it fits the session's threshold, so the token relation
+    // keeps its hash probe instead of sort-merging
     tok.join(offsets, Seq("doc_id"))
       .withColumn("gpos", col("start_tok") + col("pos") - 1)
       .withColumn("seq_id", expr(s"gpos div ${seqLen}L"))
@@ -1389,7 +1353,7 @@ object BpeOps {
     val segmented = words.as[String].mapPartitions { it =>
       val ps = piecesB.value
       it.map(w => (w, greedySeg(w + endMark, ps, maxCp)))
-    }.toDF("word", "symbols").lineageBarrier()
+    }.toDF("word", "symbols").materialize()
     tokenizeTail(pw, segmented)
   }
 
@@ -1562,11 +1526,10 @@ object BpeOps {
     val maxCp = vocab.iterator
       .map(p => p.codePointCount(0, p.length)).max
     val piecesB = spark.sparkContext.broadcast(pieces)
-    val segmented = maybeBroadcastDict(
-      words.as[String].mapPartitions { it =>
-        val ps = piecesB.value
-        it.map(w => (w, greedySegBert(w, ps, maxCp, maxWordChars, unk)))
-      }.toDF("word", "symbols").lineageBarrier())
+    val segmented = words.as[String].mapPartitions { it =>
+      val ps = piecesB.value
+      it.map(w => (w, greedySegBert(w, ps, maxCp, maxWordChars, unk)))
+    }.toDF("word", "symbols").materialize()
     val vocabDf = broadcast(vocab.zipWithIndex.toDF("token", "__i")
       .select(col("token"), col("__i").cast("long").as("token_id")))
     pw.join(segmented, Seq("word"))

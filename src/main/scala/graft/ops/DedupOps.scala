@@ -180,22 +180,6 @@ object DedupOps {
     spread(df).select(col(idCol).as("doc_id"),
       explode(shingleArray(k, textCol)).as("shingle"))
 
-  /** Measured broadcast gate for the similarity-join internals: the
-    * gated relations are (long id, k-word shingle string, small ints) —
-    * ≲80 B framed per row — so the default 2M-row cap bounds a
-    * broadcast at ~160 MB (inside the "few hundred MB is fine"
-    * guidance). The materialized inputs below are stats-less
-    * LogicalRDDs, so without hints every join degrades to sort-merge
-    * (the r14 finding that killed the naive barrier attempt: 10 BHJs →
-    * SMJ, 4.7 → 8.6 s); the gate re-adds the broadcasts from MEASURED
-    * counts instead of estimates. Conf
-    * `spark.graft.dedup.broadcastRows` parameterises the cap (0
-    * disables hinted broadcasts — the web-scale regime, where the
-    * shuffled shapes stand). */
-  private def dedupBroadcastCap(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.dedup.broadcastRows")
-      .map(_.toLong).getOrElse(2000000L)
-
   /** The (doc_id, tok, __df, rnk, size) relation every AllPairs-style
     * similarity join consumes — shingled, df-ranked and doc-sized —
     * built and MATERIALIZED once per invocation. The un-barriered form
@@ -205,26 +189,26 @@ object DedupOps {
     * df-join is 1:1 (every tok row has a df), `ordered` carries every
     * tok row and can feed verification too, so ONE shingle pass and ONE
     * window pass serve the whole query. Fresh per invocation — nothing
-    * is reused across calls. Returns (ordered, nTok) so callers can
-    * gate their own broadcasts off the measured row count. */
+    * is reused across calls. Both barriers are measured
+    * ([[Checkpoints.materialize]]), so the planner sizes every join
+    * against them from their real bytes. */
   private def orderedShingles(df: DataFrame, k: Int, textCol: String,
-      idCol: String): (DataFrame, Long) = {
+      idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tok = shingles(df, k, textCol, idCol)
       .withColumnRenamed("shingle", "tok")
-      .lineageBarrier()
-    val nTok = tok.count() // cached-blocks job; |dfreq| <= nTok
+      .materialize()
+    // |dfreq| <= |tok|: the measured shingle relation bounds the df
+    // aggregate, which the planner can only estimate
     val dfreq0 = tok.groupBy("tok").agg(count(lit(1)).as("__df"))
-    val dfreq =
-      if (nTok <= dedupBroadcastCap(df)) broadcast(dfreq0) else dfreq0
+    val dfreq = if (fitsBroadcast(tok)) broadcast(dfreq0) else dfreq0
     val wRank = Window.partitionBy("doc_id")
       .orderBy(col("__df").asc, col("tok").asc)
     val wSize = Window.partitionBy("doc_id")
-    val ordered = tok.join(dfreq, Seq("tok"))
+    tok.join(dfreq, Seq("tok"))
       .withColumn("rnk", row_number().over(wRank))
       .withColumn("size", count(lit(1)).over(wSize))
-      .lineageBarrier()
-    (ordered, nTok)
+      .materialize()
   }
 
   /** Per-doc Jaccard near-duplicate stats over k-word shingles: for every
@@ -326,13 +310,13 @@ object DedupOps {
   private[graft] def jaccardJoinInternals(df: DataFrame, tau: Double,
       k: Int, textCol: String, idCol: String): (DataFrame, DataFrame) = {
     require(tau > 0 && tau <= 1, s"tau in (0,1], got $tau")
-    // NOTE (r15): the [[orderedShingles]] materialize+gate restructure
-    // (kept for [[containmentJoinInternals]], where it saves a full
-    // second window pass and measured 1.23×) was tried here and
-    // MEASURED SLOWER (1.7 → 2.2 s at sf0.1): jaccard's verification
-    // sides read the cheap windowless `tok` relation, so the barrier
-    // jobs + stats-less joins cost more than the two saved shingle
-    // passes. Original shape kept.
+    // NOTE (r15): the [[orderedShingles]] barrier restructure (kept for
+    // [[containmentJoinInternals]], where it saves a full second window
+    // pass and measured 1.23×) was tried here with the then row-count
+    // gated barriers and MEASURED SLOWER (1.7 → 2.2 s at sf0.1):
+    // jaccard's verification sides read the cheap windowless `tok`
+    // relation, so the extra barrier and count jobs cost more than the
+    // two saved shingle passes. Original shape kept.
     import org.apache.spark.sql.expressions.Window
     val tok = shingles(df, k, textCol, idCol)
       .withColumnRenamed("shingle", "tok")
@@ -532,8 +516,7 @@ object DedupOps {
   private[graft] def containmentJoinInternals(df: DataFrame, tau: Double,
       k: Int, textCol: String, idCol: String): (DataFrame, DataFrame) = {
     require(tau > 0 && tau <= 1, s"tau in (0,1], got $tau")
-    val (ordered, nTok) = orderedShingles(df, k, textCol, idCol)
-    val cap = dedupBroadcastCap(df)
+    val ordered = orderedShingles(df, k, textCol, idCol)
     val eps = 1e-9
     val prefix = ordered
       .filter(col("rnk") <=
@@ -542,15 +525,14 @@ object DedupOps {
       col("size").as("size_a"))
     val tb = ordered.select(col("doc_id").as("doc_b"), col("tok"),
       col("size").as("size_b"))
-    val cand = (if (nTok <= cap) broadcast(pa) else pa).join(tb, Seq("tok"))
+    val cand = pa.join(tb, Seq("tok"))
       .filter(col("doc_a") =!= col("doc_b"))
       .filter(lit(tau) * col("size_a") - lit(eps) <= col("size_b"))
       .select("doc_a", "doc_b", "size_a", "size_b").distinct()
-      .lineageBarrier()
-    val candB = if (cand.count() <= cap) broadcast(cand) else cand
+      .materialize()
     val ta = ordered.select(col("doc_id").as("doc_a"), col("tok"))
     val tb2 = ordered.select(col("doc_id").as("doc_b"), col("tok"))
-    val inter = candB.join(ta, Seq("doc_a")).join(tb2, Seq("doc_b", "tok"))
+    val inter = cand.join(ta, Seq("doc_a")).join(tb2, Seq("doc_b", "tok"))
       .groupBy("doc_a", "doc_b", "size_a", "size_b")
       .agg(count(lit(1)).as("inter"))
     val cont = col("inter").cast("double") / col("size_a")

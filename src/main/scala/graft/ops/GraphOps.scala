@@ -107,25 +107,6 @@ object GraphOps {
   private final case class FixedIters(iters: Int) extends IterMode
   private final case class Converge(tol: Double, maxIters: Int) extends IterMode
 
-  /** Measured broadcast gate for the NODE-SIZED relations of the
-    * iterative loops (rank/score vectors, per-round contribution sums).
-    * The loops' inputs are lineage-barriered, so the planner sees
-    * stats-less LogicalRDDs and defaults every per-round join to
-    * sort-merge — shuffling AND sorting the EDGE relation once per
-    * round (guide §3.1: size estimates are often wrong after opaque
-    * ops; hint when a side is provably small). The gate is a measured
-    * row count, not an estimate, and the gated rows are FIXED width
-    * (long node id + double score + at most a bool flag — no strings
-    * or arrays), so rows × ~40 B framed bounds the broadcast: the
-    * default 2M-node cap is ≲100 MB, inside the "few hundred MB is
-    * fine" guidance and far under the 8 GB hard cap. Past the cap
-    * (web-scale node counts) the loops keep their shuffled shape —
-    * conf `spark.graft.graph.broadcastNodes` parameterises the bound
-    * (0 disables broadcasting entirely). */
-  private def nodeBroadcastCap(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.graph.broadcastNodes")
-      .map(_.toLong).getOrElse(2000000L)
-
   /** The ONE power-method loop behind [[pageRank]], [[weightedPageRank]]
     * and [[personalizedPageRank]] (fixed or convergence-probed): per
     * round, one-row broadcast dangling aggregate, edge⋈rank contribution
@@ -139,24 +120,21 @@ object GraphOps {
     // front, and carried through every round's rank relation — the
     // per-round dangling mass is then a filter+aggregate over the
     // just-checkpointed ranks instead of a sinks⋈ranks join (two fewer
-    // exchanges per round on stats-less checkpointed inputs; same
-    // multiset of summed ranks, so the aggregate's value class is
-    // unchanged). The flag column never leaves this loop.
+    // exchanges per round; same multiset of summed ranks, so the
+    // aggregate's value class is unchanged). The flag column never
+    // leaves this loop.
     val flag = sinks.select(col("node"), lit(true).as("__sink"))
     val nodesS = nodes.join(flag, Seq("node"), "left")
       .select(nodes.columns.map(col) :+
         coalesce(col("__sink"), lit(false)).as("__sink"): _*)
-      .lineageBarrier(eager = false)
-    // measured broadcast gate ([[nodeBroadcastCap]]): under the cap each
-    // round's edges⋈ranks becomes a broadcast hash join — the EDGE
-    // relation is never shuffled or sorted inside the loop (the join
-    // output is partially aggregated map-side, so only node-sized
-    // partial sums cross the exchange for the groupBy) — and the
-    // node⋈contribs assembly broadcasts the node-sized contribution
-    // sums the same way. The count also materializes the lazy nodesS
-    // barrier once, before the rounds. Same multiset of summed terms
-    // per group either way; callers round for their oracles.
-    val bcastRanks = nodesS.count() <= nodeBroadcastCap(nodesS)
+      .materialize()
+    // the measured nodes bound the ranks (lazy in round 1) and the
+    // contribs (a join output), which the planner cannot size: while
+    // they fit the broadcast threshold both are hinted, so the EDGE
+    // relation is never shuffled or sorted inside the loop (only
+    // node-sized partial sums cross the groupBy exchange). Same
+    // multiset of summed terms per group either way.
+    val bcastRanks = fitsBroadcast(nodesS)
     def round(r: DataFrame): DataFrame = {
       val dangling = broadcast(r.filter(col("__sink"))
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm")))
@@ -425,10 +403,10 @@ object GraphOps {
     *
     * 100 TB shape: same class as [[pageRank]] — scores are one row per
     * node, each half-round is edges⋈scores on one endpoint key plus a
-    * groupBy on the other; under the measured [[nodeBroadcastCap]] the
+    * groupBy on the other; while the measured node relation fits the
+    * session's broadcast threshold ([[Checkpoints.fitsBroadcast]]) the
     * score side broadcasts (edges never shuffle inside the loop), past
-    * it the edge relation is pre-partitioned once per key and each half
-    * is a shuffled-hash join on the co-partitioned copies; the two
+    * it each half is a shuffled join the planner picks; the two
     * normalizers ride ONE-ROW broadcast cross joins (no driver
     * collect); lazy lineage barriers cut the plan per half-round
     * (reliable checkpoints when `spark.graft.checkpointDir` is set).
@@ -440,25 +418,13 @@ object GraphOps {
       .distinct().lineageBarrier(eager = false)
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
-      .lineageBarrier(eager = false)
-    // measured broadcast gate ([[nodeBroadcastCap]]): under the cap the
-    // score relation rides each half-round as a broadcast hash join and
-    // the edge relation is NEVER shuffled or sorted inside the loop
-    // (the stats-less barriered inputs otherwise default every half to
-    // sort-merge — six edge shuffles+sorts for iters=3). The count also
-    // materializes the nodes barrier once, up front.
-    val bcastScores = nodes.count() <= nodeBroadcastCap(nodes)
-    // past the cap: hash-partition the edge relation by EACH join key
-    // ONCE, up front (guide §2.4 — two operations keyed the same way
-    // share one exchange), so the per-half joins reuse the barriered
-    // partitioning instead of re-shuffling edges; the node-sized score
-    // side is hinted to a shuffled-hash build (guide §3.1 — no
-    // per-half sort of the edge relation, and a score-side build
-    // always fits: it is at most nodes/shuffle-partitions rows).
-    val (eSrc, eDst) =
-      if (bcastScores) (e, e)
-      else (e.repartition(col("src")).lineageBarrier(eager = false),
-        e.repartition(col("dst")).lineageBarrier(eager = false))
+      .materialize()
+    // the measured nodes bound every half's scores (a lazy barrier the
+    // planner cannot size): while they fit the broadcast threshold the
+    // scores are hinted and the edges NEVER shuffle inside the loop
+    val bcastScores = fitsBroadcast(nodes)
+    def side(scores: DataFrame): DataFrame =
+      if (bcastScores) broadcast(scores) else scores
     // one half-round: pull raw scores across edges (joinKey → groupKey).
     // The score relation stays SPARSE through the loop (only nodes with
     // nonzero mass) — a zero score contributes exactly nothing to a sum,
@@ -466,11 +432,9 @@ object GraphOps {
     // per-round work (no nodes left-join, no coalesce per half); the
     // dense node set is reinstated once, at the end
     def half(scores: DataFrame, joinKey: String, groupKey: String): DataFrame = {
-      val ek = if (joinKey == "src") eSrc else eDst
-      val sc =
-        if (bcastScores) broadcast(scores) else scores.hint("SHUFFLE_HASH")
-      ek.join(sc, ek(joinKey) === sc("node"))
-        .groupBy(ek(groupKey).as("node")).agg(sum(col("v")).as("v"))
+      val sc = side(scores)
+      e.join(sc, e(joinKey) === sc("node"))
+        .groupBy(e(groupKey).as("node")).agg(sum(col("v")).as("v"))
         .lineageBarrier(eager = false)
     }
     var hub = nodes.select(col("node"), lit(1.0).as("v"))
@@ -481,8 +445,6 @@ object GraphOps {
     }
     val ta = broadcast(auth.agg(sum(col("v")).as("ta")))
     val th = broadcast(hub.agg(sum(col("v")).as("th")))
-    def side(scores: DataFrame): DataFrame =
-      if (bcastScores) broadcast(scores) else scores
     nodes
       .join(side(auth.select(col("node"), col("v").as("a"))), Seq("node"), "left")
       .join(side(hub.select(col("node"), col("v").as("h"))), Seq("node"), "left")
@@ -716,23 +678,19 @@ object GraphOps {
       it += 1
       val deg = cur.select(col("a").as("n")).unionByName(cur.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("d"))
-      // barrier the peel set ONCE per round: it is referenced three
+      // materialize the peel set ONCE per round: it is referenced three
       // times (the convergence probe + both anti-joins), and without a
       // barrier each reference recomputes the full degree aggregate —
       // 3 degree passes per round instead of 1 (guide §2.4: don't
-      // recompute what one exchange already paid for). The count both
-      // probes convergence AND gates a broadcast ([[nodeBroadcastCap]]):
-      // under the cap the anti-joins broadcast the node-sized peel set,
-      // so the edge relation is never shuffled inside the loop.
-      val bad = deg.filter(col("d") < k).select("n").lineageBarrier()
-      val nBad = bad.count()
-      if (nBad == 0) converged = true
+      // recompute what one exchange already paid for). Its measured rows
+      // are the convergence probe (no job of its own); its measured bytes
+      // let the planner broadcast it into both anti-joins.
+      val bad = deg.filter(col("d") < k).select("n").materialize()
+      if (Checkpoints.rowCount(bad) == 0) converged = true
       else {
-        val badB =
-          if (nBad <= nodeBroadcastCap(bad)) broadcast(bad) else bad
         cur = cur
-          .join(badB.select(col("n").as("a")), Seq("a"), "left_anti")
-          .join(badB.select(col("n").as("b")), Seq("b"), "left_anti")
+          .join(bad.select(col("n").as("a")), Seq("a"), "left_anti")
+          .join(bad.select(col("n").as("b")), Seq("b"), "left_anti")
           .select("a", "b")
           .lineageBarrier()
       }
@@ -853,23 +811,18 @@ object GraphOps {
     val sym = e0.select(col("a").as("n"), col("b").as("m"))
       .unionByName(e0.select(col("b").as("n"), col("a").as("m")))
       .lineageBarrier(eager = false)
+    // measured every round, the node-sized label relation broadcasts
+    // into sym⋈lab while it fits the threshold: no edge shuffle
     var lab = sym.select(col("n")).distinct()
-      .withColumn("lbl", col("n")).lineageBarrier()
-    // measured broadcast gate ([[nodeBroadcastCap]]): the label relation
-    // is one (long, long) row per node; under the cap each round's
-    // sym⋈lab rides a broadcast hash join and the symmetrized edge
-    // relation never shuffles inside the loop
-    val bcastLab = lab.count() <= nodeBroadcastCap(lab)
+      .withColumn("lbl", col("n")).materialize()
     for (_ <- 1 to iters) {
-      val labSide = lab.select(col("n").as("m"), col("lbl"))
-      val counts = sym.join(
-          if (bcastLab) broadcast(labSide) else labSide, Seq("m"))
+      val counts = sym.join(lab.select(col("n").as("m"), col("lbl")), Seq("m"))
         .groupBy("n", "lbl").agg(count(lit(1)).as("c"))
       // argmax by (count desc, label asc) as a struct-max hash aggregate
       lab = counts.groupBy("n")
         .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("best"))
         .select(col("n"), (-col("best").getField("neg")).as("lbl"))
-        .lineageBarrier()
+        .materialize()
     }
     lab.select(col("n").as("node"), col("lbl").as("label"))
   }
@@ -893,8 +846,7 @@ object GraphOps {
       .unionByName(e0.select(col("b").as("n"), col("a").as("m")))
       .lineageBarrier(eager = false)
     var lab = sym.select(col("n")).distinct()
-      .withColumn("lbl", col("n")).lineageBarrier()
-    val bcastLab = lab.count() <= nodeBroadcastCap(lab)
+      .withColumn("lbl", col("n")).materialize()
     var changed = Long.MaxValue
     var i = 0
     while (changed > 0) {
@@ -903,14 +855,12 @@ object GraphOps {
           s"rounds ($changed labels still changing) — synchronous LPA " +
           "oscillates on bipartite-like structure; use the fixed-round " +
           "labelPropagation for a deterministic cut, or raise maxIters")
-      val labSide = lab.select(col("n").as("m"), col("lbl"))
-      val counts = sym.join(
-          if (bcastLab) broadcast(labSide) else labSide, Seq("m"))
+      val counts = sym.join(lab.select(col("n").as("m"), col("lbl")), Seq("m"))
         .groupBy("n", "lbl").agg(count(lit(1)).as("c"))
       val next = counts.groupBy("n")
         .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("best"))
         .select(col("n"), (-col("best").getField("neg")).as("lbl"))
-        .lineageBarrier()
+        .materialize()
       changed = next
         .join(lab.select(col("n"), col("lbl").as("prev")), Seq("n"))
         .filter(col("lbl") =!= col("prev")).count()
@@ -1046,16 +996,12 @@ object GraphOps {
         col("node"))
       .select((col("node") * walksPerStart + col("w")).as("walk_id"),
         col("node"))
-      .lineageBarrier()
-    // measured broadcast gate ([[nodeBroadcastCap]]): live-walk count
-    // only ever shrinks (sinks truncate), so the INITIAL frontier count
-    // — already materialized by the eager barrier above — bounds every
-    // hop's frontier. Under the cap each hop joins as frontier-built
-    // broadcast hash joins, so the degree and adjacency relations are
-    // never shuffled or sorted inside the loop (stats-less barriers
-    // otherwise default the hops to sort-merge over the edge-sized
-    // adjacency).
-    val bcastWalks = frontier.count() <= nodeBroadcastCap(frontier)
+      .materialize()
+    // live walks only ever shrink (sinks truncate), so the measured
+    // INITIAL frontier bounds every hop's lazy frontier: while it fits
+    // the broadcast threshold the hops are frontier-built broadcast
+    // joins and the adjacency is never shuffled inside the loop
+    val bcastWalks = fitsBroadcast(frontier)
     def side(f: DataFrame): DataFrame = if (bcastWalks) broadcast(f) else f
     val out = scala.collection.mutable.ArrayBuffer[DataFrame](
       frontier.select(col("walk_id"), lit(0L).as("step"), col("node")))
@@ -1068,7 +1014,7 @@ object GraphOps {
       // cache — `steps` hops run as ONE job instead of `steps` eager
       // jobs (measured ~0.7 s/job of scheduling constant at sf0.1;
       // broadcast builds are sub-jobs of the same action and read the
-      // cached prior frontier, so the property survives the gate).
+      // cached prior frontier, so the property survives the hints).
       // Convergence LOOPS (components, kCore, pageRank's multi-branch
       // rounds) keep the eager form — their recompute trees grow.
       frontier = side(side(frontier)

@@ -16,17 +16,6 @@ import graft.ops.Checkpoints._
   */
 object PipelineOps {
 
-  /** Measured broadcast gate for the packing pipelines' doc-sized
-    * offset relations (fixed-width rows: id, shard strings, two longs —
-    * ≲120 B framed, so the default 2M-row cap bounds a broadcast at
-    * ~250 MB). The gated inputs are barriered (stats-less), so without
-    * the hint the planner sort-merges the token relation against them.
-    * Conf `spark.graft.pipeline.broadcastRows` (0 disables — the
-    * web-scale regime keeps the shuffled shape). */
-  private def pipelineBroadcastCap(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.pipeline.broadcastRows")
-      .map(_.toLong).getOrElse(2000000L)
-
   // ---- sequence packing --------------------------------------------------
   /** The auto-appended hash-bucket column [[packSequences]],
     * [[packTokenIds]], and [[graft.ops.BpeOps.tokenizeAndPack]] add to
@@ -161,21 +150,18 @@ object PipelineOps {
       else base0
     val w = Window.partitionBy(shard: _*).orderBy("doc_id")
     // the offset relation is docs-sized (one row per doc) and consumed
-    // twice (slot join + separator slots); barrier it, and broadcast
-    // the slot-join side under the measured cap — the barrier is
-    // stats-less, so the join would otherwise fall back to sort-merge
-    // over the token relation
+    // twice (slot join + separator slots); materialize it with measured
+    // bytes, so the planner broadcasts it into the slot join while it
+    // fits the session's threshold instead of sort-merging the token
+    // relation against it
     val off = base.join(nTok, Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_tok"))
       .withColumn("start_slot",
         sum(col("n_tok") + 1L).over(w) - (col("n_tok") + 1L))
-      .lineageBarrier()
-    val offJoin = off.select(col("doc_id") +: shard :+ col("start_slot"): _*)
-    val offB =
-      if (off.count() <= pipelineBroadcastCap(off)) broadcast(offJoin)
-      else offJoin
+      .materialize()
     val tokSlots = tokP
-      .join(offB, Seq("doc_id"))
+      .join(off.select(col("doc_id") +: shard :+ col("start_slot"): _*),
+        Seq("doc_id"))
       .select(shard :+ col("doc_id") :+
         (col("start_slot") + col("pos") - 1L).as("gpos") :+
         col("token_id"): _*)

@@ -345,6 +345,27 @@ class BpeSpec extends AnyFunSuite {
     assert(toks == expected)
   }
 
+  test("tokenizeAndPack and wordpieceTokenizeBert: shuffled joins " +
+      "(threshold -1) match the default shapes") {
+    import ShuffledShapes._
+    val docs = Seq(
+      (0L, "low lower newest widest low newest", "en", "web"),
+      (1L, "newest low lowest wide wider", "en", "web"),
+      (2L, "wide wider widest low low", "de", "web"))
+      .toDF("doc_id", "text", "lang", "source")
+    val merges = BpeOps.train(docs, 6)
+    val (pb, ps) = defaultAndShuffled(spark) {
+      rows(BpeOps.tokenizeAndPack(docs, merges, seqLen = 5L, idBuckets = 2))
+    }
+    assert(pb.nonEmpty && ps == pb, "tokenizeAndPack shapes disagree")
+    val vocab = Seq("[UNK]", "l", "o", "w", "##o", "##w", "##e", "##r",
+      "lo", "##we")
+    val (wb, ws) = defaultAndShuffled(spark) {
+      rows(BpeOps.wordpieceTokenizeBert(docs, vocab))
+    }
+    assert(wb.nonEmpty && ws == wb, "wordpieceTokenizeBert shapes disagree")
+  }
+
   test("tokenizeAndPack: exact chop — interior seqs full, stream preserved") {
     // multi-shard corpus: two (lang, source) shards with several docs
     val docs = Seq(

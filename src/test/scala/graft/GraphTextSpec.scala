@@ -580,32 +580,45 @@ class GraphTextSpec extends AnyFunSuite {
     } finally spark.conf.unset(graft.ops.Checkpoints.DirConf)
   }
 
-  test("node-broadcast gate: shuffled fallback matches the broadcast path") {
-    // spark.graft.graph.broadcastNodes=0 forces the past-the-cap shape
-    // (pre-partitioned edges + shuffled-hash / sort-merge rounds); the
-    // values must match the default broadcast path at oracle rounding —
-    // the two branches sum the same multisets, only join strategy moves
+  test("graph loops: shuffled joins (threshold -1) match the default shapes") {
+    // autoBroadcastJoinThreshold=-1 turns every size-picked and
+    // fitsBroadcast-hinted join into a shuffled one; the values must
+    // match the default (broadcast) shapes — the two sum the same
+    // multisets, only the join strategy moves
+    import ShuffledShapes._
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 1L),
       (2L, 4L)).toDF("src", "dst")
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L),
+      (5L, 6L), (6L, 4L), (6L, 7L)).toDF("a", "b")
     def r9(m: Map[Long, Double]): Map[Long, Double] =
       m.map { case (k, v) => k -> math.rint(v * 1e9) / 1e9 }
-    val prB = GraphOps.pageRank(edges, iters = 4)
-      .as[(Long, Double)].collect().toMap
-    val hitsB = GraphOps.hits(edges, iters = 3)
-      .as[(Long, Double, Double)].collect().map(t => t._1 -> (t._2, t._3)).toMap
-    spark.conf.set("spark.graft.graph.broadcastNodes", "0")
-    try {
-      val prS = GraphOps.pageRank(edges, iters = 4)
-        .as[(Long, Double)].collect().toMap
-      val hitsS = GraphOps.hits(edges, iters = 3)
-        .as[(Long, Double, Double)].collect().map(t => t._1 -> (t._2, t._3)).toMap
-      assert(r9(prS) == r9(prB), "pageRank branches disagree")
-      assert(hitsS.keySet == hitsB.keySet)
-      for (k <- hitsB.keySet) {
-        assert(math.abs(hitsS(k)._1 - hitsB(k)._1) < 1e-9, s"auth node $k")
-        assert(math.abs(hitsS(k)._2 - hitsB(k)._2) < 1e-9, s"hub node $k")
-      }
-    } finally spark.conf.unset("spark.graft.graph.broadcastNodes")
+    val (prB, prS) = defaultAndShuffled(spark) {
+      GraphOps.pageRank(edges, iters = 4).as[(Long, Double)].collect().toMap
+    }
+    assert(r9(prS) == r9(prB), "pageRank shapes disagree")
+    val (hitsB, hitsS) = defaultAndShuffled(spark) {
+      GraphOps.hits(edges, iters = 3).as[(Long, Double, Double)].collect()
+        .map(t => t._1 -> (t._2, t._3)).toMap
+    }
+    assert(hitsS.keySet == hitsB.keySet)
+    for (k <- hitsB.keySet) {
+      assert(math.abs(hitsS(k)._1 - hitsB(k)._1) < 1e-9, s"auth node $k")
+      assert(math.abs(hitsS(k)._2 - hitsB(k)._2) < 1e-9, s"hub node $k")
+    }
+    val (lpB, lpS) = defaultAndShuffled(spark) {
+      rows(GraphOps.labelPropagation(und, iters = 3))
+    }
+    assert(lpS == lpB, "labelPropagation shapes disagree")
+    val (kcB, kcS) = defaultAndShuffled(spark) {
+      rows(GraphOps.kCore(und, k = 2))
+    }
+    assert(kcB.nonEmpty && kcS == kcB, "kCore shapes disagree")
+    val starts = Seq(1L, 2L, 4L).toDF("node")
+    val (rwB, rwS) = defaultAndShuffled(spark) {
+      rows(GraphOps.randomWalks(edges, starts, walksPerStart = 2,
+        steps = 3, seed = 7L))
+    }
+    assert(rwS == rwB, "randomWalks shapes disagree")
   }
 
   test("weightedPageRank: uniform weights == pageRank; heavy edge pulls rank") {

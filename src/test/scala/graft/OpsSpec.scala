@@ -674,6 +674,20 @@ class OpsSpec extends AnyFunSuite {
     assert(DedupOps.jaccardJoin(docs, 0.6).collect().isEmpty)
   }
 
+  test("containmentJoin: shuffled joins (threshold -1) match the default shapes") {
+    import spark.implicits._
+    val aToks = (1 to 40).map(i => s"q$i")
+    val filler = (1 to 60).map(d => (d.toLong,
+      (0 until 20).map(i => s"w${(d * 7 + i * i) % 53}").mkString(" ")))
+    val docs = (filler ++ Seq((9201L, aToks.mkString(" ")),
+      (9202L, aToks.take(12).mkString(" ")))).toDF("doc_id", "text")
+    val (b, s) = ShuffledShapes.defaultAndShuffled(spark) {
+      ShuffledShapes.rows(DedupOps.containmentJoin(docs, 0.8))
+    }
+    assert(b.exists(_.startsWith("[9202,9201,")), "planted quote pair missing")
+    assert(s == b, "containmentJoin shapes disagree")
+  }
+
   test("containmentJoin: asymmetric quote pair, boundary kept, lossless vs unpruned") {
     import spark.implicits._
     // B = verbatim 10-word quote from A (100 distinct words): all 8 of

@@ -210,6 +210,18 @@ class PipelineOpsSpec extends AnyFunSuite {
       ("25 99", "99 -100")))
   }
 
+  test("packTokenIds with labels: shuffled joins (threshold -1) match the default") {
+    val docs = (0L until 12L).map(i => ("en", if (i % 3 == 0) "a" else "b", i, ""))
+      .toDF("lang", "source", "doc_id", "text")
+    val tok = (for (d <- 0L until 12L; p <- 1L to d % 5) yield (d, p, 10 * d + p))
+      .toDF("doc_id", "pos", "token_id")
+    val (b, s) = ShuffledShapes.defaultAndShuffled(spark) {
+      ShuffledShapes.rows(PipelineOps.packTokenIds(docs, tok, budget = 4L,
+        sepId = 99L, idBuckets = 2, withLabels = true))
+    }
+    assert(b.nonEmpty && s == b, "packTokenIds shapes disagree")
+  }
+
   test("mlmMask: deterministic seeded 15% / 80-10-10 policy") {
     // 2000 docs x 50 tokens — big enough that the branch shares are
     // tight; token ids cycle over a 50-id vocabulary

@@ -70,6 +70,31 @@ class TrainOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("WeightSum scores features read back from parquet; null index fails") {
+    val docs = Seq((1L, "a b c"), (2L, "z"), (3L, "a z q w")).toDF("doc_id", "text")
+    val wq = Array(5L, -3L, 7L, 11L, 0L, -20L, 2L, 1L, 1000L)
+    val dir = java.nio.file.Files.createTempDirectory("graft-feats").toString
+    TrainOps.docFeatures(docs, 8).write.mode("overwrite").parquet(s"$dir/f")
+    val stored = spark.read.parquet(s"$dir/f")
+    assert(stored.schema("js").dataType ==
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.IntegerType, containsNull = true))
+    val got = stored.select(col("doc_id"), TrainOps.marginCol(wq).as("z"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val expected = TrainOps.docFeatures(docs, 8)
+      .select(col("doc_id"), TrainOps.marginCol(wq).as("z"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == expected)
+    // an actual null element is a caller bug: fail, never read index 0
+    val withNull = Seq((1L, Seq[Integer](1, null, 8))).toDF("doc_id", "js")
+    val e = intercept[Exception] {
+      withNull.select(TrainOps.marginCol(wq)).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("null active index"))),
+      s"expected the null-index failure, got $e")
+  }
+
   test("separable corpus: training converges to perfect accuracy") {
     val docs = separable(400)
     val wq = TrainOps.trainLr(docs, col("y"), dim = 64, rounds = 12,
