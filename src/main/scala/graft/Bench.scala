@@ -1,22 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
+import graft.ops.Checkpoints
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  def main(args: Array[String]): Unit = Cli.main("bench" +: args)
+
+  /** `graft.Cli bench [query,...]`: every registered query at
+    * `SPARK_GRAFT_SF_DIR`, best of `SPARK_GRAFT_BENCH_REPS` reps. */
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val sfDir = Cli.sfDir("0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
-    // session defaults (incl. the AQE cached-plan conf) come from
-    // GraftSession so the measured config is the shipped config — the
-    // same defaults apply in Verify/Smoke/Examples and any consumer
-    val spark = GraftSession.defaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // absorb session/first-job overhead outside any query's measurement,
     // and fix the query order so per-round numbers are comparable
     spark.range(1000000L).selectExpr("sum(id)").write
@@ -30,46 +24,35 @@ object Bench {
     val perIter = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => only.forall(_.contains(kv._1))).map { case (name, fn) =>
-      // Staging pass (untimed, MEASUREMENT FIX r15): constructing the
-      // DataFrame once up front runs every EAGER fixture-staging step a
-      // query performs during plan construction — WARC/media fixture
-      // writes, format mirrors, bm25/minhash/pq index builds, and the
-      // shared trained-LR weights memo. Before this fix rep 1 paid the
-      // staging and reps 2-3 read the memo, so rep 1 was the only
-      // honest rep for staged queries and min-of-reps reported the
-      // staging-free time for ALL of them; now every rep (including
-      // rep 1) measures the query itself, uniformly. No result of the
-      // measured computation is reused across reps: the DataFrame built
-      // here is discarded unexecuted, and queries without eager staging
-      // are unaffected. Staging errors are ignored here so they surface
-      // (and are counted) in the timed loop below.
-      try fn(spark, sfDir) catch { case NonFatal(_) => () }
-      // noop sink: forces full materialization of every result column
-      // (count() would let Catalyst prune the aggregates themselves).
-      // Best of `reps` (default 3): co-tenant noise on the box otherwise
-      // dominates (same query measured 0.7 s and 23 s minutes apart).
-      // Per-iteration times are emitted so a noise-dominated artifact is
-      // detectable after the fact, not just suspected.
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case NonFatal(e) =>
-            System.err.println(s"[bench] $name: $e"); failures += 1; false
-          }
-        // a query that dies in ~0ms must not report a flattering time
-        if (ok) (System.nanoTime() - t0) / 1e9 else Double.MaxValue
+      // the query's persisted and checkpointed RDDs are released after
+      // its reps, so its blocks do not pressure the queries after it
+      Checkpoints.released(spark) {
+        // Staging pass (untimed): building the DataFrame once runs every
+        // eager fixture-staging step of the query (fixture writes, format
+        // mirrors, index builds, memoized weights), so every timed rep,
+        // rep 1 included, measures the query itself. The DataFrame is
+        // discarded unexecuted; staging errors surface in the timed loop.
+        try fn(spark, sfDir) catch { case NonFatal(_) => () }
+        // noop sink: materializes every result column (count() would let
+        // Catalyst prune the aggregates). Best of `reps`; every rep is
+        // reported, so a noise-dominated run shows in the artifact.
+        val times = (1 to reps).map { _ =>
+          val t0 = System.nanoTime()
+          val ok =
+            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+            catch { case NonFatal(e) =>
+              System.err.println(s"[bench] $name: $e"); failures += 1; false
+            }
+          // a query that dies in ~0ms must not report a flattering time
+          if (ok) (System.nanoTime() - t0) / 1e9 else Double.MaxValue
+        }
+        perIter(name) = times.map(t => if (t == Double.MaxValue) -1.0 else r3(t))
+        name -> (if (times.min == Double.MaxValue) -1.0 else times.min)
       }
-      perIter(name) = times.map(t => if (t == Double.MaxValue) -1.0 else r3(t))
-      name -> (if (times.min == Double.MaxValue) -1.0 else times.min)
     }
-    // noise audit: queries whose slowest WARM rep exceeds 3x the fastest
-    // are flagged. The first rep is excluded when 3+ reps ran — it
-    // carries this query's cold codegen (a 3-5x constant for the
-    // HOF-heavy queries every single run), while co-tenant load hits warm
-    // reps too; flagging cold-start would cry wolf on a quiet box and
-    // bury a real noise signal (BENCH_r03 post-mortem: recorded 112 s vs
-    // 44 s clean for identical code).
+    // noise audit: flag queries whose slowest WARM rep exceeds 3x the
+    // fastest. With 3+ reps the first is excluded: it carries the query's
+    // cold codegen (a 3-5x constant), which is not noise.
     val noisy = perIter.collect {
       case (n, ts) if ts.forall(_ > 0) && {
         val warm = if (ts.size >= 3) ts.drop(1) else ts
@@ -90,21 +73,10 @@ object Bench {
     val total = if (results.nonEmpty) results.map(_._2).filter(_ >= 0).sum else 0.0
     val nOk = results.count(_._2 >= 0)
     val secPerQuery = if (nOk > 0) r3(total / nOk) else -1.0
-    spark.stop()
-    // Output contract (MEASUREMENT FIX, r15): rounds 1-14 emitted one
-    // giant JSON line with the full per-query AND per-iteration maps
-    // inline; at 301 queries that line is ~30 KB, the driver's tail
-    // capture (2000 chars) starts mid-line, and the driver parsed
-    // NOTHING in any round (BENCH_r*.json `parsed: null` for all 14).
-    // Now: the full detail (same keys as before — `queries`,
-    // `iterations`, `noisy`, plus the headline totals so the detail
-    // line alone is also a complete record) is printed FIRST and
-    // mirrored to bench/last_run.json; the FINAL stdout line is a
-    // compact summary (~250 chars) that fits whole inside any tail
-    // window, with `metric`/`value` last as before. Timing loop, noop
-    // sink, rep policy, query ordering and the env-var contract are
-    // unchanged; no query entry was removed — every per-query number
-    // still appears on the detail line and in the file.
+    // Output contract: the full detail line (per-query minima, every
+    // rep, noise flags, totals) goes to stdout and bench/last_run.json;
+    // the LAST stdout line is a compact summary (~250 chars, `metric` and
+    // `value` last) that fits whole in a 2000-char tail capture.
     val detail = s"""{"queries":$qs,"iterations":$iters,"noisy":$noisyJson,"reps":$reps,"failures":$failures,"sf":"$sfDir","unit":"sec","n_queries":$nOk,"sec_per_query":$secPerQuery,"metric":"total","value":${r3(total)}}"""
     try {
       val dir = new java.io.File("bench"); dir.mkdirs()

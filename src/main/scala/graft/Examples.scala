@@ -1,367 +1,104 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.hist._
 
-/** The reference's largest documented workload, reproduced: 10^8 rows ×
-  * 2 dims into a 10×10 histogram (dask-histogram docs/examples.rst:158-175
-  * runs it as 10 chunks of 10^7 on a threaded scheduler; no timing is
-  * published). Data is generated in-executor (spark.range + deterministic
-  * uniform transform), so this measures pure fill+reduce throughput —
-  * scan-free, the engine's steady-state core.
+/** Scale soaks and exhibits, run as `graft.Cli soak <name> [sizes]
+  * [args]`: each generates its corpus in-executor, runs one operator
+  * family at volume, checks the family's scale claim (linear candidate
+  * volume, flat state, exact results) and prints one JSON line. SCALE.md
+  * cites their output. Most rows take a comma list of sizes and run once
+  * per size; the rest read their own parameters from `sizes` and `args`.
   */
 object Examples {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.defaults(SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (args.headOption.contains("soak")) {
-      // dedup-pipeline scale soak: `runMain graft.Examples soak 1000000` or
-      // a comma list of doc counts. Evidence that candidate volume scales
-      // linearly with corpus size in practice (SCALE.md accounting), not
-      // just in expectation.
-      args.lift(1).getOrElse("1000000").split(",").map(_.trim.toLong)
-        .foreach(n => dedupSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-passage")) {
-      // repeated-passage rewrite soak: `runMain graft.Examples
-      // soak-passage 100000,1000000` — linear occurrence volume + stable
-      // docs/s under a planted 25% repeated-passage rate
-      args.lift(1).getOrElse("100000,1000000").split(",").map(_.trim.toLong)
-        .foreach(n => passageSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-mix")) {
-      // skewed-corpus token-budget-mix soak: one giant (95%) domain —
-      // per-bucket work must stay flat (the two-phase bucketed prefix
-      // sum), not concentrate in a per-domain window
-      args.lift(1).getOrElse("1000000,4000000").split(",").map(_.trim.toLong)
-        .foreach(n => mixSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-ann")) {
-      // embedding-search soak: `runMain graft.Examples soak-ann
-      // 100000,1000000` — IVF/LSH candidate volumes and throughput on
-      // synthetic 64-dim corpora
-      args.lift(1).getOrElse("100000,1000000").split(",").map(_.trim.toLong)
-        .foreach(n => annSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-tokenize")) {
-      // tokenizer-apply soak: `runMain graft.Examples soak-tokenize
-      // 100000,1000000` — docs/s and tokens/s with a frozen merge list;
-      // the Zipf evidence is distinct_words staying pool-bounded while
-      // token volume grows linearly
-      args.lift(1).getOrElse("100000,1000000").split(",").map(_.trim.toLong)
-        .foreach(n => tokenizeSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-funnel")) {
-      // streaming-funnel state soak: `runMain graft.Examples soak-funnel
-      // 200000,2000000` — total users grow 10× while the ACTIVE set is
-      // held fixed; the eviction bound says post-retention state rows
-      // track actives, not users-ever-seen
-      args.lift(1).getOrElse("200000,2000000").split(",").map(_.trim.toInt)
-        .foreach(n => funnelSoak(spark, n,
-          args.lift(2).map(_.toInt).getOrElse(20000)))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-attrib")) {
-      // attribution-credit soak: `runMain graft.Examples soak-attrib
-      // 100000,1000000` — one planted bot user carries 50k impressions
-      // before a single purchase; the lookback cap must bound the bot
-      // conversion's credited touches at exactly maxTouches while
-      // normal-user credit is unaffected
-      args.lift(1).getOrElse("100000,1000000").split(",").map(_.trim.toLong)
-        .foreach(n => attribSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-maintain")) {
-      // materialized-view maintenance soak: `runMain graft.Examples
-      // soak-maintain 1000000,4000000` — corpus grows 4× while the CDC
-      // churn stays fixed; maintain cost must track CHURN (flat), the
-      // full recompute tracks the corpus, and the two views must agree
-      args.lift(1).getOrElse("1000000,4000000").split(",").map(_.trim.toLong)
-        .foreach(n => maintainSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-simjoin")) {
-      // exact-similarity-join soak: `runMain graft.Examples soak-simjoin
-      // 100000,1000000` — planted near-dups (every 4th doc); candidate
-      // volume must stay ~linear in docs (the prefix filter's whole
-      // point), recall of planted pairs exactly n/4
-      args.lift(1).getOrElse("100000,1000000").split(",").map(_.trim.toLong)
-        .foreach(n => simjoinSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-cosjoin")) {
-      // binary-cosine-join soak: `runMain graft.Examples soak-cosjoin
-      // 100000,1000000` — same planted corpus as soak-simjoin; the
-      // tau²-scaled prefixes must keep candidates ~linear in docs and
-      // recall of planted pairs exactly n/4
-      args.lift(1).getOrElse("100000,1000000").split(",").map(_.trim.toLong)
-        .foreach(n => cosjoinSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-triangles")) {
-      // triangle-count soak: `runMain graft.Examples soak-triangles
-      // 100000,1000000` — a planted hub (degree n/20) must NOT appear as
-      // a wedge apex: oriented out-degree stays near sqrt(m) while the
-      // raw hub degree grows linearly
-      args.lift(1).getOrElse("100000,1000000").split(",").map(_.trim.toLong)
-        .foreach(n => triangleSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-knn")) {
-      // knn-graph soak: `runMain graft.Examples soak-knn 100000,1000000`
-      // — cells scale with n (fixed ~1000-vector occupancy), so
-      // candidates/node must stay FLAT across 10× corpus growth: the
-      // claim that the cell equi-join, not an n² pair relation, is what
-      // shuffles
-      args.lift(1).getOrElse("100000,1000000").split(",").map(_.trim.toLong)
-        .foreach(n => knnSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-walks")) {
-      // random-walk soak: `runMain graft.Examples soak-walks
-      // 100000,1000000` — per-hop frontier rows must equal live walks
-      // (linear), and a planted celebrity node (30% of all in-edges)
-      // must spread its probes across (src, idx) slots instead of
-      // concentrating on one join key
-      args.lift(1).getOrElse("100000,1000000").split(",").map(_.trim.toLong)
-        .foreach(n => walksSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-cooc")) {
-      // co-occurrence soak: `runMain graft.Examples soak-cooc
-      // 100000,1000000` — pair volume exactly Σ_d (len−d) per doc
-      // (linear, no self-join term), throughput in pairs/s
-      args.lift(1).getOrElse("100000,1000000").split(",").map(_.trim.toLong)
-        .foreach(n => coocSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-quantile")) {
-      // exact-percentile-vs-rewrite soak: `runMain graft.Examples
-      // soak-quantile 10000000,40000000` — a high-cardinality metric
-      // column (every value distinct) is exact Percentile's worst case:
-      // its buffer IS the per-group value multiset, so exact time grows
-      // superlinearly while the k-triple rewrite stays scan-bound
-      args.lift(1).getOrElse("10000000,40000000").split(",").map(_.trim.toLong)
-        .foreach(n => quantileSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-ksweep")) {
-      // quantile-sketch ERROR ENVELOPE: `runMain graft.Examples
-      // soak-ksweep 10000000,12` — observed rank-error quantiles of the
-      // percentile rewrite vs exact ranks, k ∈ {64..4096}, `trials`
-      // independent all-distinct value sets per k. The k→ε table the
-      // bottom-k design owes (its error is sampling-probabilistic, not
-      // a deterministic schedule — this measures the envelope).
-      val a = args.lift(1).getOrElse("10000000,12").split(",").map(_.trim)
-      ksweepSoak(spark, a(0).toLong, a(1).toInt)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-train")) {
-      // classifier-training soak: `runMain graft.Examples soak-train
-      // 200000,1000000` — per-round gradient cost must scale linearly
-      // with the corpus (one map-side-combined aggregate per round) and
-      // the separable corpus must still train to 100% at every size
-      val sizes = args.lift(1).getOrElse("200000,1000000")
-        .split(",").map(_.trim.toInt)
-      sizes.foreach(n => trainSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-cusum")) {
-      // streaming-monitor shuffle soak: `runMain graft.Examples
-      // soak-cusum 10000000` — n raw events over (100 series × 30
-      // days) through the folded preReduce; the series-key exchange
-      // must carry per-(partition, series, day) partials, so shuffled
-      // records stay ~1e4 whatever n is, and the emitted day sums must
-      // equal the exact per-(series, day) event counts
-      val n = args.lift(1).getOrElse("10000000").trim.toLong
-      cusumShuffleSoak(spark, n)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-tokenize-bert")) {
-      // BERT-apply soak: `runMain graft.Examples soak-tokenize-bert
-      // 1000000` — greedy continuation-prefix inference throughput on
-      // the tokenizer-apply soak corpus (full-coverage vocab, cold
-      // [UNK] path); docs/s must hold the merge-replay soak's order
-      args.lift(1).getOrElse("1000000").split(",").map(_.trim.toLong)
-        .foreach(n => bertTokenizeSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-drift")) {
-      // drift-monitor shuffle soak: `runMain graft.Examples soak-drift
-      // 10000000,20000000` — n binned events over (1000 series × 20
-      // days × 32 bins) through DriftStream's folded preReduce; the
-      // series-key exchange must carry per-(partition, series, day,
-      // bin) partials, so shuffled records stay ~cell-bounded (FLAT
-      // across n — the saturation evidence), and the emitted day
-      // totals must equal the exact per-(series, day) event counts
-      args.lift(1).getOrElse("10000000,20000000").split(",")
-        .map(_.trim.toLong).foreach(n => driftShuffleSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-pack")) {
-      // hot-shard packing soak: `runMain graft.Examples soak-pack
-      // 4000000` — 95%-one-(lang,source) corpus through packTokenIds;
-      // the enforced id_bucket contract must bound the largest window
-      // cell at ~hot/64 while slot totals stay bucket-invariant
-      args.lift(1).getOrElse("4000000").split(",").map(_.trim.toLong)
-        .foreach(n => packSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-pretrain")) {
-      // round-14 pretraining-objective soak: `runMain graft.Examples
-      // soak-pretrain 5000000` — MLM/span-corruption share exactness +
-      // throughput and the permutation sampler's cyclic property at
-      // scale, with buckets scaled to corpus/target_cell
-      args.lift(1).getOrElse("5000000").split(",").map(_.trim.toLong)
-        .foreach(n => pretrainSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("wordpiece-chained-probe")) {
-      // chained-trainer SCALE probe: `runMain graft.Examples
-      // wordpiece-chained-probe 4096,64,1000000,50000` — production-
-      // vocab-scale measurement of the round reduction and the
-      // WpChainNbrCap overflow frequency on a Zipfian ≥1e6-doc corpus
-      // (the r12 verdict's open scale-behavior unknown)
-      val a = args.lift(1).getOrElse("4096,64,1000000,50000")
-        .split(",").map(_.trim)
-      wordpieceChainedProbe(spark, a(0).toInt, a(1).toInt, a(2).toLong,
-        a(3).toInt)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-train-sampled")) {
-      // SAMPLED-round training soak: `runMain graft.Examples
-      // soak-train-sampled 2000000` — fixed corpus, sampleMilli sweep
-      // {1000, 500, 250, 125}; per-round gradient cost must scale with
-      // the SAMPLE (the 100 TB lever: rounds stop paying a full corpus
-      // pass) while the separable corpus still trains to 100%
-      val n = args.lift(1).getOrElse("2000000").trim.toInt
-      Seq(1000, 500, 250, 125).foreach(s => trainSampledSoak(spark, n, s))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-gridrank")) {
-      // grid-window soak: `runMain graft.Examples soak-gridrank
-      // 10000000,40000000` — gini + quantileNormalize on ALL-DISTINCT
-      // value domains (the single-partition-window straggler shape the
-      // grid forms remove); at the first size the global-window
-      // reference runs too and results are asserted identical
-      val sizes = args.lift(1).getOrElse("10000000,40000000")
-        .split(",").map(_.trim.toLong)
-      sizes.zipWithIndex.foreach { case (n, i) =>
+  /** `graft.Cli soak <name> [sizes] [args]` runs `run(spark, sizes, args)`. */
+  final case class Soak(name: String, sizes: String,
+      run: (SparkSession, String, Seq[String]) => Unit)
+
+  private def longs(sizes: String): Seq[Long] = sizes.split(",").map(_.trim.toLong).toSeq
+
+  /** A row that runs `f` once per size. */
+  private def perSize(name: String, sizes: String)(f: (SparkSession, Long) => Unit): Soak =
+    Soak(name, sizes, (spark, s, _) => longs(s).foreach(f(spark, _)))
+
+  /** A row with fixed parameters: the `sizes` fields, then the extra
+    * arguments, each missing one taken from `defaults`. */
+  private def withParams(name: String, defaults: String)(
+      f: (SparkSession, IndexedSeq[String]) => Unit): Soak =
+    Soak(name, defaults, (spark, s, rest) => {
+      val given = s.split(",").map(_.trim).toIndexedSeq ++ rest
+      f(spark, given ++ defaults.split(",").drop(given.size))
+    })
+
+  /** The soak table. Each soak's claim is in its scaladoc and SCALE.md;
+    * rows with fixed parameters name them in order. */
+  val soaks: Seq[Soak] = Seq(
+    perSize("soak", "1000000")(dedupSoak),
+    perSize("exact-dedup", "1000000")(exactDedupSoak),
+    perSize("soak-passage", "100000,1000000")(passageSoak),
+    perSize("soak-mix", "1000000,4000000")(mixSoak),
+    perSize("soak-ann", "100000,1000000")(annSoak),
+    perSize("soak-tokenize", "100000,1000000")(tokenizeSoak),
+    // sizes are total users; the first extra argument is the fixed
+    // active-user count
+    Soak("soak-funnel", "200000,2000000", (spark, s, rest) =>
+      longs(s).foreach(n => funnelSoak(spark, n.toInt,
+        rest.headOption.fold(20000)(_.toInt)))),
+    perSize("soak-attrib", "100000,1000000")(attribSoak),
+    perSize("soak-maintain", "1000000,4000000")(maintainSoak),
+    perSize("soak-simjoin", "100000,1000000")(simjoinSoak),
+    perSize("soak-cosjoin", "100000,1000000")(cosjoinSoak),
+    perSize("soak-triangles", "100000,1000000")(triangleSoak),
+    perSize("soak-knn", "100000,1000000")(knnSoak),
+    perSize("soak-walks", "100000,1000000")(walksSoak),
+    perSize("soak-cooc", "100000,1000000")(coocSoak),
+    perSize("soak-quantile", "10000000,40000000")(quantileSoak),
+    withParams("soak-ksweep", "10000000,12")((spark, a) => // n, trials
+      ksweepSoak(spark, a(0).toLong, a(1).toInt)),
+    perSize("soak-train", "200000,1000000")((spark, n) => trainSoak(spark, n.toInt)),
+    perSize("soak-cusum", "10000000")(cusumShuffleSoak),
+    perSize("soak-tokenize-bert", "1000000")(bertTokenizeSoak),
+    perSize("soak-drift", "10000000,20000000")(driftShuffleSoak),
+    perSize("soak-pack", "4000000")(packSoak),
+    perSize("soak-pretrain", "5000000")(pretrainSoak),
+    withParams("wordpiece-chained-probe", "4096,64,1000000,50000")((spark, a) =>
+      wordpieceChainedProbe(spark, a(0).toInt, a(1).toInt, a(2).toLong, a(3).toInt)),
+    withParams("soak-train-sampled", "2000000")((spark, a) =>
+      Seq(1000, 500, 250, 125).foreach(trainSampledSoak(spark, a(0).toInt, _))),
+    // the global-window reference runs at the first size only
+    Soak("soak-gridrank", "10000000,40000000", (spark, s, _) =>
+      longs(s).zipWithIndex.foreach { case (n, i) =>
         gridRankSoak(spark, n, compareGlobal = i == 0)
-      }
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("soak-crawl")) {
-      // crawl-first-mile soak: `runMain graft.Examples soak-crawl
-      // 400000` — WARC ingest (payload-skipping metadata scan vs full
-      // read), HTML text extraction, and link-graph aggregation
-      // throughput on a synthetic page dump (plain + gzip files)
-      args.lift(1).getOrElse("400000").split(",").map(_.trim.toLong)
-        .foreach(n => crawlSoak(spark, n))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("zorder")) {
-      // layout exhibit: `runMain graft.Examples zorder 4000000 64` —
-      // write a Z-clustered dataset, run an aligned box query, report
-      // the fraction of files a pruned scan opens
-      zorderExhibit(spark, args.lift(1).map(_.toLong).getOrElse(4000000L),
-        args.lift(2).map(_.toInt).getOrElse(64))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("bpe-approx")) {
-      // approximate-mode exhibit: `runMain graft.Examples bpe-approx
-      // 4096 64` — merges/round on a production-shaped corpus (the
-      // acceptance rate the rounds claim rests on), plus measured
-      // merge-set overlap vs the exact mode at a prefix size where the
-      // exact mode is affordable
-      bpeApproxExhibit(spark, args.lift(1).map(_.toInt).getOrElse(4096),
-        args.lift(2).map(_.toInt).getOrElse(64))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("wordpiece")) {
-      // WordPiece round-trip exhibit: `runMain graft.Examples wordpiece
-      // 256 64` — sequential vs dominance-batched likelihood training;
-      // reports rounds and wall-clock, asserts bit-identical merges.
-      wordpieceExhibit(spark, args.lift(1).map(_.toInt).getOrElse(256),
-        args.lift(2).map(_.toInt).getOrElse(64))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("bpe")) {
-      // BPE round-trip exhibit: `runMain graft.Examples bpe 512` — train
-      // the same merge list sequentially and batched on a Zipfian
-      // synthetic corpus; the point is DRIVER ROUND-TRIPS (scheduler
-      // latency dominates production vocab training), so we report
-      // rounds and wall-clock for both and assert bit-identical merges.
-      bpeExhibit(spark, args.lift(1).map(_.toInt).getOrElse(512),
-        args.lift(2).map(_.toInt).getOrElse(256))
-      spark.stop()
-      return
-    }
-    val rows = if (args.nonEmpty) args(0).toLong else 100000000L
+      }),
+    perSize("soak-crawl", "400000")(crawlSoak),
+    withParams("zorder", "4000000,64")((spark, a) => // rows, files
+      zorderExhibit(spark, a(0).toLong, a(1).toInt)),
+    withParams("bpe-approx", "4096,64")((spark, a) => // merges, topK
+      bpeApproxExhibit(spark, a(0).toInt, a(1).toInt)),
+    withParams("wordpiece", "256,64")((spark, a) =>
+      wordpieceExhibit(spark, a(0).toInt, a(1).toInt)),
+    withParams("bpe", "512,256")((spark, a) =>
+      bpeExhibit(spark, a(0).toInt, a(1).toInt)))
 
-    // two deterministic pseudo-uniform dims in [0,1) from the row id
-    // (splitmix-style mix, cheap and codegen-friendly)
-    val df = spark.range(rows).toDF("id")
-      .withColumn("x", pmod(xxhash64(col("id")), lit(1000000L)) / 1000000.0)
-      .withColumn("y", pmod(xxhash64(col("id") + 1), lit(1000000L)) / 1000000.0)
+  /** Shuffle records written by the stages that run inside `body`. */
+  private def withShuffleRecords[A](spark: SparkSession)(body: => A): (A, Long) = {
+    val records = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        records.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try { val a = body; GraftShims.drainListenerBus(sc); (a, records.get()) }
+    finally sc.removeSparkListener(listener)
+  }
 
-    val spec = HistSpec(Seq(Regular(10, 0.0, 1.0), Regular(10, 0.0, 1.0)),
-      DoubleStorage)
-    // warm-up at 1% for codegen/JIT, then the timed run
-    Hist.fill(spec, spark.range(rows / 100).toDF("id")
-        .withColumn("x", pmod(xxhash64(col("id")), lit(1000000L)) / 1000000.0)
-        .withColumn("y", pmod(xxhash64(col("id") + 1), lit(1000000L)) / 1000000.0),
-      Seq(col("x"), col("y"))).write.format("noop").mode("overwrite").save()
-
-    val t0 = System.nanoTime()
-    val h = Hist.fill(spec, df, Seq(col("x"), col("y")))
-    h.write.format("noop").mode("overwrite").save()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"example":"histogram2d_1e8","rows":$rows,"sec":$sec%.3f,"rows_per_sec":${rows / sec}%.0f}""")
-
-    // exact-dedup throughput: rows/100 synthetic ~135-char docs with a 50%
-    // duplicate rate (id mod nDocs/2), generated in-executor. Measures the
-    // dedup module's steady-state core: hash + map-side partial group +
-    // 8-byte-key shuffle (full documents never shuffle).
-    val nDocs = math.max(rows / 100, 1000L)
+  /** Exact-dedup throughput: `nDocs` synthetic ~135-char docs with a 50%
+    * duplicate rate (id mod nDocs/2), generated in-executor. Measures the
+    * dedup module's steady-state core: hash + map-side partial group +
+    * 8-byte-key shuffle (full documents never shuffle). */
+  private def exactDedupSoak(spark: SparkSession, nDocs: Long): Unit = {
     def docsDf = spark.range(nDocs).toDF("doc_id")
       .withColumn("text", concat_ws(" ", (0 until 8).map(i =>
         hex(xxhash64(pmod(col("doc_id"), lit(math.max(nDocs / 2, 1L))) +
@@ -373,65 +110,16 @@ object Examples {
       .write.format("noop").mode("overwrite").save()
     val dsec = (System.nanoTime() - t1) / 1e9
     println(f"""{"example":"exact_dedup","docs":$nDocs,"sec":$dsec%.3f,"docs_per_sec":${nDocs / dsec}%.0f}""")
-
-    // end-to-end near-dup pipeline throughput: MinHash signatures → LSH
-    // candidates → jaccard verify → connected components → keep decision,
-    // over rows/1000 docs with a planted 25% near-dup rate (every 4th doc
-    // is a copy of its predecessor with one word changed). Exercises the
-    // heaviest extension pipeline at a scale the bench's sf0.1 corpus
-    // doesn't reach.
-    val nNd = math.max(rows / 1000, 1000L)
-    def ndDocs = nearDupDocs(spark, nNd)
-    graft.ops.DedupOps.minhashDedupKeep(ndDocs.limit((nNd / 100).toInt),
-        threshold = 0.5)
-      .write.format("noop").mode("overwrite").save() // warm-up
-    val t2 = System.nanoTime()
-    graft.ops.DedupOps.minhashDedupKeep(ndDocs, threshold = 0.5)
-      .write.format("noop").mode("overwrite").save()
-    val nsec = (System.nanoTime() - t2) / 1e9
-    println(f"""{"example":"minhash_dedup_keep","docs":$nNd,"sec":$nsec%.3f,"docs_per_sec":${nNd / nsec}%.0f}""")
-
-    // sparse vs dense at the bin-count regime the dense path exists for:
-    // 100×100×100 = 10^6 cells over rows/10 samples. The sparse form
-    // shuffles up to min(rows, cells) bin rows per partition; the dense
-    // TypedImperativeAggregate ships ONE 8 MB buffer per partition with a
-    // bounded-fan-in merge (SURVEY §6: "bin-count × dims decides
-    // sparse-vs-dense").
-    val hRows = math.max(rows / 10, 100000L)
-    val spec3 = HistSpec(Seq(Regular(100, 0.0, 1.0), Regular(100, 0.0, 1.0),
-      Regular(100, 0.0, 1.0)), DoubleStorage)
-    def dims3 = spark.range(hRows).toDF("id")
-      .withColumn("x", pmod(xxhash64(col("id")), lit(1000000L)) / 1000000.0)
-      .withColumn("y", pmod(xxhash64(col("id") + 1), lit(1000000L)) / 1000000.0)
-      .withColumn("z", pmod(xxhash64(col("id") + 2), lit(1000000L)) / 1000000.0)
-    val cols3 = Seq(col("x"), col("y"), col("z"))
-    // warm BOTH paths: the dense path runs entirely different generated
-    // code (DenseHistAgg/DenseMergeAgg) and its first-compile codegen is
-    // the same order as the measurement itself
-    Hist.fill(spec3, dims3.limit(100000), cols3)
-      .write.format("noop").mode("overwrite").save()
-    Hist.fillDense(spec3, dims3.limit(100000), cols3)
-      .write.format("noop").mode("overwrite").save()
-    val t3 = System.nanoTime()
-    Hist.fill(spec3, dims3, cols3).write.format("noop").mode("overwrite").save()
-    val sSec = (System.nanoTime() - t3) / 1e9
-    val t4 = System.nanoTime()
-    Hist.fillDense(spec3, dims3, cols3)
-      .write.format("noop").mode("overwrite").save()
-    val dSec = (System.nanoTime() - t4) / 1e9
-    println(f"""{"example":"hist3d_1e6bins","rows":$hRows,"sparse_sec":$sSec%.3f,"dense_sec":$dSec%.3f}""")
-    spark.stop()
   }
 
-  /** Planted-near-dup synthetic corpus shared by the throughput example
-    * and the soak: 13-word docs (12 id-derived hash words + an
+  /** Planted-near-dup synthetic corpus of the dedup and similarity-join
+    * soaks: 13-word docs (12 id-derived hash words + an
     * orig/variant marker); every 4th doc copies its predecessor with the
     * final marker word changed → 10 of the 12 3-shingles shared, jaccard
     * 10/12 ≈ 0.833, comfortably above the 0.5 threshold. The per-word
     * offset stride is 2⁴⁰ — far above any reachable doc id — so word
-    * hashes can never alias across documents (a 7×10⁶ stride previously
-    * made word i of base b equal word i−k of base b+7×10⁶k, planting
-    * unintended near-dups for soaks past 7M docs). */
+    * hashes can never alias across documents (a 7×10⁶ stride planted
+    * unintended near-dups past 7M docs). */
   private def nearDupDocs(spark: SparkSession, n: Long) = {
     spark.range(n).toDF("doc_id")
       .withColumn("base", when(col("doc_id") % 4 === 3, col("doc_id") - 1)
@@ -474,18 +162,13 @@ object Examples {
     println(f"""{"example":"cosjoin_soak","docs":$nDocs,"candidates":$nCand,"cand_per_doc":${nCand.toDouble / nDocs}%.3f,"pairs":$nRes,"expected_pairs":${nDocs / 4},"sec":$sec%.3f,"docs_per_sec":${nDocs / sec}%.0f}""")
   }
 
-  /** Triangle-count soak on a hub-planted synthetic graph: ring + two
-    * hash chords (~3 edges/node) + one hub wired to every 20th node.
-    * The point measured: the hub's RAW degree grows linearly with n,
-    * but after degree orientation its OUT-degree (wedge-apex width)
-    * collapses — no n² wedge blowup at the hub. */
   /** Exact percentile vs the [[graft.plans.ApproxQuantileRewrite]]
     * substitution on an all-distinct metric column (Knuth-hash spread),
     * grouped 8 ways: warm best-of-2 each, same SQL text, only the conf
     * differs. The exhibit behind the rewrite's 100 TB claim. */
   private def quantileSoak(spark: SparkSession, n: Long): Unit = {
-    // the Examples session is built bare — install the optimizer rule
-    // (idempotent); percentile survives to extraOptimizations untouched,
+    // also install the rule as an extra optimization (idempotent);
+    // percentile survives to extraOptimizations untouched,
     // so the live-session path has full scope here
     GraftExtensions.register(spark)
     val df = spark.range(n).select(
@@ -613,33 +296,25 @@ object Examples {
         lit(1L).as("inc"))
       .union(Seq(("zz", 40L * DayUs, 1L)).toDF("series", "ts_us", "inc"))
     ev.write.mode("overwrite").parquet(dir.toString)
-    val records = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        records.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    val (sec, shuffled) = withShuffleRecords(spark) {
+      val t0 = System.nanoTime()
+      implicit val s: SparkSession = spark
+      val src = spark.readStream
+        .schema("series STRING, ts_us LONG, inc LONG")
+        .parquet(dir.toString)
+        .withColumn("et", timestamp_micros(col("ts_us")))
+        .withWatermark("et", "0 seconds")
+        .as[graft.streaming.CusumStream.CusumEvent]
+      val q = graft.streaming.CusumStream
+        .cusumShiftStream(src, refDays = 7, slackPermille = 0L,
+          hPermille = 1000000L)
+        .writeStream.outputMode("append").format("memory")
+        .queryName("cusum_soak")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(600000)
+      (System.nanoTime() - t0) / 1e9
     }
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    implicit val s: SparkSession = spark
-    val src = spark.readStream
-      .schema("series STRING, ts_us LONG, inc LONG")
-      .parquet(dir.toString)
-      .withColumn("et", timestamp_micros(col("ts_us")))
-      .withWatermark("et", "0 seconds")
-      .as[graft.streaming.CusumStream.CusumEvent]
-    val q = graft.streaming.CusumStream
-      .cusumShiftStream(src, refDays = 7, slackPermille = 0L,
-        hPermille = 1000000L)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("cusum_soak")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(600000)
-    val sec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(2000) // listener drain
-    spark.sparkContext.removeSparkListener(listener)
     val out = spark.table("cusum_soak")
     val got = out.agg(count(lit(1)), sum("x")).head()
     val (rows, sumX) = (got.getLong(0), got.getLong(1))
@@ -656,8 +331,8 @@ object Examples {
     require(rows == want.getLong(0) && sumX == want.getLong(1),
       s"stream drifted from exact: got ($rows, $sumX), " +
         s"want (${want.getLong(0)}, ${want.getLong(1)})")
-    val ratio = records.get().toDouble / n
-    println(f"""{"example":"cusum_shuffle_soak","events":$n,"emitted_days":$rows,"shuffled_records":${records.get()},"shuffle_ratio":$ratio%.6f,"sec":$sec%.1f}""")
+    val ratio = shuffled.toDouble / n
+    println(f"""{"example":"cusum_shuffle_soak","events":$n,"emitted_days":$rows,"shuffled_records":$shuffled,"shuffle_ratio":$ratio%.6f,"sec":$sec%.1f}""")
   }
 
   /** Drift-monitor shuffle soak — the [[cusumShuffleSoak]] discipline
@@ -692,33 +367,25 @@ object Examples {
       .union(Seq(("zz", 40L * DayUs, 0, 1L))
         .toDF("series", "ts_us", "bin", "inc"))
     ev.write.mode("overwrite").parquet(dir.toString)
-    val records = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        records.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    val (sec, shuffled) = withShuffleRecords(spark) {
+      val t0 = System.nanoTime()
+      implicit val s: SparkSession = spark
+      val src = spark.readStream
+        .schema("series STRING, ts_us LONG, bin INT, inc LONG")
+        .parquet(dir.toString)
+        .withColumn("et", timestamp_micros(col("ts_us")))
+        .withWatermark("et", "0 seconds")
+        .as[graft.streaming.DriftStream.DriftEvent]
+      val q = graft.streaming.DriftStream
+        .chi2DriftStream(src, nBins = nBins, refDays = refDays,
+          alarmE6 = Long.MaxValue / 4)
+        .writeStream.outputMode("append").format("memory")
+        .queryName("drift_soak")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(600000)
+      (System.nanoTime() - t0) / 1e9
     }
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    implicit val s: SparkSession = spark
-    val src = spark.readStream
-      .schema("series STRING, ts_us LONG, bin INT, inc LONG")
-      .parquet(dir.toString)
-      .withColumn("et", timestamp_micros(col("ts_us")))
-      .withWatermark("et", "0 seconds")
-      .as[graft.streaming.DriftStream.DriftEvent]
-    val q = graft.streaming.DriftStream
-      .chi2DriftStream(src, nBins = nBins, refDays = refDays,
-        alarmE6 = Long.MaxValue / 4)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("drift_soak")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(600000)
-    val sec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(2000) // listener drain
-    spark.sparkContext.removeSparkListener(listener)
     val out = spark.table("drift_soak")
     val got = out.agg(count(lit(1)), sum("n")).head()
     val (rows, sumN) = (got.getLong(0), got.getLong(1))
@@ -735,8 +402,8 @@ object Examples {
     require(rows == want.getLong(0) && sumN == want.getLong(1),
       s"stream drifted from exact: got ($rows, $sumN), " +
         s"want (${want.getLong(0)}, ${want.getLong(1)})")
-    val ratio = records.get().toDouble / n
-    println(f"""{"example":"drift_shuffle_soak","events":$n,"series":$nSeries,"days":$nDays,"bins":$nBins,"scored_days":$rows,"shuffled_records":${records.get()},"shuffle_ratio":$ratio%.6f,"sec":$sec%.1f}""")
+    val ratio = shuffled.toDouble / n
+    println(f"""{"example":"drift_shuffle_soak","events":$n,"series":$nSeries,"days":$nDays,"bins":$nBins,"scored_days":$rows,"shuffled_records":$shuffled,"shuffle_ratio":$ratio%.6f,"sec":$sec%.1f}""")
   }
 
   /** Chained-WordPiece SCALE probe (the r12 verdict's open unknown):
@@ -905,6 +572,11 @@ object Examples {
     println(f"""{"example":"gridrank","rows":$n,"gini_grid_sec":$gSec%.2f,"gini_global_sec":$gRefSec%.2f,"gini":${gRow.getDouble(2)},"qnorm_grid_sec":$qSec%.2f,"qnorm_checksum":${qSum.getLong(0)},"qnorm_rows":${qSum.getLong(1)},"fd_grid_sec":$fdSec%.2f,"fd_global_sec":$fdRefSec%.2f,"fd_bins":${fdRows.head.getLong(2)}}""")
   }
 
+  /** Triangle-count soak on a hub-planted synthetic graph: ring + two
+    * hash chords (~3 edges/node) + one hub wired to every 20th node.
+    * The point measured: the hub's RAW degree grows linearly with n,
+    * but after degree orientation its OUT-degree (wedge-apex width)
+    * collapses — no n² wedge blowup at the hub. */
   private def triangleSoak(spark: SparkSession, n: Long): Unit = {
     val base = spark.range(1L, n).toDF("id") // node 0 is the hub
     val e1 = base.select(col("id").as("a"), ((col("id") + 1) % n).as("b"))
@@ -964,11 +636,6 @@ object Examples {
     println(f"""{"example":"passage_soak","docs":$nDocs,"occ_rows":$occRows,"occ_per_doc":${occRows.toDouble / nDocs}%.2f,"rewrite_sec":$sec%.3f,"docs_per_sec":${nDocs / sec}%.0f,"docs_rewritten":$affected}""")
   }
 
-  /** Token-budget mix soak on a SKEWED corpus (95% of docs in one "en"
-    * domain): with the two-phase bucketed prefix sum, per-task window
-    * work is bounded by the largest (group, bucket) cell — reported as
-    * max/mean cell rows (flat ≈ uniform hash spread) — instead of one
-    * window partition holding the whole giant domain. */
   /** Attribution-credit conservation + bot-bounded window work at soak
     * scale: every conversion distributes exactly 1.0 of linear credit
     * and exactly one first/last touch, so channel sums must land on the
@@ -1078,6 +745,11 @@ object Examples {
     println(f"""{"example":"maintain_soak","rows":$nRows,"churn":$churn,"keys":200,"sec_full_recompute":$secFull%.3f,"sec_delta_maintain":$secDelta%.3f,"bytes_scanned_recompute":${dirBytes(newDir)},"bytes_scanned_maintain":${dirBytes(baseDir)},"feed_rows":$churn,"views_agree":true}""")
   }
 
+  /** Token-budget mix soak on a SKEWED corpus (95% of docs in one "en"
+    * domain): with the two-phase bucketed prefix sum, per-task window
+    * work is bounded by the largest (group, bucket) cell — reported as
+    * max/mean cell rows (flat ≈ uniform hash spread) — instead of one
+    * window partition holding the whole giant domain. */
   private def mixSoak(spark: SparkSession, nDocs: Long): Unit = {
     import spark.implicits._
     val langs = Seq("de", "fr", "ja", "sw")
@@ -1260,13 +932,6 @@ object Examples {
     } finally q.stop()
   }
 
-  /** Embedding-search soak: synthetic 64-dim unit-ish vectors (uniform
-    * [-1, 1] lanes from xxhash64 — the worst case for IVF, since real
-    * clustered data concentrates probes), 256 queries. Measures IVF and
-    * LSH top-k wall-clock/QPS and the two volumes the SCALE.md
-    * accounting bounds: the per-cell population spread (max/mean — one
-    * re-rank join partition per cell) and the SemDedup pair term
-    * Σ|cell|² relative to n². */
   /** k-NN-graph soak: synthetic 64-dim corpus; cell count scales with n
     * (target occupancy ~1000 vectors/cell) as a production quantizer
     * would, so candidate volume per node — the quantity that shuffles —
@@ -1305,6 +970,13 @@ object Examples {
     println(f"""{"example":"knn_soak","vectors":$n,"dim":$dim,"cells":$nCells,"nprobe":$nprobe,"candidates":$cand,"cand_per_node":${cand.toDouble / n}%.1f,"sec":$sec%.3f,"nodes_per_sec":${n / sec}%.0f}""")
   }
 
+  /** Embedding-search soak: synthetic 64-dim unit-ish vectors (uniform
+    * [-1, 1] lanes from xxhash64 — the worst case for IVF, since real
+    * clustered data concentrates probes), 256 queries. Measures IVF and
+    * LSH top-k wall-clock/QPS and the two volumes the SCALE.md
+    * accounting bounds: the per-cell population spread (max/mean — one
+    * re-rank join partition per cell) and the SemDedup pair term
+    * Σ|cell|² relative to n². */
   private def annSoak(spark: SparkSession, n: Long): Unit = {
     import spark.implicits._
     val dim = 64
@@ -1365,12 +1037,6 @@ object Examples {
     println(f"""{"example":"ann_soak","vectors":$n,"dim":$dim,"queries":256,"ivf_sec":$ivfSec%.3f,"ivf_qps":${256 / ivfSec}%.1f,"lsh_sec":$lshSec%.3f,"lsh_qps":${256 / lshSec}%.1f,"pq_build_sec":$buildSec%.3f,"ivfpq_query_sec":$ivfpqSec%.3f,"ivfpq_qps":${256 / ivfpqSec}%.1f,"pq_index_mb":${idxBytes / 1048576.0}%.1f,"raw_mb":${rawBytes / 1048576.0}%.1f,"bytes_ratio":${rawBytes.toDouble / idxBytes}%.1f,"cells":16,"max_cell":$mx,"max_over_mean":${mx / mean}%.2f,"semdedup_pair_frac":${sq.toDouble / (n.toDouble * n)}%.4f}""")
   }
 
-  /** Sequential-vs-batched BPE training on a deterministic Zipfian
-    * corpus (2000 distinct words, freq ∝ 1/rank — the shape production
-    * vocabularies train on). Both trainers produce bit-identical merge
-    * lists by construction ([[graft.ops.BpeOps.trainBatched]]'s
-    * dominance gate); the exhibit measures driver ROUND-TRIPS and
-    * wall-clock, the cost that scales to a 30k-merge vocabulary. */
   /** Approximate-BPE exhibit: a 20k-word Zipfian vocabulary (large
     * enough to support production-ish merge counts), trainApprox at the
     * requested vocab size — the claim under test is the accepted
@@ -1400,6 +1066,12 @@ object Examples {
     println(f"""{"example":"bpe_approx","merges":${approx.merges.size},"topK":$topK,"rounds":${approx.rounds},"merges_per_round":${approx.merges.size.toDouble / approx.rounds}%.1f,"sec":$sec%.3f,"exact_prefix":$prefix,"exact_rounds":${exact.rounds},"exact_sec":$exactSec%.3f,"prefix_overlap":$overlap%.3f}""")
   }
 
+  /** Sequential-vs-batched BPE training on a deterministic Zipfian
+    * corpus (2000 distinct words, freq ∝ 1/rank — the shape production
+    * vocabularies train on). Both trainers produce bit-identical merge
+    * lists by construction ([[graft.ops.BpeOps.trainBatched]]'s
+    * dominance gate); the exhibit measures driver ROUND-TRIPS and
+    * wall-clock, the cost that scales to a 30k-merge vocabulary. */
   private def bpeExhibit(spark: SparkSession, nMerges: Int,
       topK: Int): Unit = {
     import spark.implicits._
@@ -1466,14 +1138,6 @@ object Examples {
     println(f"""{"example":"wordpiece_batched","merges":${seqMerges.size},"topK":$topK,"seq_rounds":${seqMerges.size},"seq_sec":$seqSec%.3f,"batched_rounds":${batched.rounds},"batched_sec":$batSec%.3f,"batched_reduction":${seqMerges.size.toDouble / batched.rounds}%.2f,"batched_identical":true,"chained_rounds":${chained.rounds},"chained_sec":$chSec%.3f,"chained_reduction":${seqMerges.size.toDouble / chained.rounds}%.2f,"chained_identical":true,"approx_rounds":${approx.rounds},"approx_sec":$apxSec%.3f,"approx_reduction":${approx.merges.size.toDouble / approx.rounds}%.2f,"approx_overlap":$overlap%.3f}""")
   }
 
-  /** End-to-end MinHash dedup soak at a given corpus size: planted 25%
-    * near-dup rate over [[nearDupDocs]].
-    *
-    * Reports the end-to-end keep-decision time (docs/s headline) plus
-    * candidate / verified-pair / removed counts as separate audited
-    * actions — candidates ≈ verified ≈ removed ≈ n/4 when the LSH layer
-    * adds ~no false candidates, and candidates-per-doc staying flat
-    * across sizes is the linearity evidence SCALE.md cites. */
   /** Crawl-first-mile soak: generate nPages of synthetic HTML as a
     * mixed plain+gzip WARC dump, then measure the three stages every
     * crawl pipeline runs: (a) payload-skipping metadata scan (column
@@ -1641,6 +1305,14 @@ object Examples {
     println(f"""{"example":"pretrain_soak","docs":$nDocs,"tokens":$nTok,"mlm_selected":$sel,"noise_tokens":${sc.getLong(0)},"noise_spans":${sc.getLong(1)},"perm_buckets":$buckets,"distinct_partners":$distinctPartners,"sec_mlm":$secMlm%.1f,"sec_span":$secSc%.1f,"sec_perm":$secPerm%.1f}""")
   }
 
+  /** End-to-end MinHash dedup soak at a given corpus size: planted 25%
+    * near-dup rate over [[nearDupDocs]].
+    *
+    * Reports the end-to-end keep-decision time (docs/s headline) plus
+    * candidate / verified-pair / removed counts as separate audited
+    * actions — candidates ≈ verified ≈ removed ≈ n/4 when the LSH layer
+    * adds ~no false candidates, and candidates-per-doc staying flat
+    * across sizes is the linearity evidence SCALE.md cites. */
   private def dedupSoak(spark: SparkSession, nDocs: Long): Unit = {
     def docs = nearDupDocs(spark, nDocs)
     // warm codegen on 1%

@@ -266,7 +266,7 @@ object ExtensionQueries {
   private val wpCorpusMaxWordCp = 8
 
   // Frozen PCA model (mean + top-2 components) trained once by
-  // graft.FreezePca on the sf0.01 embeddings — the frozen-tokenizer
+  // `graft.Cli freeze-pca` on the sf0.01 embeddings — the frozen-tokenizer
   // discipline applied to a rotation: production trains a PCA once and
   // projects every later snapshot with it, and freezing is what lets the
   // DuckDB oracle replay the projection with identical literals.
@@ -3132,7 +3132,7 @@ object ExtensionQueries {
     },
     // Frozen-PCA projection of every embedding onto the top-2 principal
     // components — the decorrelated 2-D view downstream visualization /
-    // coarse clustering reads; model trained ONCE (FreezePca), applied
+    // coarse clustering reads; model trained ONCE (`graft.Cli freeze-pca`), applied
     // to any snapshot, oracle replays the identical literals with the
     // identical centered sequential dot
     "emb_pca_project" -> { (s, dir) =>

@@ -7,6 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and column pruning visible per query.
   */
 object Tables {
+  /** Where the test tables live: one `sf<scale>` directory per scale. */
+  val TestDataRoot = "/root/testdata"
+
   def apply(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 

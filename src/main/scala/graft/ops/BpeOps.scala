@@ -301,7 +301,7 @@ object BpeOps {
     * conflicts are skipped, not batch-enders), then apply the whole set
     * as one chained rewrite. Rounds collapse toward nMerges/topK, floored
     * by how many of the top-K are mutually symbol-disjoint: measured on
-    * the 20k-word Zipfian exhibit corpus (`Examples bpe-approx`), 14.9
+    * the 20k-word Zipfian exhibit corpus (`graft.Cli soak bpe-approx`), 14.9
     * accepted merges/round at topK=64 — ~6× fewer driver round-trips
     * than the exact dominance gate (2.45/round) and ~37× fewer than
     * sequential, so a 30k-merge vocab is ~2k rounds instead of ~12k.
@@ -319,7 +319,7 @@ object BpeOps {
     *    `topK = 1` degenerates to exactly [[train]] (same argmax, same
     *    tie-break). The divergence is QUANTIFIED, not assumed small:
     *    BpeSpec's differential measures merge-set overlap vs [[train]]
-    *    on the classic/zh corpora, and `Examples bpe-approx` reports
+    *    on the classic/zh corpora, and `graft.Cli soak bpe-approx` reports
     *    rounds and overlap at exhibit scale. Use the exact modes when
     *    the merge list must be replayable bit-for-bit. */
   def trainApprox(docs: DataFrame, nMerges: Int, textCol: String = "text",
@@ -1212,7 +1212,7 @@ object BpeOps {
     * the likelihood key: per driver round accept every top-`topK` pair
     * sharing no symbol with a pair already accepted this round, apply
     * the set as one chained rewrite. Exists because of a MEASURED
-    * property of the likelihood objective (the `Examples wordpiece`
+    * property of the likelihood objective (the `graft.Cli soak wordpiece`
     * exhibit): sequential WordPiece CHAINS — a merge shrinks its
     * parts' frequencies and its created pairs (x, l+r) inherit a
     * boosted score pf/(sf(x)·pf), so the next argmax is usually the

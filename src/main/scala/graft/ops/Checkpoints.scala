@@ -80,6 +80,18 @@ object Checkpoints {
     threshold >= 0 && measured(bound).sizeInBytes <= threshold
   }
 
+  /** Runs `body`, then unpersists (blocking) every RDD it persisted or
+    * checkpointed locally: a query's materializations end with the
+    * query, so their blocks do not pressure the queries after it. */
+  def released[A](spark: SparkSession)(body: => A): A = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    try body
+    finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before.contains(id)) rdd.unpersist(blocking = true)
+    }
+  }
+
   implicit class BarrierOps[T](private val ds: Dataset[T]) extends AnyVal {
     def lineageBarrier(eager: Boolean = true): Dataset[T] =
       if (reliable(ds.sparkSession)) ds.checkpoint(eager)

@@ -168,10 +168,15 @@ object GraphOps {
                 s"$maxIters rounds (last delta $delta) — raise maxIters or " +
                 "loosen tol; refusing to return an unconverged vector")
             val next = round(ranks)
-            delta = next
+            val probe = next
               .join(ranks.select(col("node"), col("rank").as("prev")), Seq("node"))
               .agg(sum(abs(col("rank") - col("prev"))))
-              .collect()(0).getDouble(0)
+              .collect()(0)
+            // no nodes (null sum): the empty result fixed mode returns;
+            // NaN fails `delta > tol`, so it would pass for converged
+            delta = if (probe.isNullAt(0)) 0.0 else probe.getDouble(0)
+            if (delta.isNaN) throw new IllegalStateException(
+              s"power iteration diverged: L1 delta is NaN after ${i + 1} rounds")
             ranks = next
             i += 1
           }

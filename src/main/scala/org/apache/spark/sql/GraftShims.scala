@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
   * Expression<->Column converters of `classic.ExpressionUtils` (Spark 4
   * moved Column to a backend-agnostic representation), and a Dataset over
   * a `LogicalRDD` with measured statistics for
-  * [[graft.ops.Checkpoints.materialize]].
+  * [[graft.ops.Checkpoints.materialize]], and the listener-bus drain.
   */
 object GraftShims {
   def toColumn(e: Expression): Column =
@@ -61,4 +61,9 @@ object GraftShims {
   def broadcastThreshold(spark: SparkSession): Long =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf
       .autoBroadcastJoinThreshold
+
+  /** Waits until every listener event posted so far has been delivered,
+    * so a listener's counts are complete when they are read. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

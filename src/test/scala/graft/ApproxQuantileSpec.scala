@@ -202,7 +202,7 @@ class ApproxQuantileSpec extends AnyFunSuite {
   }
 
   test("error envelope pinned at k=256 and k=1024 (the SCALE.md k-sweep)") {
-    // deterministic miniature of `Examples soak-ksweep`: independent
+    // deterministic miniature of `graft.Cli soak soak-ksweep`: independent
     // all-distinct value sets per trial, observed |rank - q| across
     // trials x quantiles must sit inside the published envelope
     // (p90 <= 1/sqrt(k), max <= 1.6/sqrt(k); the 1e7-row sweep measured

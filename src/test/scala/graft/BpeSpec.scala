@@ -136,7 +136,7 @@ class BpeSpec extends AnyFunSuite {
       // classic has 4 distinct words trained to near-exhaustion (measured
       // overlap 0.53), zh similar — every pair interacts with every
       // other. Production Zipf corpora interact far less (the
-      // disjoint-alphabet case below is exact; Examples bpe-approx
+      // disjoint-alphabet case below is exact; graft.Cli soak bpe-approx
       // reports exhibit-scale overlap)
       val approx = BpeOps.trainApprox(docs, n, topK = 8)
       assert(approx.rounds < exact.size,

@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
@@ -61,11 +60,11 @@ class CheckpointsSpec extends AnyFunSuite {
             "checkpoints-spec")) jobs.incrementAndGet()
     }
     def jobsOf(body: => Unit): Int = {
-      ListenerBusShim.drain(sc)
+      GraftShims.drainListenerBus(sc)
       jobs.set(0)
       sc.setJobGroup("checkpoints-spec", "job count")
       try body finally sc.clearJobGroup()
-      ListenerBusShim.drain(sc)
+      GraftShims.drainListenerBus(sc)
       jobs.get
     }
     // a shuffle under the barrier, so AQE runs a map stage first
@@ -128,5 +127,19 @@ class CheckpointsSpec extends AnyFunSuite {
     try assert(!Checkpoints.fitsBroadcast(m))
     finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     intercept[IllegalArgumentException](Checkpoints.fitsBroadcast(relation))
+  }
+
+  test("released unpersists what its body materialized and nothing else") {
+    val sc = spark.sparkContext
+    val kept = Checkpoints.materialize(relation)
+    val before = sc.getPersistentRDDs.keySet
+    val rows = Checkpoints.released(spark) {
+      val m = Checkpoints.materialize(relation)
+      assert(sc.getPersistentRDDs.keySet != before)
+      Checkpoints.rowCount(m)
+    }
+    assert(rows == strings.size)
+    assert(sc.getPersistentRDDs.keySet == before)
+    assert(kept.count() == strings.size)
   }
 }

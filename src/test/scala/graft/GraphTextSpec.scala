@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
@@ -533,6 +533,18 @@ class GraphTextSpec extends AnyFunSuite {
       GraphOps.pageRankConverged(edges, tol = 1e-15, maxIters = 2).collect()
     }
     assert(e.getMessage.contains("did not converge"))
+  }
+
+  test("converged power iteration on empty edges equals fixed mode") {
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val weighted = Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
+    def rows(df: DataFrame) = df.as[(Long, Double)].collect().toSeq
+    assert(rows(GraphOps.pageRankConverged(edges)) ==
+      rows(GraphOps.pageRank(edges)))
+    assert(rows(GraphOps.personalizedPageRankConverged(edges, Seq(1L))) ==
+      rows(GraphOps.personalizedPageRank(edges, Seq(1L))))
+    assert(rows(GraphOps.weightedPageRankConverged(weighted)) ==
+      rows(GraphOps.weightedPageRank(weighted)))
   }
 
   test("converged label propagation: fixpoint on a clique; oscillation refuses") {

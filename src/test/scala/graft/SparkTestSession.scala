@@ -2,18 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session across all suites (forked test JVM). */
+/** One shared local session across all suites (forked test JVM): the
+  * graft session on 4 cores. */
 object SparkTestSession {
-  lazy val get: SparkSession = {
-    val s = GraftSession.defaults(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val get: SparkSession = GraftSession.local(4)
 }
