@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{GraftShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale soaks and exhibits, run as `graft.Cli soak <name> [sizes]
@@ -247,23 +247,28 @@ object Examples {
     }
   }
 
-  /** Training soak: generate an n-doc separable corpus IN-ENGINE
-    * (deterministic column arithmetic — no driver-side text), train 8
+  /** The training soaks' n-doc separable corpus, generated IN-ENGINE
+    * (deterministic column arithmetic — no driver-side text): positive
+    * docs speak goodN vocab, negative badN, shared filler; ~16 tokens
+    * per doc, built with concat/pmod only. */
+  private def separableDocs(spark: SparkSession, n: Int): DataFrame = {
+    val w = (i: Int) => expr(s"CASE WHEN id % 2 = 0 THEN 'g' ELSE 'b' END" +
+      s" || CAST((id * ${7 + i}) % 5 AS STRING)")
+    spark.range(n.toLong).select(col("id").as("doc_id"),
+      concat_ws(" ", (0 until 12).map(w) ++
+        Seq(expr("'the'"), expr("'of'"), expr("'and'"), expr("'to'")): _*)
+        .as("text"),
+      (col("id") % 2 === 0).cast("long").as("y"))
+  }
+
+  /** Training soak: on the [[separableDocs]] corpus, train 8
     * rounds at dim=64, report feature-build and per-round gradient
     * time, and require 100% accuracy. The scaling claim under test:
     * each round is ONE map-side-combined dim+1-key aggregate over the
     * persisted feature relation, so s/round grows linearly with the
     * corpus and the model-sized collect is constant. */
   private def trainSoak(spark: SparkSession, n: Int): Unit = {
-    // positive docs speak goodN vocab, negative badN, shared filler;
-    // ~16 tokens per doc, built with concat/pmod only
-    val w = (i: Int) => expr(s"CASE WHEN id % 2 = 0 THEN 'g' ELSE 'b' END" +
-      s" || CAST((id * ${7 + i}) % 5 AS STRING)")
-    val docs = spark.range(n.toLong).select(col("id").as("doc_id"),
-      concat_ws(" ", (0 until 12).map(w) ++
-        Seq(expr("'the'"), expr("'of'"), expr("'and'"), expr("'to'")): _*)
-        .as("text"),
-      (col("id") % 2 === 0).cast("long").as("y"))
+    val docs = separableDocs(spark, n)
     val t0 = System.nanoTime()
     val wq = graft.ops.TrainOps.trainLr(docs, col("y"), dim = 64,
       rounds = 8, lrNum = 10L, lrDen = 1L)
@@ -451,55 +456,34 @@ object Examples {
   }
 
   /** Sampled-round training soak: the [[trainSoak]] corpus at fixed n,
-    * swept over sampleMilli — isolates the per-round gradient cost from
-    * the (fixed) feature-build cost, so the line that must fall with
-    * the sample is `grad_sec_per_round`. The separable corpus must
-    * still train to 100% at every rate (rotating halves/quarters see
-    * the whole vocabulary across rounds). */
+    * trained 8 rounds at each sampleMilli. The per-round gradient pass
+    * is the cost that must fall with the sample (`train_sec` also holds
+    * the fixed feature build); `shuffled_mass_ratio` is the feature
+    * mass the 8 sampled rounds aggregate over 8 full passes' mass,
+    * computed by one separate aggregate outside the timed window. The separable corpus must still train to 100% at every
+    * rate (rotating halves/quarters see the whole vocabulary across
+    * rounds). */
   private def trainSampledSoak(spark: SparkSession, n: Int,
       sampleMilli: Int): Unit = {
-    val w = (i: Int) => expr(s"CASE WHEN id % 2 = 0 THEN 'g' ELSE 'b' END" +
-      s" || CAST((id * ${7 + i}) % 5 AS STRING)")
-    val docs = spark.range(n.toLong).select(col("id").as("doc_id"),
-      concat_ws(" ", (0 until 12).map(w) ++
-        Seq(expr("'the'"), expr("'of'"), expr("'and'"), expr("'to'")): _*)
-        .as("text"),
-      (col("id") % 2 === 0).cast("long").as("y"))
-    // time the per-round gradient in isolation: features persisted and
-    // materialized up front, then 8 gradient rounds on the live weights
-    val labeled = graft.ops.TrainOps.docFeatures(docs, 64)
-      .join(docs.select(col("doc_id"), col("y")), "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    labeled.count() // materialize outside the timed window
-    val wq = Array.fill(65)(0L)
-    val fFull = labeled.agg(
-      sum(expr("CAST(size(js) AS BIGINT)"))).head().getLong(0)
+    val docs = separableDocs(spark, n)
     val t0 = System.nanoTime()
-    var r = 0
-    var sampledMass = 0L
-    while (r < 8) {
-      val (g, fr) = graft.ops.TrainOps.lrGradientRoundSampled(
-        labeled, wq, r, sampleMilli)
-      sampledMass += fr
-      var j = 0
-      while (j <= 64) {
-        val nw = BigInt(wq(j)) - graft.ops.TrainOps.tdz(
-          BigInt(10L) * g(j), BigInt(fr) * 1000L * (r + 1))
-        wq(j) = nw.toLong
-        j += 1
-      }
-      r += 1
-    }
-    val gradS = (System.nanoTime() - t0) / 1e9
+    val wq = graft.ops.TrainOps.trainLr(docs, col("y"), dim = 64,
+      rounds = 8, lrNum = 10L, lrDen = 1L, sampleMilli = sampleMilli)
+    val trainS = (System.nanoTime() - t0) / 1e9
     val acc = graft.ops.TrainOps.lrScore(docs, col("y"), wq)
       .agg(avg((col("pred").cast("long") === col("y")).cast("double")))
       .head().getDouble(0)
-    labeled.unpersist()
     require(acc == 1.0,
       s"separable corpus must train to 100% at s=$sampleMilli, got $acc")
+    val active = expr("CAST(size(js) AS BIGINT)")
+    val mass = graft.ops.TrainOps.docFeatures(docs, 64).agg(
+      sum(active * lit(8L)),
+      (0 until 8).map(r => sum(when(graft.ops.TrainOps.sampleBucket(
+        col("doc_id"), r) < lit(sampleMilli.toLong), active).otherwise(0L)))
+        .reduce(_ + _)).head()
     // the shuffled-mass ratio IS the sample rate (the cost driver)
-    val massRatio = sampledMass.toDouble / (8L * fFull)
-    println(f"""{"example":"train_sampled_soak","docs":$n,"sample_milli":$sampleMilli,"rounds":8,"grad_sec":$gradS%.2f,"grad_sec_per_round":${gradS / 8}%.3f,"shuffled_mass_ratio":$massRatio%.3f,"acc":$acc}""")
+    val massRatio = mass.getLong(1).toDouble / mass.getLong(0)
+    println(f"""{"example":"train_sampled_soak","docs":$n,"sample_milli":$sampleMilli,"rounds":8,"train_sec":$trainS%.2f,"sec_per_round":${trainS / 8}%.3f,"shuffled_mass_ratio":$massRatio%.3f,"acc":$acc}""")
   }
 
   /** Grid-window soak: [[graft.ops.ProfileOps.giniIndex]] and
@@ -1093,16 +1077,13 @@ object Examples {
     println(f"""{"example":"bpe_batched","merges":${seqMerges.size},"topK":$topK,"seq_rounds":${seqMerges.size},"seq_sec":$seqSec%.3f,"batched_rounds":${batched.rounds},"batched_sec":$batSec%.3f,"round_reduction":${seqMerges.size.toDouble / batched.rounds}%.2f,"identical":true}""")
   }
 
-  /** Sequential vs EXACT-batched vs APPROX WordPiece training on the
-    * [[bpeExhibit]] Zipfian corpus — the r11 verdict's top item (one
-    * Spark job per merge at a 32k vocab is 32k sequential jobs). The
-    * headline FINDING this exhibit pins: the exact dominance batch
-    * ([[graft.ops.BpeOps.trainWordpieceBatched]]) reproduces the
-    * sequential list bit-for-bit but achieves round_reduction ≈ 1.00
-    * here and on the documents fixture, because likelihood training
-    * CHAINS (each merge's created pair usually becomes the next
-    * argmax — see the trainWordpieceApprox scaladoc). The approx mode
-    * is therefore the production path; its divergence vs sequential is
+  /** Sequential vs EXACT chain-following vs APPROX WordPiece training
+    * on the [[bpeExhibit]] Zipfian corpus (one Spark job per merge at a
+    * 32k vocab is 32k sequential jobs). Likelihood training CHAINS
+    * (each merge's created pair usually becomes the next argmax — see
+    * the trainWordpieceChained scaladoc), so the exact batched mode is
+    * [[graft.ops.BpeOps.trainWordpieceChained]], required bit-identical
+    * to sequential here; the approx mode's divergence vs sequential is
     * reported as merge-set overlap, the trainApprox discipline. */
   private def wordpieceExhibit(spark: SparkSession, nMerges: Int,
       topK: Int): Unit = {
@@ -1117,12 +1098,6 @@ object Examples {
     val t0 = System.nanoTime()
     val seqMerges = graft.ops.BpeOps.trainWordpiece(docs, nMerges)
     val seqSec = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val batched = graft.ops.BpeOps.trainWordpieceBatched(docs, nMerges,
-      topK = topK)
-    val batSec = (System.nanoTime() - t1) / 1e9
-    require(batched.merges == seqMerges,
-      "batched and sequential WordPiece training diverged")
     val t3 = System.nanoTime()
     val chained = graft.ops.BpeOps.trainWordpieceChained(docs, nMerges,
       topK = topK)
@@ -1135,7 +1110,7 @@ object Examples {
     val apxSec = (System.nanoTime() - t2) / 1e9
     val overlap = approx.merges.toSet.intersect(seqMerges.toSet)
       .size.toDouble / seqMerges.size
-    println(f"""{"example":"wordpiece_batched","merges":${seqMerges.size},"topK":$topK,"seq_rounds":${seqMerges.size},"seq_sec":$seqSec%.3f,"batched_rounds":${batched.rounds},"batched_sec":$batSec%.3f,"batched_reduction":${seqMerges.size.toDouble / batched.rounds}%.2f,"batched_identical":true,"chained_rounds":${chained.rounds},"chained_sec":$chSec%.3f,"chained_reduction":${seqMerges.size.toDouble / chained.rounds}%.2f,"chained_identical":true,"approx_rounds":${approx.rounds},"approx_sec":$apxSec%.3f,"approx_reduction":${approx.merges.size.toDouble / approx.rounds}%.2f,"approx_overlap":$overlap%.3f}""")
+    println(f"""{"example":"wordpiece_batched","merges":${seqMerges.size},"topK":$topK,"seq_rounds":${seqMerges.size},"seq_sec":$seqSec%.3f,"chained_rounds":${chained.rounds},"chained_sec":$chSec%.3f,"chained_reduction":${seqMerges.size.toDouble / chained.rounds}%.2f,"chained_identical":true,"approx_rounds":${approx.rounds},"approx_sec":$apxSec%.3f,"approx_reduction":${approx.merges.size.toDouble / approx.rounds}%.2f,"approx_overlap":$overlap%.3f}""")
   }
 
   /** Crawl-first-mile soak: generate nPages of synthetic HTML as a

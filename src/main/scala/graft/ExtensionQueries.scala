@@ -153,7 +153,8 @@ object ExtensionQueries {
   // first 24 likelihood merges trainWordpiece learns from the sf0.01
   // documents fixture (note the CHAINING structure — (m,n) → (u,mn) →
   // (l,umn) → (o,lumn) → (c,olumn) — the measured property that makes
-  // exact batching degenerate; see BpeOps.trainWordpieceApprox). Same
+  // round-start exact batching degenerate; see
+  // BpeOps.trainWordpieceChained). Same
   // frozen-at-build contract as bpeMerges.
   private val wpMerges: Seq[(String, String)] = Seq(
     ("q", "u"), ("i", "n"), ("f", "i"), ("b", "i"), ("bi", "g"),
@@ -2407,7 +2408,7 @@ object ExtensionQueries {
     "quality_train_lr_bigram" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val split = PipelineOps.hashSplit(col("doc_id"))
-      val wq = TrainOps.trainLrSampled(docs.filter(split === "train"),
+      val wq = TrainOps.trainLr(docs.filter(split === "train"),
         lrLabel, dim = 512, rounds = 24, lrNum = 400L, lrDen = 1L,
         sampleMilli = 500, ngram = 2)
       TrainOps.lrScore(docs.filter(split === "test"), lrLabel, wq,
@@ -2447,7 +2448,7 @@ object ExtensionQueries {
     // feature mass, read from the same one-pass aggregate.
     "quality_train_lr_sampled" -> { (s, dir) =>
       TrainOps.weightsDf(s,
-        TrainOps.trainLrSampled(Tables.documents(s, dir), lrLabel,
+        TrainOps.trainLr(Tables.documents(s, dir), lrLabel,
           dim = 64, rounds = 24, lrNum = 400L, lrDen = 1L,
           sampleMilli = 500)).orderBy("j")
     },
@@ -2457,7 +2458,7 @@ object ExtensionQueries {
     "quality_train_lr_sampled_holdout" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val split = PipelineOps.hashSplit(col("doc_id"))
-      val wq = TrainOps.trainLrSampled(docs.filter(split === "train"),
+      val wq = TrainOps.trainLr(docs.filter(split === "train"),
         lrLabel, dim = 64, rounds = 24, lrNum = 400L, lrDen = 1L,
         sampleMilli = 500)
       TrainOps.lrScore(docs.filter(split === "test"), lrLabel, wq)

@@ -119,42 +119,16 @@ object Hist {
     v
   }
 
-  /** Reduction-tree depth for P partitions at the given fan-in. */
-  def treeDepth(partitions: Int, splitEvery: Int): Int = math.max(1,
-    math.ceil(math.log(partitions.toDouble) / math.log(splitEvery.toDouble)).toInt)
-
-  /** Explicit multi-level tree reduction — the reference's `split_every`
-    * control (`core.py:856-885`, default fan-in 8 from `histogram.yaml:10`).
-    * Spark's partial/final hash agg is 2 levels and suffices for bin-count-
-    * sized states; this RDD `treeAggregate` path is the knob for the
-    * extreme regime (huge bin count × very many partitions) where even the
-    * final agg's fan-in should be bounded: depth = ceil(log_splitEvery(P)).
-    * `splitEvery = None` reads [[SplitEveryConf]] (reference: yaml config).
-    * Returns the dense flow-inclusive array driver-side. */
+  /** Explicit bounded-fan-in tree reduction — the reference's
+    * `split_every` control (`core.py:856-885`, default fan-in 8 from
+    * `histogram.yaml:10`): [[fillDense]]'s merged buffer, returned as the
+    * dense flow-inclusive array driver-side (row-major, [[flatIndexCol]]
+    * order). `splitEvery = None` reads [[SplitEveryConf]] (reference:
+    * yaml config). */
   def fillTree(spec: HistSpec, df: DataFrame, cols: Seq[Column],
-      weight: Option[Column] = None, splitEvery: Option[Int] = None): Array[Double] = {
-    val fanIn = splitEvery.getOrElse(resolveSplitEvery(df.sparkSession))
-    require(axesNumeric(spec), "fillTree requires numeric axes")
-    val totalL = spec.denseBinCount(flow = true)
-    require(totalL > 0 && totalL <= (1L << 28),
-      s"fillTree dense buffer out of range: $totalL bins")
-    val total = totalL.toInt
-    val idx = flatIndexCol(spec, cols)
-    val w = weight.getOrElse(lit(1.0)).cast(DoubleType)
-    val rows = df.select(idx.as("__i"), w.as("__w"))
-      // circular axes emit NULL keys for non-finite values; NULL weights
-      // are no-contribution rows — both would NPE Row.getLong/getDouble
-      .filter(col("__i").isNotNull && col("__w").isNotNull)
-      .rdd.map(r => (r.getLong(0), r.getDouble(1)))
-    val p = math.max(rows.getNumPartitions, 1)
-    val depth = treeDepth(p, fanIn)
-    rows.treeAggregate(new Array[Double](total))(
-      seqOp = (buf, iw) => {
-        if (iw._1 >= 0 && iw._1 < total) buf(iw._1.toInt) += iw._2; buf
-      },
-      combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-      depth = depth)
-  }
+      weight: Option[Column] = None, splitEvery: Option[Int] = None): Array[Double] =
+    denseBuffer(spec, df, cols, weight, splitEvery).collect().head
+      .getSeq[Double](0).toArray
 
   /** Flat (row-major) bin index over all axes incl. flow:
     * idx = Σ_d i_d * stride_d with stride = Π of later dims' (n+2).
@@ -193,10 +167,26 @@ object Hist {
     * `splitEvery = None` reads [[SplitEveryConf]] (reference yaml config). */
   def fillDense(spec: HistSpec, df: DataFrame, cols: Seq[Column],
       weight: Option[Column] = None, splitEvery: Option[Int] = None): DataFrame = {
-    require(axesNumeric(spec), "fillDense requires numeric (indexed) axes")
+    val merged = denseBuffer(spec, df, cols, weight, splitEvery)
+    // flat index → per-axis indices (row-major strides, matching
+    // flatIndexCol); `div` keeps everything integral
+    val dims = spec.axes.map(a => (a.nBins + 2).toLong)
+    val strides = dims.scanRight(1L)(_ * _).tail
+    val idxCols = strides.zip(dims).zipWithIndex.map { case ((s, n), d) =>
+      expr(s"CAST(__pos AS BIGINT) div ${s}L % ${n}L").as(s"i$d")
+    }
+    merged.select(posexplode(col("__h")).as(Seq("__pos", "value")))
+      .select(idxCols :+ col("value"): _*)
+  }
+
+  /** [[fillDense]]'s reduction: one row, one column `__h`, the merged
+    * dense buffer. */
+  private def denseBuffer(spec: HistSpec, df: DataFrame, cols: Seq[Column],
+      weight: Option[Column], splitEvery: Option[Int]): DataFrame = {
+    require(axesNumeric(spec), "dense fill requires numeric (indexed) axes")
     val totalL = spec.denseBinCount(flow = true)
     require(totalL > 0 && totalL <= (1L << 26),
-      s"fillDense dense buffer out of range: $totalL bins")
+      s"dense fill buffer out of range: $totalL bins")
     val total = totalL.toInt
     val fanIn = splitEvery.getOrElse(resolveSplitEvery(df.sparkSession))
     // the conf path validates in resolveSplitEvery; the explicit path must
@@ -209,39 +199,29 @@ object Hist {
     // plan-only partition probe (split enumeration for parquet scans) —
     // sizes the reduction tree to the real partial count
     val p = math.max(rows.rdd.getNumPartitions, 1)
-    val merged =
-      if (p <= fanIn) {
-        // few enough partials that the final reducer's fan-in is already
-        // bounded — single-level aggregation
-        rows.agg(graft.functions.DenseHistAgg(col("__i"), col("__w"), total).as("__h"))
-      } else {
-        var groups = math.ceil(p.toDouble / fanIn).toInt
-        var h = rows
-          .select(pmod(spark_partition_id().cast("long"), lit(groups.toLong)).as("__g"),
-            col("__i"), col("__w"))
-          .groupBy(col("__g"))
-          .agg(graft.functions.DenseHistAgg(col("__i"), col("__w"), total).as("__h"))
-        while (groups > 1) {
-          val next = math.ceil(groups.toDouble / fanIn).toInt
-          h =
-            if (next <= 1)
-              h.agg(graft.functions.DenseMergeAgg(col("__h"), total).as("__h"))
-            else h.select(pmod(col("__g"), lit(next.toLong)).as("__g"), col("__h"))
-              .groupBy(col("__g"))
-              .agg(graft.functions.DenseMergeAgg(col("__h"), total).as("__h"))
-          groups = next
-        }
-        h.select(col("__h"))
+    if (p <= fanIn) {
+      // few enough partials that the final reducer's fan-in is already
+      // bounded — single-level aggregation
+      rows.agg(graft.functions.DenseHistAgg(col("__i"), col("__w"), total).as("__h"))
+    } else {
+      var groups = math.ceil(p.toDouble / fanIn).toInt
+      var h = rows
+        .select(pmod(spark_partition_id().cast("long"), lit(groups.toLong)).as("__g"),
+          col("__i"), col("__w"))
+        .groupBy(col("__g"))
+        .agg(graft.functions.DenseHistAgg(col("__i"), col("__w"), total).as("__h"))
+      while (groups > 1) {
+        val next = math.ceil(groups.toDouble / fanIn).toInt
+        h =
+          if (next <= 1)
+            h.agg(graft.functions.DenseMergeAgg(col("__h"), total).as("__h"))
+          else h.select(pmod(col("__g"), lit(next.toLong)).as("__g"), col("__h"))
+            .groupBy(col("__g"))
+            .agg(graft.functions.DenseMergeAgg(col("__h"), total).as("__h"))
+        groups = next
       }
-    // flat index → per-axis indices (row-major strides, matching
-    // flatIndexCol); `div` keeps everything integral
-    val dims = spec.axes.map(a => (a.nBins + 2).toLong)
-    val strides = dims.scanRight(1L)(_ * _).tail
-    val idxCols = strides.zip(dims).zipWithIndex.map { case ((s, n), d) =>
-      expr(s"CAST(__pos AS BIGINT) div ${s}L % ${n}L").as(s"i$d")
+      h.select(col("__h"))
     }
-    merged.select(posexplode(col("__h")).as(Seq("__pos", "value")))
-      .select(idxCols :+ col("value"): _*)
   }
 
   /** Density normalization: value / (Σvalue * binWidth). The reference

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Checkpoints._
+import scala.collection.mutable
 
 /** BPE (byte-pair-encoding) merge induction — tokenizer training as a
   * relational workload (Sennrich et al. 2016, the word-dictionary
@@ -163,26 +164,90 @@ object BpeOps {
     trainFromDict(byteWordDict(docs, textCol), nMerges)
 
   /** The sequential training loop over any prepared (freq, symbols)
-    * dictionary — shared by the code-point and byte-level modes. */
-  def trainFromDict(dict0: DataFrame, nMerges: Int): Seq[(String, String)] = {
+    * dictionary — shared by the code-point and byte-level modes: the
+    * [[mergeRounds]] loop over pair counts, one merge per round. */
+  def trainFromDict(dict0: DataFrame, nMerges: Int): Seq[(String, String)] =
+    mergeRounds(dict0, nMerges, byCount, topK = 1)(takeHead).merges
+
+  /** A trainer's merges plus its driver round-trip count (the cost the
+    * batched modes cut; a dictionary that runs out of pairs adds one
+    * empty probe round). `nbrOverflowRounds` counts the rounds whose
+    * [[trainWordpieceChained]] neighbor collect hit [[WpChainNbrCap]]
+    * (overflow degrades that round to one exact merge, never silent
+    * wrongness) — 0 for every other trainer. */
+  final case class TrainResult(merges: Seq[(String, String)], rounds: Int,
+      nbrOverflowRounds: Int = 0)
+
+  /** A round's acceptance rule: given the round's top candidates
+    * (l, r, key) in rank order, the number of merges still owed and the
+    * running symbol vocabulary, return the merges to apply this round,
+    * in order — at least one, at most the number owed. */
+  private type Accept = (IndexedSeq[(String, String, Long)], Int,
+    mutable.Set[String]) => Seq[(String, String)]
+
+  /** Pair counts as a ranked relation (l, r, key) — the BPE objective. */
+  private def byCount(dict: DataFrame): DataFrame =
+    pairCounts(dict).select(col("l"), col("r"), col("pair_freq").as("key"))
+
+  /** The sequential rule: the argmax alone. */
+  private val takeHead: Accept = (top, _, _) => Seq((top.head._1, top.head._2))
+
+  /** The approximate tiers' rule: in rank order, accept every candidate
+    * sharing no symbol with a pair already accepted this round (skipped,
+    * not batch-ending). `collisionFree` also skips a candidate whose
+    * concatenation equals a symbol touched this round or already in the
+    * vocabulary (e.g. (a,bc) after (ab,c)), so no merge list holds a
+    * duplicate, ambiguous symbol. */
+  private def disjointSkip(collisionFree: Boolean): Accept = { (top, owed, vocab) =>
+    val touched = mutable.Set.empty[String]
+    top.iterator.filter { case (l, r, _) =>
+      val c = l + r
+      val ok = !touched(l) && !touched(r) &&
+        (!collisionFree || (!touched(c) && !vocab(c)))
+      if (ok) { touched ++= Seq(l, r, c); if (collisionFree) vocab += c }
+      ok
+    }.take(owed).map(t => (t._1, t._2)).toSeq
+  }
+
+  /** The one round loop of every merge trainer but the chained one: per
+    * driver round, rank the current dictionary's pairs (`rank` gives
+    * (l, r, key); key descending, ties (l, r) ascending), collect the
+    * top `topK`, let `accept` pick the round's merges, and apply them as
+    * one chained rewrite behind a lazy barrier, so the rewrite
+    * materializes inside the next round's collect. Stops after
+    * `nMerges` merges or when no pair remains. `withVocab` collects the
+    * initial symbols once (one small job) for rules that gate on
+    * concatenation collisions; those rules add the symbols they create. */
+  private def mergeRounds(dict0: DataFrame, nMerges: Int,
+      rank: DataFrame => DataFrame, topK: Int, withVocab: Boolean = false)(
+      accept: Accept): TrainResult = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var dict: DataFrame = dict0.lineageBarrier(false)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var round = 0
-    while (round < nMerges) {
-      val top = pairCounts(dict)
-        .orderBy(col("pair_freq").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty) round = nMerges // dictionary fully merged
+    require(topK >= 1, s"topK must be >= 1, got $topK")
+    var dict = dict0.lineageBarrier(false)
+    val vocab = mutable.Set.empty[String]
+    if (withVocab) {
+      val spark = dict0.sparkSession
+      import spark.implicits._
+      vocab ++= dict.select(explode(col("symbols")).as("s"))
+        .distinct().as[String].collect()
+    }
+    val merges = mutable.ArrayBuffer.empty[(String, String)]
+    var rounds = 0
+    var exhausted = false
+    while (!exhausted && merges.size < nMerges) {
+      val top = rank(dict)
+        .orderBy(col("key").desc, col("l").asc, col("r").asc)
+        .limit(topK).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toIndexedSeq
+      rounds += 1
+      if (top.isEmpty) exhausted = true
       else {
-        val (l, r) = (top(0).getString(0), top(0).getString(1))
-        merges += ((l, r))
-        dict = dict.withColumn("symbols", applyMerge(l, r))
-          .lineageBarrier(false)
-        round += 1
+        val accepted = accept(top, nMerges - merges.size, vocab)
+        merges ++= accepted
+        dict = applyMerges(dict, accepted).lineageBarrier(false)
       }
     }
-    merges.toSeq
+    TrainResult(merges.toSeq, rounds)
   }
 
   /** [[train]] with BATCHED rounds: per driver round-trip, collect the
@@ -223,76 +288,39 @@ object BpeOps {
     * the K-th count (included in the dominance bound whenever the
     * collect was truncated). The scan stops at the first rejection —
     * accepted pairs are always a prefix of the round-start order, which
-    * is what makes (b) a complete argument.
-    *
-    * Returns the merges plus the driver round-trip count (the exhibit
-    * [[train]] comparisons measure). `nbrOverflowRounds` counts the
-    * rounds whose [[trainWordpieceChained]] neighbor collect hit
-    * [[WpChainNbrCap]] (overflow degrades that round to one exact
-    * merge, never silent wrongness) — 0 for every other trainer. */
-  final case class TrainResult(merges: Seq[(String, String)], rounds: Int,
-      nbrOverflowRounds: Int = 0)
-
+    * is what makes (b) a complete argument. */
   def trainBatched(docs: DataFrame, nMerges: Int, textCol: String = "text",
-      topK: Int = 64): TrainResult = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    require(topK >= 1, s"topK must be >= 1, got $topK")
-    var dict = wordDict(docs, textCol).lineageBarrier(false)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // exact symbol vocabulary for gate (c): initial distinct symbols
-    // (alphabet + end marker — one tiny collect), then one string per
-    // accepted merge
-    val vocab = scala.collection.mutable.Set.empty[String]
-    vocab ++= dict.select(explode(col("symbols")).as("s"))
-      .distinct().as[String].collect()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var rounds = 0
-    var exhausted = false
-    while (!exhausted && merges.size < nMerges) {
-      val top = pairCounts(dict)
-        .orderBy(col("pair_freq").desc, col("l").asc, col("r").asc)
-        .limit(topK).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      rounds += 1
-      if (top.isEmpty) exhausted = true
-      else {
-        val truncated = top.length == topK
-        val touched = scala.collection.mutable.Set.empty[String]
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        var idx = 0
-        var stop = false
-        while (!stop && idx < top.length &&
-            merges.size + accepted.size < nMerges) {
-          val (l, r, f) = top(idx)
-          def accept(): Unit = {
-            accepted += ((l, r)); touched ++= Seq(l, r, l + r)
-            // gate (c): a concat that conflates with an existing symbol
-            // invalidates the created-pair bound for LATER same-round
-            // candidates — apply this merge, then end the batch
-            if (vocab(l + r)) stop = true else vocab += l + r
-          }
-          if (accepted.isEmpty) accept()
-          else if (touched(l) || touched(r)) stop = true
-          else {
-            // dominance bound: the largest round-start count any pair
-            // interacting with the touched set could have — suffix pairs
-            // that touch, plus the truncation tail
-            val suffixInteract = top.iterator.drop(idx + 1)
-              .filter(p => touched(p._1) || touched(p._2))
-              .map(_._3).maxOption.getOrElse(Long.MinValue)
-            val bound = if (truncated) math.max(suffixInteract, top.last._3)
-              else suffixInteract
-            if (f > bound) accept() else stop = true
-          }
-          idx += 1
-        }
-        merges ++= accepted
-        dict = applyMerges(dict, accepted.toSeq).lineageBarrier(false)
+      topK: Int = 64): TrainResult =
+    mergeRounds(wordDict(docs, textCol), nMerges, byCount, topK,
+        withVocab = true) { (top, owed, vocab) =>
+      val truncated = top.length == topK
+      val touched = mutable.Set.empty[String]
+      val accepted = mutable.ArrayBuffer.empty[(String, String)]
+      // false when the concatenation is already a symbol (gate (c)): the
+      // merge is applied, then the batch ends
+      def accept(l: String, r: String): Boolean = {
+        accepted += ((l, r)); touched ++= Seq(l, r, l + r)
+        vocab.add(l + r)
       }
+      // scan in rank order; the first rejection ends the batch
+      top.indices.iterator.takeWhile(_ => accepted.size < owed).forall { idx =>
+        val (l, r, f) = top(idx)
+        if (accepted.isEmpty) accept(l, r)
+        else if (touched(l) || touched(r)) false
+        else {
+          // dominance bound: the largest round-start count any pair
+          // interacting with the touched set could have — suffix pairs
+          // that touch, plus the truncation tail
+          val suffixInteract = top.iterator.drop(idx + 1)
+            .filter(p => touched(p._1) || touched(p._2))
+            .map(_._3).maxOption.getOrElse(Long.MinValue)
+          val bound = if (truncated) math.max(suffixInteract, top.last._3)
+            else suffixInteract
+          f > bound && accept(l, r)
+        }
+      }
+      accepted.toSeq
     }
-    TrainResult(merges.toSeq, rounds)
-  }
 
   /** APPROXIMATE batched training for production vocab sizes — the
     * parallel-trainer practice ([[trainBatched]] stays the exact mode):
@@ -323,38 +351,9 @@ object BpeOps {
     *    rounds and overlap at exhibit scale. Use the exact modes when
     *    the merge list must be replayable bit-for-bit. */
   def trainApprox(docs: DataFrame, nMerges: Int, textCol: String = "text",
-      topK: Int = 64): TrainResult = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    require(topK >= 1, s"topK must be >= 1, got $topK")
-    var dict = wordDict(docs, textCol).lineageBarrier(false)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var rounds = 0
-    var exhausted = false
-    while (!exhausted && merges.size < nMerges) {
-      val top = pairCounts(dict)
-        .orderBy(col("pair_freq").desc, col("l").asc, col("r").asc)
-        .limit(topK).collect()
-        .map(r => (r.getString(0), r.getString(1)))
-      rounds += 1
-      if (top.isEmpty) exhausted = true
-      else {
-        val touched = scala.collection.mutable.Set.empty[String]
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        var idx = 0
-        while (idx < top.length && merges.size + accepted.size < nMerges) {
-          val (l, r) = top(idx)
-          if (!touched(l) && !touched(r)) {
-            accepted += ((l, r))
-            touched ++= Seq(l, r, l + r)
-          }
-          idx += 1
-        }
-        merges ++= accepted
-        dict = applyMerges(dict, accepted.toSeq).lineageBarrier(false)
-      }
-    }
-    TrainResult(merges.toSeq, rounds)
-  }
+      topK: Int = 64): TrainResult =
+    mergeRounds(wordDict(docs, textCol), nMerges, byCount, topK)(
+      disjointSkip(collisionFree = false))
 
   /** The dictionary after applying an (ordered) merge list — e.g. the
     * output of [[train]] — how a trained tokenizer is APPLIED: the
@@ -757,242 +756,13 @@ object BpeOps {
     trainWordpieceFromDict(wordDict(docs, textCol), nMerges)
 
   def trainWordpieceFromDict(dict0: DataFrame, nMerges: Int)
-      : Seq[(String, String)] = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var dict: DataFrame = dict0.lineageBarrier(false)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var round = 0
-    while (round < nMerges) {
-      val top = wordpieceScores(dict)
-        .orderBy(col("score_q").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty) round = nMerges // dictionary fully merged
-      else {
-        val (l, r) = (top(0).getString(0), top(0).getString(1))
-        merges += ((l, r))
-        dict = dict.withColumn("symbols", applyMerge(l, r))
-          .lineageBarrier(false)
-        round += 1
-      }
-    }
-    merges.toSeq
-  }
+      : Seq[(String, String)] =
+    mergeRounds(dict0, nMerges, byScore, topK = 1)(takeHead).merges
 
-  /** [[wordpieceScores]] plus the per-symbol NEIGHBOR-RATIO maxima the
-    * batched trainer's dominance gate needs: for each pair row, the
-    * round-start values nbl(s) = max over pairs (x, s) of
-    * ⌈pf(x,s)·10¹⁸ / sf(x)⌉ and nbr(s) = max over pairs (s, x) of
-    * ⌈pf(s,x)·10¹⁸ / sf(x)⌉, attached for both of the row's symbols
-    * (0 when the symbol never occurs on that side). Since
-    * pf(x,s) ≤ sf(x), every value fits BIGINT (≤ 10¹⁸); the ceiling
-    * keeps them UPPER bounds after the floor-to-integer, which is the
-    * direction the dominance proof needs. Same vocabulary-sized shape
-    * as [[wordpieceScores]] — two extra symbol-keyed aggregates. */
-  private[ops] def wordpieceScoresBounded(dict: DataFrame): DataFrame = {
-    val sym = dict.select(col("freq"), explode(col("symbols")).as("s"))
-      .groupBy("s").agg(sum("freq").as("sf"))
-    val pc = pairCounts(dict)
-      .join(sym.select(col("s").as("l"), col("sf").as("lf")), "l")
-      .join(sym.select(col("s").as("r"), col("sf").as("rf")), "r")
-    def ceilRatio(sf: String): Column = expr(
-      s"CAST((CAST(pair_freq AS DECIMAL(38,0)) * 1000000000000000000 " +
-        s"+ $sf - 1) div $sf AS BIGINT)")
-    val nbl = pc.groupBy(col("r").as("s"))
-      .agg(max(ceilRatio("lf")).as("nbl"))
-    val nbr = pc.groupBy(col("l").as("s"))
-      .agg(max(ceilRatio("rf")).as("nbr"))
-    pc.withColumn("score_q",
-        expr("CAST((CAST(pair_freq AS DECIMAL(38,0)) * " +
-          "1000000000000000000) div " +
-          "(CAST(lf AS DECIMAL(38,0)) * rf) AS BIGINT)"))
-      .join(nbl.select(col("s").as("l"), col("nbl").as("nbl_l")), Seq("l"), "left")
-      .join(nbr.select(col("s").as("l"), col("nbr").as("nbr_l")), Seq("l"), "left")
-      .join(nbl.select(col("s").as("r"), col("nbl").as("nbl_r")), Seq("r"), "left")
-      .join(nbr.select(col("s").as("r"), col("nbr").as("nbr_r")), Seq("r"), "left")
-      .select(col("l"), col("r"), col("pair_freq"), col("lf"), col("rf"),
-        col("score_q"),
-        coalesce(col("nbl_l"), lit(0L)).as("nbl_l"),
-        coalesce(col("nbr_l"), lit(0L)).as("nbr_l"),
-        coalesce(col("nbl_r"), lit(0L)).as("nbl_r"),
-        coalesce(col("nbr_r"), lit(0L)).as("nbr_r"))
-  }
-
-  /** [[trainWordpiece]] with BATCHED rounds — the [[trainBatched]]
-    * driver-round-trip discipline ported to the likelihood key, with an
-    * acceptance argument that accounts for the WordPiece-specific
-    * hazard: merging (l, r) SHRINKS the part frequencies sf(l), sf(r),
-    * so a surviving pair touching l or r can have its score RISE (BPE
-    * counts only fall). Output is BIT-IDENTICAL to [[trainWordpiece]].
-    *
-    * Soundness, from round-start quantities only. Let the accepted
-    * prefix be p₁..pₘ (mutually symbol-disjoint by gate (a)), touched
-    * set T = ∪{lⱼ, rⱼ, lⱼ+rⱼ}. Applying the prefix:
-    *  - creates NO new adjacency between two untouched symbols, and
-    *    never raises any old-old pair count — so every untouched pair
-    *    keeps its EXACT round-start (score, l, r) rank;
-    *  - for lⱼ ≠ rⱼ the leftmost-nonoverlap fold consumes EVERY (lⱼ,rⱼ)
-    *    adjacency (two occurrences cannot overlap), so the post-apply
-    *    part counts are EXACT: sf′(lⱼ) = lf−pf, sf′(rⱼ) = rf−pf,
-    *    sf′(cⱼ) = pf; for self-pairs (lⱼ = rⱼ) they are bracketed:
-    *    sf′(l) ∈ [lf−2pf, lf−pf], sf′(c) ∈ [⌈pf/2⌉, pf];
-    *  - a changed/created pair's new score is bounded by round-start
-    *    stats: an existing pair (x, t), x untouched, t ∈ {lⱼ,rⱼ}, has
-    *    score′ ≤ pf(x,t)/(sf(x)·sf′(t)) ≤ nbl(t)/d(t); a CREATED pair
-    *    (x, cⱼ) inherits its occurrences from donor (x, lⱼ) so
-    *    score′ ≤ nbl(lⱼ)/d(cⱼ) (mirrored on the right via nbr); and a
-    *    pair with BOTH symbols in T is bounded by
-    *    min(u(a), u(b))/(d(a)·d(b)) using the brackets above (pf′ ≤
-    *    min of the parts' upper bounds). All ceilings are taken in the
-    *    10¹⁸ fixed-point, so comparing the candidate's floored score_q
-    *    strictly above the bound implies strict true-score dominance.
-    * A candidate is accepted iff it is untouched AND its score_q
-    * strictly exceeds every threat bound accrued so far; the first
-    * rejection ends the batch, so accepted pairs are a prefix of the
-    * round-start (score_q desc, l, r) order — exactly the sequential
-    * trajectory. Gate (c) (concatenation collides with an existing
-    * vocab string) and an unbounded threat (a part's lower bound hits
-    * 0 while its upper bound doesn't) apply-then-end the batch, same
-    * as [[trainBatched]]'s collision rule. */
-  def trainWordpieceBatched(docs: DataFrame, nMerges: Int,
-      textCol: String = "text", topK: Int = 64): TrainResult =
-    trainWordpieceBatchedFromDict(wordDict(docs, textCol), nMerges, topK)
-
-  /** One touched symbol's dominance bookkeeping: post-apply part-count
-    * bracket [d, u] and the round-start EDGE symbols (le = leftmost
-    * original symbol, re = rightmost) — a post-apply adjacency (a, b)
-    * requires a round-start adjacency (re(a), le(b)), which is what
-    * makes the both-touched bound exact-donor rather than min-of-
-    * brackets (the latter degenerates to the candidates' own score
-    * magnitude in the exclusive-pair regime WordPiece's argmax
-    * prefers). */
-  private final case class WpSym(u: BigInt, d: BigInt, le: String, re: String)
-
-  def trainWordpieceBatchedFromDict(dict0: DataFrame, nMerges: Int,
-      topK: Int = 64): TrainResult = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    require(topK >= 1, s"topK must be >= 1, got $topK")
-    val Scale = BigInt("1000000000000000000")
-    def ceilDiv(a: BigInt, b: BigInt): BigInt = (a + b - 1) / b
-    var dict: DataFrame = dict0.lineageBarrier(false)
-    val spark = dict0.sparkSession
-    import spark.implicits._
-    val vocab = scala.collection.mutable.Set.empty[String]
-    vocab ++= dict.select(explode(col("symbols")).as("s"))
-      .distinct().as[String].collect()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var rounds = 0
-    var exhausted = false
-    while (!exhausted && merges.size < nMerges) {
-      // ONE collect per round: the top-K candidate rows PLUS every
-      // round-start pair whose BOTH symbols appear in a top-K row (the
-      // exact donor-edge counts the both-touched bound reads). The
-      // scored relation is barriered so the two branches share one
-      // materialization.
-      val scored = wordpieceScoresBounded(dict).lineageBarrier(false)
-      val topRel = scored
-        .orderBy(col("score_q").desc, col("l").asc, col("r").asc)
-        .limit(topK)
-      val syms = topRel
-        .select(explode(array(col("l"), col("r"))).as("s")).distinct()
-      val crossRel = scored
-        .join(syms.select(col("s").as("l")), "l")
-        .join(syms.select(col("s").as("r")), "r")
-      val rows = topRel.withColumn("in_top", lit(true))
-        .unionByName(crossRel.withColumn("in_top", lit(false))
-          .select(topRel.columns.toIndexedSeq.map(col) :+ col("in_top"): _*))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
-          r.getLong(7), r.getLong(8), r.getLong(9), r.getBoolean(10)))
-      rounds += 1
-      // candidates = exactly the limit's rows, in rank order; the cross
-      // rows feed only the round-start pair-count lookup
-      import scala.math.Ordering.Implicits._
-      val top = rows.filter(_._11)
-        .sortBy(t => (-t._6, cpKey(t._1), cpKey(t._2)))
-      val pfRS: Map[(String, String), Long] =
-        rows.map(t => (t._1, t._2) -> t._3).toMap
-      if (top.isEmpty) exhausted = true
-      else {
-        val touched = scala.collection.mutable.Set.empty[String]
-        val ud = scala.collection.mutable.LinkedHashMap.empty[String, WpSym]
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        var bmax = BigInt(-1) // max threat bound (true-score × 10¹⁸, ceiled)
-        var idx = 0
-        var stop = false
-        while (!stop && idx < top.length &&
-            merges.size + accepted.size < nMerges) {
-          val (l, r, pf, lf, rf, scoreQ, nblL, nbrL, nblR, nbrR, _) = top(idx)
-          if (accepted.nonEmpty &&
-              (touched(l) || touched(r) || !(BigInt(scoreQ) > bmax)))
-            stop = true
-          else {
-            accepted += ((l, r))
-            val c = l + r
-            val self = l == r
-            // post-apply part-count brackets — EXACT when l != r (the
-            // leftmost-nonoverlap fold consumes every (l, r) adjacency,
-            // each consuming one l and one r and creating one c); for
-            // self-pairs the merge count m sits in [⌈pf/2⌉, pf] and
-            // consumes 2m parts
-            val sL =
-              if (self) WpSym(BigInt(lf - pf),
-                BigInt(math.max(0L, lf - 2 * pf)), l, l)
-              else WpSym(BigInt(lf - pf), BigInt(lf - pf), l, l)
-            val sR = if (self) sL
-              else WpSym(BigInt(rf - pf), BigInt(rf - pf), r, r)
-            val sC =
-              if (self) WpSym(BigInt(pf), BigInt((pf + 1) / 2), l, r)
-              else WpSym(BigInt(pf), BigInt(pf), l, r)
-            // a part whose count may survive (u > 0) but whose lower
-            // bound hits 0 cannot anchor any further bound: apply this
-            // merge, end the batch
-            def addThreat(numQ: BigInt, den: BigInt, u: BigInt): Unit =
-              if (numQ.signum == 0 || u.signum == 0) ()
-              else if (den.signum <= 0) stop = true
-              else { val t = ceilDiv(numQ, den); if (t > bmax) bmax = t }
-            // T1: surviving old pairs (x, l)/(l, x)/(x, r)/(r, x) with x
-            // untouched: counts only fall, sf(x) is static, so the
-            // neighbor-ratio maxima over the shrunk part count bound them
-            addThreat(BigInt(nblL), sL.d, sL.u)
-            addThreat(BigInt(nbrL), sL.d, sL.u)
-            if (!self) { addThreat(BigInt(nblR), sR.d, sR.u)
-              addThreat(BigInt(nbrR), sR.d, sR.u) }
-            // T2: created pairs (x, c)/(c, x), x untouched, via their
-            // donors (x, l)/(r, x)
-            addThreat(BigInt(nblL), sC.d, sC.u)
-            addThreat(BigInt(nbrR), sC.d, sC.u)
-            // T3: pairs with BOTH members touched — a post-apply (a, b)
-            // adjacency requires the round-start (re(a), le(b))
-            // adjacency, whose exact count is in the collected cross
-            // relation (its symbols are top-K symbols by construction)
-            val newSyms: Seq[WpSym] =
-              (if (self) Seq(sL) else Seq(sL, sR)) :+ sC
-            val olds = ud.values.toSeq
-            for (a <- newSyms; b <- olds ++ newSyms) {
-              def t3(x: WpSym, y: WpSym): Unit = {
-                val pfEdge = BigInt(pfRS.getOrElse((x.re, y.le), 0L))
-                addThreat(pfEdge.min(x.u).min(y.u) * Scale,
-                  x.d * y.d, x.u.min(y.u))
-              }
-              t3(a, b); t3(b, a)
-            }
-            Seq(l -> sL, r -> sR, c -> sC).foreach { case (s, b) =>
-              if (!ud.contains(s)) ud(s) = b }
-            touched ++= Seq(l, r, c)
-            // gate (c): concat conflates with an existing symbol — the
-            // donor bound no longer covers (x, c)'s stacked occurrences;
-            // apply this merge, then end the batch
-            if (vocab(c)) stop = true else vocab += c
-          }
-          idx += 1
-        }
-        merges ++= accepted
-        dict = applyMerges(dict, accepted.toSeq).lineageBarrier(false)
-      }
-    }
-    TrainResult(merges.toSeq, rounds)
-  }
+  /** [[wordpieceScores]] as a ranked relation (l, r, key) — the
+    * WordPiece objective. */
+  private def byScore(dict: DataFrame): DataFrame =
+    wordpieceScores(dict).select(col("l"), col("r"), col("score_q").as("key"))
 
   /** Binary (code-point) sort key for driver-side re-sorts that must
     * mirror Spark's string ordering. */
@@ -1004,10 +774,13 @@ object BpeOps {
     * tracking for the round (the round still accepts its argmax). */
   val WpChainNbrCap: Int = 300000
 
-  /** EXACT CHAIN-FOLLOWING batched WordPiece — the answer to the
-    * measured chaining that defeats [[trainWordpieceBatched]]'s bound
-    * gate (a merge's created pair usually becomes the next argmax, and
-    * a bound can never ACCEPT a created pair). Per driver round, ONE
+  /** EXACT CHAIN-FOLLOWING batched WordPiece. Sequential WordPiece
+    * CHAINS: a merge shrinks its parts' frequencies, and its created
+    * pair (x, l+r) usually becomes the next argmax. A batch proven from
+    * round-start statistics alone can never accept such a created pair,
+    * so on natural corpora it takes one merge per round (measured
+    * round_reduction 1.00); this trainer accepts the chain child from
+    * exactly tracked post-merge state instead. Per driver round, ONE
     * collect brings back: the top-K pairs, the COMPLETE neighbor pair
     * lists of every top-K symbol, and the round-start adjacent TRIPLES
     * around every top-K pair. With those, the driver maintains the
@@ -1030,9 +803,9 @@ object BpeOps {
     *    context — the documented generalization: collecting W-gram
     *    windows buys chain depth W−2 per step).
     * Output is BIT-IDENTICAL to [[trainWordpiece]] (differential-
-    * tested); rounds ≈ merges/2 on chain-structured corpora where the
-    * bound gate got 1.00, and ≥ the bound gate everywhere (exact
-    * tracking subsumes it on the exclusive-pair regime). Cost honesty:
+    * tested); rounds ≈ merges/2 on chain-structured corpora, and
+    * several merges per round on the exclusive-pair regime, where
+    * round-start dominance alone would already batch. Cost honesty:
     * each round's one collect is heavier than sequential's (triples +
     * neighbor lists ride along), so on a TINY dictionary sequential
     * can win local wall-clock (documents sf0.001: 20.9 s vs 10.0 s for
@@ -1217,66 +990,27 @@ object BpeOps {
     * parts' frequencies and its created pairs (x, l+r) inherit a
     * boosted score pf/(sf(x)·pf), so the next argmax is usually the
     * previous merge's own child (documents fixture: (m,n) → (u,mn) →
-    * (l,umn) → (o,lumn) → (c,olumn)). A round-start-only exact batch
-    * ([[trainWordpieceBatched]]) therefore degrades to one merge per
-    * round on natural corpora (exhibit: round_reduction 1.00 — vs
-    * BPE's ~2-3×, whose counts only fall); the exact CHAIN-FOLLOWING
-    * mode ([[trainWordpieceChained]]) recovers ~2.1-2.3× bit-identical
-    * by accepting each chain child from exactly-tracked post-merge
-    * state. The approx mode is the aggressive tier above both: rounds
-    * collapse toward nMerges/topK (measured 21×) at a QUANTIFIED
-    * merge-set divergence (exhibit overlap 0.117 — the likelihood key
-    * genuinely reorders under parallel acceptance; use the exact modes
-    * when the vocabulary must be replayable). Contract as
-    * [[trainApprox]]: accepted pairs are top-K at round start,
-    * mutually symbol-disjoint (order-independent rewrite), and
-    * `topK = 1` degenerates to exactly [[trainWordpiece]]. */
+    * (l,umn) → (o,lumn) → (c,olumn)). An exact batch proven from
+    * round-start statistics alone therefore takes one merge per round
+    * on natural corpora (measured round_reduction 1.00 — vs BPE's
+    * ~2-3×, whose counts only fall); the exact CHAIN-FOLLOWING mode
+    * ([[trainWordpieceChained]]) recovers ~2.1-2.3× bit-identical by
+    * accepting each chain child from exactly-tracked post-merge state.
+    * The approx mode is the aggressive tier above it: rounds collapse
+    * toward nMerges/topK (measured 21×) at a QUANTIFIED merge-set
+    * divergence (exhibit overlap 0.117 — the likelihood key genuinely
+    * reorders under parallel acceptance; use the exact modes when the
+    * vocabulary must be replayable). Contract as [[trainApprox]]:
+    * accepted pairs are top-K at round start, mutually symbol-disjoint
+    * (order-independent rewrite), and `topK = 1` degenerates to exactly
+    * [[trainWordpiece]]. Unlike [[trainApprox]], a candidate whose
+    * concatenation collides with an existing symbol, or with another
+    * accepted concatenation this round (e.g. (a,bc) and (ab,c) both
+    * yielding abc), is skipped. */
   def trainWordpieceApprox(docs: DataFrame, nMerges: Int,
-      textCol: String = "text", topK: Int = 64): TrainResult = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    require(topK >= 1, s"topK must be >= 1, got $topK")
-    var dict = wordDict(docs, textCol).lineageBarrier(false)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // running vocabulary (initial symbols + accepted concatenations):
-    // gate (c) of the batched trainer applied to the approx tier — a
-    // candidate whose concatenation collides with an existing symbol
-    // (or with another accepted concatenation this round, e.g. (a,bc)
-    // and (ab,c) both yielding abc) would put a duplicate, ambiguous
-    // symbol into the merge list
-    val vocab = scala.collection.mutable.Set.empty[String]
-    vocab ++= dict.select(explode(col("symbols")).as("s"))
-      .distinct().as[String].collect()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var rounds = 0
-    var exhausted = false
-    while (!exhausted && merges.size < nMerges) {
-      val top = wordpieceScores(dict)
-        .orderBy(col("score_q").desc, col("l").asc, col("r").asc)
-        .limit(topK).collect()
-        .map(r => (r.getString(0), r.getString(1)))
-      rounds += 1
-      if (top.isEmpty) exhausted = true
-      else {
-        val touched = scala.collection.mutable.Set.empty[String]
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        var idx = 0
-        while (idx < top.length && merges.size + accepted.size < nMerges) {
-          val (l, r) = top(idx)
-          if (!touched(l) && !touched(r) && !touched(l + r) &&
-              !vocab(l + r)) {
-            accepted += ((l, r))
-            touched ++= Seq(l, r, l + r)
-            vocab += l + r
-          }
-          idx += 1
-        }
-        merges ++= accepted
-        dict = applyMerges(dict, accepted.toSeq).lineageBarrier(false)
-      }
-    }
-    TrainResult(merges.toSeq, rounds)
-  }
+      textCol: String = "text", topK: Int = 64): TrainResult =
+    mergeRounds(wordDict(docs, textCol), nMerges, byScore, topK,
+      withVocab = true)(disjointSkip(collisionFree = true))
 
   /** Word-length cap for the greedy WordPiece apply (the
     * [[graft.ops.UnigramOps]] MaxWordLen discipline): the oracle chain

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Dataset, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.LogicalRDD
@@ -81,16 +83,34 @@ object Checkpoints {
   }
 
   /** Runs `body`, then unpersists (blocking) every RDD it persisted or
-    * checkpointed locally: a query's materializations end with the
-    * query, so their blocks do not pressure the queries after it. */
+    * checkpointed locally, and deletes the reliable checkpoint
+    * directories (`rdd-<id>` under the context's checkpoint directory)
+    * it wrote: a query's materializations end with the query, so their
+    * blocks and files do not pressure the queries after it. */
   def released[A](spark: SparkSession)(body: => A): A = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
+    val filesBefore = checkpointFiles(sc).toSet
     try body
-    finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!before.contains(id)) rdd.unpersist(blocking = true)
+    finally {
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before.contains(id)) rdd.unpersist(blocking = true)
+      }
+      checkpointFiles(sc).filterNot(filesBefore).foreach { p =>
+        p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+      }
     }
   }
+
+  /** The reliable checkpoint directories of this context's RDDs; none
+    * while no checkpoint directory is installed. */
+  private def checkpointFiles(sc: SparkContext): Seq[Path] =
+    sc.getCheckpointDir.toSeq.flatMap { dir =>
+      val root = new Path(dir)
+      val fs = root.getFileSystem(sc.hadoopConfiguration)
+      if (!fs.exists(root)) Nil
+      else fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith("rdd-")).toSeq
+    }
 
   implicit class BarrierOps[T](private val ds: Dataset[T]) extends AnyVal {
     def lineageBarrier(eager: Boolean = true): Dataset[T] =

@@ -158,30 +158,21 @@ object TrainOps {
     graft.functions.WeightSum(col("js"), wq) * lit(1000L)
 
   /** One gradient round: per-(feature) sums of the quantized per-row
-    * contributions tdz((σ−y)·x·Q). `labeled` = docFeatures ⋈ labels
-    * (columns js, y). Returns dim+1 rows (j, g) — the model-sized
-    * aggregate. */
-  def lrGradientRound(labeled: DataFrame, wq: Array[Long]): Array[BigInt] =
-    gradientRows(labeled, wq)._1
-
-  /** One SAMPLED gradient round: the identical aggregate restricted to
-    * the round's [[sampleBucket]] subset, returning (gradient, F_r)
-    * where F_r is the SAMPLE's total feature-activation mass — read
-    * from the same aggregate's per-key activation counts, so a sampled
-    * round pays exactly one (sample-sized) pass, no extra job. */
-  def lrGradientRoundSampled(labeled: DataFrame, wq: Array[Long],
-      round: Int, sampleMilli: Int): (Array[BigInt], Long) =
-    gradientRows(
-      labeled.filter(sampleBucket(col("doc_id"), round) <
-        lit(sampleMilli.toLong)), wq)
-
-  /** Shared gradient-aggregate body: per-feature quantized-contribution
-    * sums plus activation counts (the counts ride the same shuffle — at
-    * most dim+1 extra longs). Returns (gradient by j, Σ counts). */
-  private def gradientRows(labeled: DataFrame, wq: Array[Long])
-      : (Array[BigInt], Long) = {
+    * contributions tdz((σ−y)·x·Q) over `labeled` = docFeatures ⋈ labels
+    * (columns js, y), restricted to the round's [[sampleBucket]] subset
+    * when `sampleMilli` < 1000. Returns (gradient by j, F_r): dim+1
+    * model-sized sums plus F_r, the round's total feature-activation
+    * mass, read from the same aggregate's per-key activation counts
+    * (they ride the same shuffle, at most dim+1 extra longs), so a
+    * round is one pass and one job. */
+  private def gradientRound(labeled: DataFrame, wq: Array[Long], round: Int,
+      sampleMilli: Int): (Array[BigInt], Long) = {
     val d = wq.length - 1
-    val rows = labeled
+    val sampled =
+      if (sampleMilli == 1000) labeled
+      else labeled.filter(sampleBucket(col("doc_id"), round) <
+        lit(sampleMilli.toLong))
+    val rows = sampled
       .withColumn("zq", marginCol(wq))
       .select(col("y"),
         (lit(Z) + abs(col("zq")) + col("zq") -
@@ -209,88 +200,28 @@ object TrainOps {
     (out, mass)
   }
 
-  /** Batch-GD training loop: `rounds` fixed rounds from w = 0, learning
-    * rate lrNum/lrDen, labels y ∈ {0,1} from `label`. Returns the dim+1
-    * integer micro-unit weights (bias last). The feature relation is
-    * persisted across rounds (built once; each round re-reads it for
-    * the one gradient aggregate). */
+  /** Batch-GD training loop: `rounds` fixed rounds from w = 0 (or
+    * `init`), learning rate lrNum/lrDen, labels y ∈ {0,1} from `label`.
+    * Returns the dim+1 integer micro-unit weights (bias last). The
+    * feature relation is persisted across rounds (built once; each round
+    * re-reads it for the one gradient aggregate, which also materializes
+    * the persist in the first round).
+    *
+    * `sampleMilli` < 1000 is the 100 TB form: each round's gradient is
+    * computed over a deterministic hash-sampled subset ([[sampleBucket]]
+    * < sampleMilli, the round index in the hash so samples ROTATE —
+    * mini-batch GD with replayable batches), so per-round cost is
+    * corpus·sampleMilli/1000, not corpus. Every round normalizes its
+    * update by F_r, the feature mass its aggregate saw — the integer
+    * form of the per-batch mean gradient; at the default 1000 no sample
+    * filter is applied and F_r is the corpus mass F. The oracle twins
+    * replay the identical trajectory: [[trainLrSql]] for the full pass,
+    * [[trainLrSampledSql]] with the same rotating-subset predicate as
+    * pure SQL over (doc_id, round). */
   def trainLr(docs: DataFrame, label: Column, dim: Int, rounds: Int,
       lrNum: Long, lrDen: Long, ngram: Int = 1,
-      init: Array[Long] = null, startRound: Int = 0): Array[Long] = {
-    require(rounds >= 1 && startRound >= 0 && startRound + rounds <= 64,
-      s"need 1 <= rounds, 0 <= startRound, startRound + rounds <= 64; " +
-        s"got rounds=$rounds startRound=$startRound")
-    require(init == null || init.length == dim + 1,
-      s"init weights must have dim+1 = ${dim + 1} entries, " +
-        s"got ${if (init == null) "null" else init.length.toString}")
-    require(lrNum > 0 && lrDen > 0, s"lr must be positive: $lrNum/$lrDen")
-    val labeled = docFeatures(docs, dim, ngram)
-      .join(docs.select(col("doc_id"), label.cast("long").as("y")),
-        "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // F = total feature activations (the update's normalizer); one
-      // aggregate, also materializes the persist
-      val fRow = labeled.agg(count(lit(1)).as("n"),
-        sum(expr("CAST(size(js) AS BIGINT)")).as("f")).head()
-      val n = fRow.getLong(0)
-      require(n > 0, "trainLr: empty corpus")
-      val fAct = fRow.getLong(1)
-      val wq = if (init == null) Array.fill(dim + 1)(0L) else init.clone()
-      // guards EVERY downstream Long expression, not just z' itself:
-      // the largest is calibrationTable's 10*(Z+|z'|+z') <= 10*(Z+2|z'|),
-      // so cap |z'| <= Long.MaxValue/25 (then n1 <= 2(Z+|z'|) and the
-      // calibration numerator both stay < 2^63 with margin)
-      val wBound = Long.MaxValue / (25L * 1000L * (dim + 1))
-      // the decay divisor uses the GLOBAL round index, so a warm-started
-      // continuation walks the identical trajectory as the straight run:
-      // resume(train(R1), R2, startRound = R1) == train(R1 + R2)
-      // bit-for-bit (the RESUME LAW, spec-pinned and oracle-certified by
-      // quality_train_lr_resume hashing against the straight twin)
-      var r = startRound
-      while (r < startRound + rounds) {
-        val g = lrGradientRound(labeled, wq)
-        var j = 0
-        while (j <= dim) {
-          // 1/r Robbins-Monro decay: large early steps, stable late ones.
-          // Bound-check the BigInt BEFORE narrowing: .toLong wraps
-          // silently, so a blown-up update could alias back inside
-          // wBound (and math.abs(Long.MinValue) is negative) if the
-          // check ran on the narrowed value.
-          val newW = BigInt(wq(j)) - tdz(BigInt(lrNum) * g(j),
-            BigInt(lrDen) * fAct * 1000L * (r + 1))
-          require(newW.abs < wBound,
-            s"trainLr: weight $j overflowed the margin bound " +
-              s"(|w| >= $wBound) — lower the learning rate")
-          wq(j) = newW.toLong
-          j += 1
-        }
-        r += 1
-      }
-      wq
-    } finally labeled.unpersist()
-  }
-
-  /** SAMPLED batch-GD — the 100 TB form of [[trainLr]]'s loop: each
-    * round's gradient is computed over a deterministic hash-sampled
-    * subset ([[sampleBucket]] < sampleMilli, the round index in the
-    * hash so samples ROTATE — mini-batch GD with replayable batches),
-    * so per-round cost is corpus·sampleMilli/1000, not corpus. The
-    * update normalizes by F_r, the SAMPLE's feature mass (read from the
-    * same aggregate — still one pass per round), which is the integer
-    * form of the per-batch mean gradient; at sampleMilli = 1000 every
-    * round sees everything, F_r equals the corpus mass, and the
-    * trajectory is BIT-IDENTICAL to [[trainLr]] (spec-pinned — the
-    * full-pass trainer is the s = 1000 point of this family). The
-    * oracle replays the identical trajectory: the sample predicate is
-    * pure SQL over (doc_id, round), so [[trainLrSampledSql]] chains the
-    * same rotating-subset CTEs. Warm-start uses the GLOBAL round index
-    * in both the decay and the sample hash, so the RESUME LAW carries
-    * over unchanged. */
-  def trainLrSampled(docs: DataFrame, label: Column, dim: Int,
-      rounds: Int, lrNum: Long, lrDen: Long, sampleMilli: Int,
-      ngram: Int = 1, init: Array[Long] = null, startRound: Int = 0)
-      : Array[Long] = {
+      init: Array[Long] = null, startRound: Int = 0,
+      sampleMilli: Int = 1000): Array[Long] = {
     require(rounds >= 1 && startRound >= 0 && startRound + rounds <= 64,
       s"need 1 <= rounds, 0 <= startRound, startRound + rounds <= 64; " +
         s"got rounds=$rounds startRound=$startRound")
@@ -306,22 +237,38 @@ object TrainOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val wq = if (init == null) Array.fill(dim + 1)(0L) else init.clone()
+      // guards EVERY downstream Long expression, not just z' itself:
+      // the largest is calibrationTable's 10*(Z+|z'|+z') <= 10*(Z+2|z'|),
+      // so cap |z'| <= Long.MaxValue/25 (then n1 <= 2(Z+|z'|) and the
+      // calibration numerator both stay < 2^63 with margin)
       val wBound = Long.MaxValue / (25L * 1000L * (dim + 1))
+      // the decay divisor and the sample hash use the GLOBAL round index,
+      // so a warm-started continuation walks the identical trajectory as
+      // the straight run: resume(train(R1), R2, startRound = R1) ==
+      // train(R1 + R2) bit-for-bit (the RESUME LAW, spec-pinned and
+      // oracle-certified by quality_train_lr_resume hashing against the
+      // straight twin)
       var r = startRound
       while (r < startRound + rounds) {
-        val (g, fr) = lrGradientRoundSampled(labeled, wq, r, sampleMilli)
-        // loud, not silent: an empty sample means the corpus is too
-        // small for this rate — skipping the round would diverge from
-        // the oracle's replay, which has no empty-group escape hatch
+        val (g, fr) = gradientRound(labeled, wq, r, sampleMilli)
+        // loud, not silent: an empty round would divide by zero, and
+        // skipping it would diverge from the oracle's replay, which has
+        // no empty-group escape hatch
         require(fr > 0,
-          s"trainLrSampled: round $r sampled zero docs — raise " +
+          if (sampleMilli == 1000) "trainLr: empty corpus"
+          else s"trainLr: round $r sampled zero docs — raise " +
             s"sampleMilli ($sampleMilli) or the corpus")
         var j = 0
         while (j <= dim) {
+          // 1/r Robbins-Monro decay: large early steps, stable late ones.
+          // Bound-check the BigInt BEFORE narrowing: .toLong wraps
+          // silently, so a blown-up update could alias back inside
+          // wBound (and math.abs(Long.MinValue) is negative) if the
+          // check ran on the narrowed value.
           val newW = BigInt(wq(j)) - tdz(BigInt(lrNum) * g(j),
             BigInt(lrDen) * fr * 1000L * (r + 1))
           require(newW.abs < wBound,
-            s"trainLrSampled: weight $j overflowed the margin bound " +
+            s"trainLr: weight $j overflowed the margin bound " +
               s"(|w| >= $wBound) — lower the learning rate")
           wq(j) = newW.toLong
           j += 1
@@ -503,11 +450,11 @@ object TrainOps {
         "documents", ngram)}
        |SELECT CAST(j AS BIGINT) AS j, w FROM w$rounds""".stripMargin
 
-  /** The SAMPLED-round replay ([[trainLrSampled]]'s twin body): round i
-    * restricts the feature relation to [[sampleBucketSql]]'s rotating
-    * subset, reads F_r from the restricted relation, and divides the
-    * update by it — the identical trajectory, sample predicate and all,
-    * as chained CTEs. */
+  /** The SAMPLED-round replay ([[trainLr]]'s twin body with a
+    * `sampleMilli`): round i restricts the feature relation to
+    * [[sampleBucketSql]]'s rotating subset, reads F_r from the
+    * restricted relation, and divides the update by it — the identical
+    * trajectory, sample predicate and all, as chained CTEs. */
   private def trainSampledCtes(dim: Int, rounds: Int, lrNum: Long,
       lrDen: Long, sampleMilli: Int, labelSql: String,
       rel: String = "documents", ngram: Int = 1): String = {
@@ -523,7 +470,7 @@ object TrainOps {
       s"""sf$i AS MATERIALIZED (
          |  SELECT doc_id, j, x FROM f WHERE $pred),
          |fr$i AS (SELECT CASE WHEN count(*) = 0
-         |    THEN CAST(error('trainLrSampled: round ${i - 1} sampled zero docs — raise sampleMilli or the corpus') AS BIGINT)
+         |    THEN CAST(error('trainLr: round ${i - 1} sampled zero docs — raise sampleMilli or the corpus') AS BIGINT)
          |    ELSE count(*) END AS f FROM sf$i),
          |${roundCtes(i, s"sf$i", s"fr$i", lrNum, lrDen)}""".stripMargin
     }.mkString(",\n")
@@ -532,7 +479,7 @@ object TrainOps {
        |$rcs""".stripMargin
   }
 
-  /** DuckDB twin of [[trainLrSampled]] + [[weightsDf]]. */
+  /** DuckDB twin of [[trainLr]] with `sampleMilli` + [[weightsDf]]. */
   def trainLrSampledSql(dim: Int, rounds: Int, lrNum: Long, lrDen: Long,
       sampleMilli: Int, labelSql: String, ngram: Int = 1): String =
     s"""WITH ${trainSampledCtes(dim, rounds, lrNum, lrDen, sampleMilli,

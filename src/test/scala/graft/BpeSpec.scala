@@ -538,53 +538,11 @@ class BpeSpec extends AnyFunSuite {
     }
   }
 
-  test("trainWordpieceBatched == trainWordpiece on adversarial corpora") {
-    // the BpeSpec:487 harness corpora + classic + zh — heavy pair
-    // interaction and shrinking part counts, the regime where an
-    // unsound likelihood batch would reorder merges
-    val classic = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
-      Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
-    val zh = (Seq.fill(4)("你好 世界") ++ Seq.fill(3)("你好吗") ++
-      Seq.fill(2)("世界 和平")).mkString(" ")
-    val rand = Seq(5, 47).map { seed =>
-      val rnd = new scala.util.Random(seed)
-      val words = Seq.fill(30)(
-        Seq.fill(1 + rnd.nextInt(5))(('a' + rnd.nextInt(4)).toChar).mkString)
-      s"rand$seed" -> Seq.fill(120)(words(rnd.nextInt(words.size)))
-        .mkString(" ")
-    }
-    for ((tag, text) <- Seq("classic" -> classic, "zh" -> zh) ++ rand) {
-      val docs = Seq((0L, text)).toDF("doc_id", "text")
-      val n = 16
-      val seqMerges = BpeOps.trainWordpiece(docs, n)
-      val batched = BpeOps.trainWordpieceBatched(docs, n)
-      assert(batched.merges == seqMerges, s"corpus=$tag")
-      assert(batched.rounds <= seqMerges.size + 1,
-        s"corpus=$tag rounds=${batched.rounds} merges=${seqMerges.size}")
-    }
-  }
-
-  test("trainWordpieceBatched: round-trip win on the exclusive-pair regime") {
-    // WordPiece's argmax prefers rare always-together pairs; distinct
-    // exclusive bigram words with separated counts are exactly what a
-    // production vocabulary's head looks like to the likelihood key.
-    // The first five merges are symbol-disjoint and must batch.
-    val words = Seq.fill(10)("ab") ++ Seq.fill(9)("cd") ++
-      Seq.fill(8)("ef") ++ Seq.fill(7)("gh") ++ Seq.fill(6)("ij")
-    val docs = Seq((0L, words.mkString(" "))).toDF("doc_id", "text")
-    val n = 10
-    val seqMerges = BpeOps.trainWordpiece(docs, n)
-    val batched = BpeOps.trainWordpieceBatched(docs, n)
-    assert(batched.merges == seqMerges)
-    assert(batched.rounds < seqMerges.size,
-      s"expected a round-trip win, got rounds=${batched.rounds} for " +
-        s"${seqMerges.size} merges")
-  }
-
   test("trainWordpieceChained == trainWordpiece; chain children accepted " +
       "within a round") {
-    // the same adversarial corpora as the bound-gate differential —
-    // the chained trainer must stay bit-identical while accepting more
+    // adversarial corpora: heavy pair interaction and shrinking part
+    // counts, the regime where an unsound likelihood batch would
+    // reorder merges — the chained trainer must stay bit-identical
     val classic = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
     val zh = (Seq.fill(4)("你好 世界") ++ Seq.fill(3)("你好吗") ++
@@ -606,9 +564,9 @@ class BpeSpec extends AnyFunSuite {
         s"corpus=$tag rounds=${chained.rounds} merges=${seqMerges.size}")
     }
     // chain-structured corpus: one dominant word whose merges cascade
-    // ((e,f) -> (d,ef) -> ... the regime where the bound gate got
-    // round_reduction 1.00) — exact tracking must accept the chain
-    // child in the same round
+    // ((e,f) -> (d,ef) -> ... the regime where a batch proven from
+    // round-start statistics alone gets round_reduction 1.00) — exact
+    // tracking must accept the chain child in the same round
     val chainy = (Seq.fill(30)("abcdef") ++ Seq.fill(4)("xy") ++
       Seq.fill(3)("zw")).mkString(" ")
     val docs = Seq((0L, chainy)).toDF("doc_id", "text")
@@ -619,18 +577,20 @@ class BpeSpec extends AnyFunSuite {
     assert(chained.rounds < seqMerges.size,
       s"expected chain-following to win rounds: ${chained.rounds} for " +
         s"${seqMerges.size} merges (${seqMerges.mkString(" ")})")
-    // and the exclusive-pair regime batches at least as well as the
-    // bound gate (exact tracking subsumes it)
+    // and the exclusive-pair regime: distinct exclusive bigram words
+    // with separated counts, the head of a production vocabulary as the
+    // likelihood key sees it — the first five merges are symbol-disjoint
+    // and must batch
     val excl = (Seq.fill(10)("ab") ++ Seq.fill(9)("cd") ++
       Seq.fill(8)("ef") ++ Seq.fill(7)("gh") ++ Seq.fill(6)("ij"))
       .mkString(" ")
     val docsE = Seq((0L, excl)).toDF("doc_id", "text")
     val seqE = BpeOps.trainWordpiece(docsE, 10)
-    val bound = BpeOps.trainWordpieceBatched(docsE, 10)
     val chain = BpeOps.trainWordpieceChained(docsE, 10)
-    assert(chain.merges == seqE && bound.merges == seqE)
-    assert(chain.rounds <= bound.rounds,
-      s"exact tracking lost to the bound gate: ${chain.rounds} vs ${bound.rounds}")
+    assert(chain.merges == seqE)
+    assert(chain.rounds < seqE.size,
+      s"expected a round-trip win, got rounds=${chain.rounds} for " +
+        s"${seqE.size} merges")
   }
 
   test("trainWordpieceChained: randomized differential on 2/3-letter " +

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -52,32 +49,14 @@ class CheckpointsSpec extends AnyFunSuite {
   }
 
   test("materialize runs the same jobs as an eager localCheckpoint") {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") ==
-            "checkpoints-spec")) jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      GraftShims.drainListenerBus(sc)
-      jobs.set(0)
-      sc.setJobGroup("checkpoints-spec", "job count")
-      try body finally sc.clearJobGroup()
-      GraftShims.drainListenerBus(sc)
-      jobs.get
-    }
     // a shuffle under the barrier, so AQE runs a map stage first
     def plan = spark.range(0, 5000, 1, 4)
       .groupBy((col("id") % 97).as("k")).agg(count(lit(1)).as("n"))
-    sc.addSparkListener(listener)
-    try {
-      val plain = jobsOf(plan.localCheckpoint(eager = true))
-      val measured = jobsOf(Checkpoints.materialize(plan))
-      assert(plain >= 1)
-      assert(measured == plain, s"materialize: $measured jobs, " +
-        s"localCheckpoint(eager = true): $plain")
-    } finally sc.removeSparkListener(listener)
+    val (_, plain) = JobCounts.of(spark)(plan.localCheckpoint(eager = true))
+    val (_, measured) = JobCounts.of(spark)(Checkpoints.materialize(plan))
+    assert(plain >= 1)
+    assert(measured == plain, s"materialize: $measured jobs, " +
+      s"localCheckpoint(eager = true): $plain")
   }
 
   private def hasBhj(p: SparkPlan): Boolean =
@@ -141,5 +120,26 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(rows == strings.size)
     assert(sc.getPersistentRDDs.keySet == before)
     assert(kept.count() == strings.size)
+  }
+
+  test("released deletes the reliable checkpoint files its body wrote") {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    spark.conf.set(Checkpoints.DirConf, dir)
+    try {
+      // installs the context's checkpoint directory if no test did yet
+      val kept = Checkpoints.materialize(relation)
+      val ckDir = new java.io.File(new java.net.URI(sc.getCheckpointDir.get))
+      def rddDirs = ckDir.listFiles().map(_.getName).filter(_.startsWith("rdd-")).toSet
+      val before = rddDirs
+      val rows = Checkpoints.released(spark) {
+        val m = Checkpoints.materialize(relation)
+        assert(rddDirs != before, "no reliable checkpoint data written")
+        Checkpoints.rowCount(m)
+      }
+      assert(rows == strings.size)
+      assert(rddDirs == before)
+      assert(kept.count() == strings.size)
+    } finally spark.conf.unset(Checkpoints.DirConf)
   }
 }

@@ -273,32 +273,45 @@ class HistCoreSpec extends AnyFunSuite {
     assert(g2.toSeq == Seq(0L, 1L, 1L, 2L, 3L, 4L))
   }
 
-  test("fillTree (treeAggregate, split_every analog) == dense fill") {
+  /** The sparse [[Hist.fill]] of column x as a dense flow-inclusive
+    * array: an independent path to compare the dense tree against. */
+  private def sparseAsDense(spec: HistSpec, df: org.apache.spark.sql.DataFrame)
+      : Seq[Double] = {
+    val out = Array.fill(spec.denseBinCount(flow = true).toInt)(0.0)
+    Hist.fill(spec, df, Seq(col("x"))).collect()
+      .foreach(r => out(r.getLong(0).toInt) = r.getDouble(1))
+    out.toSeq
+  }
+
+  /** Shuffle exchanges in a Dataset's physical plan (AQE's initial plan). */
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+    ShuffledShapes.physicalNodes(df).count(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
+
+  test("fillTree (split_every analog) == sparse fill") {
     val df = Seq.tabulate(500)(i => math.sin(i * 1.1) * 4).toDF("x").repartition(9)
     val spec = HistSpec(Seq(Regular(6, -4.0, 4.0)), DoubleStorage)
     val viaTree = Hist.fillTree(spec, df, Seq(col("x")), splitEvery = Some(2))
-    val viaDense = Hist.fillDense(spec, df, Seq(col("x")))
-      .collect().sortBy(_.getLong(0)).map(_.getDouble(1))
-    assert(viaTree.toSeq == viaDense.toSeq)
+    assert(viaTree.toSeq == sparseAsDense(spec, df))
+    assert(viaTree.sum == 500.0)
   }
 
   test("split_every conf surface drives tree-reduce fan-in and depth") {
-    // depth math: ceil(log_fanIn(P)) with a floor of one combine level
-    assert(Hist.treeDepth(64, 8) == 2)
-    assert(Hist.treeDepth(64, 2) == 6)
-    assert(Hist.treeDepth(1, 8) == 1)
     // conf read: default mirrors the reference's histogram.yaml split_every: 8
     assert(Hist.resolveSplitEvery(spark) == Hist.SplitEveryDefault)
+    val df = Seq.tabulate(200)(i => math.sin(i * 1.3) * 4).toDF("x").repartition(7)
+    val spec = HistSpec(Seq(Regular(6, -4.0, 4.0)), DoubleStorage)
+    // merge levels beyond the input's own exchange: 7 partials fit one
+    // level at fan-in 8, and take ceil(log2(7)) = 3 levels at fan-in 2
+    def levels = exchanges(Hist.fillDense(spec, df, Seq(col("x")))) - exchanges(df)
+    assert(levels == 1)
     spark.conf.set(Hist.SplitEveryConf, "2")
     try {
       assert(Hist.resolveSplitEvery(spark) == 2)
+      assert(levels == 3)
       // end-to-end: conf-driven fan-in produces the same histogram
-      val df = Seq.tabulate(200)(i => math.sin(i * 1.3) * 4).toDF("x").repartition(7)
-      val spec = HistSpec(Seq(Regular(6, -4.0, 4.0)), DoubleStorage)
       val viaConf = Hist.fillTree(spec, df, Seq(col("x")))
-      val viaDense = Hist.fillDense(spec, df, Seq(col("x")))
-        .collect().sortBy(_.getLong(0)).map(_.getDouble(1))
-      assert(viaConf.toSeq == viaDense.toSeq)
+      assert(viaConf.toSeq == sparseAsDense(spec, df))
       spark.conf.set(Hist.SplitEveryConf, "1")
       intercept[IllegalArgumentException](Hist.resolveSplitEvery(spark))
     } finally spark.conf.unset(Hist.SplitEveryConf)

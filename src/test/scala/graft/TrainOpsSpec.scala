@@ -231,17 +231,6 @@ class TrainOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("sampled trainer at s = 1000 IS the full-pass trainer, bit-for-bit") {
-    // every round samples everything and F_r equals the corpus feature
-    // mass, so the trajectories must coincide exactly — the full-pass
-    // trainer is the s = 1000 point of the sampled family
-    val docs = separable(200)
-    val full = TrainOps.trainLr(docs, col("y"), 16, 6, 20L, 1L)
-    val sampled = TrainOps.trainLrSampled(docs, col("y"), 16, 6, 20L, 1L,
-      sampleMilli = 1000)
-    assert(sampled.sameElements(full))
-  }
-
   test("sampleBucket rotates: successive rounds sample different subsets") {
     def bucket(id: Long, round: Int): Long =
       ((id % TrainOps.SampleP) * TrainOps.SampleM1 +
@@ -261,7 +250,7 @@ class TrainOpsSpec extends AnyFunSuite {
 
   test("sampled training converges on the separable corpus") {
     val docs = separable(400)
-    val wq = TrainOps.trainLrSampled(docs, col("y"), dim = 64, rounds = 16,
+    val wq = TrainOps.trainLr(docs, col("y"), dim = 64, rounds = 16,
       lrNum = 10L, lrDen = 1L, sampleMilli = 500)
     val acc = TrainOps.lrScore(docs, col("y"), wq)
       .agg(avg((col("pred").cast("long") === col("y")).cast("double")))
@@ -272,15 +261,17 @@ class TrainOpsSpec extends AnyFunSuite {
 
   test("sampled trajectory: deterministic under repartitioning + resume law") {
     val docs = separable(200)
-    val w1 = TrainOps.trainLrSampled(docs, col("y"), 16, 6, 20L, 1L, 500)
-    val w2 = TrainOps.trainLrSampled(docs.repartition(13), col("y"), 16, 6,
-      20L, 1L, 500)
+    val w1 = TrainOps.trainLr(docs, col("y"), 16, 6, 20L, 1L,
+      sampleMilli = 500)
+    val w2 = TrainOps.trainLr(docs.repartition(13), col("y"), 16, 6,
+      20L, 1L, sampleMilli = 500)
     assert(w1.sameElements(w2))
     // warm start replays: global round index drives BOTH the decay and
     // the sample hash, so the continuation walks the identical rounds
-    val first = TrainOps.trainLrSampled(docs, col("y"), 16, 2, 20L, 1L, 500)
-    val resumed = TrainOps.trainLrSampled(docs, col("y"), 16, 4, 20L, 1L,
-      500, init = first, startRound = 2)
+    val first = TrainOps.trainLr(docs, col("y"), 16, 2, 20L, 1L,
+      sampleMilli = 500)
+    val resumed = TrainOps.trainLr(docs, col("y"), 16, 4, 20L, 1L,
+      init = first, startRound = 2, sampleMilli = 500)
     assert(resumed.sameElements(w1), "sampled resume diverged")
   }
 
@@ -291,25 +282,16 @@ class TrainOpsSpec extends AnyFunSuite {
       .persist()
     try {
       labeled.count()
-      // the round relation exactly as trainLrSampled builds it
+      // the round relation exactly as a sampled trainLr round builds it
       val round = labeled
         .filter(TrainOps.sampleBucket(col("doc_id"), 3) < lit(500L))
         .withColumn("zq", TrainOps.marginCol(Array.fill(17)(0L)))
         .select(col("y"), col("zq"), explode(col("js")).as("j"))
         .groupBy("j").agg(count(lit(1)))
       // assert on PHYSICAL NODE CLASSES, not the rendered plan string
-      // (string formats drift across Spark versions). Collecting the
-      // executedPlan tree naturally stops at the InMemoryTableScan —
-      // the cached relation's build plan is not a child node — which is
-      // exactly the round's-own-plan boundary the old string-split
-      // approximated. AQE wraps the tree; recurse through it.
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      def ops(p: SparkPlan): Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
-        case other => other.children.flatMap(ops) :+ other
-      }
-      val nodes = ops(round.queryExecution.executedPlan)
+      // (string formats drift across Spark versions); the nodes stop at
+      // the InMemoryTableScan, the round's-own-plan boundary
+      val nodes = ShuffledShapes.physicalNodes(round)
       def names = nodes.map(_.getClass.getSimpleName).mkString(", ")
       assert(!nodes.exists(
           _.isInstanceOf[org.apache.spark.sql.execution.aggregate.SortAggregateExec]),
@@ -342,14 +324,14 @@ class TrainOpsSpec extends AnyFunSuite {
     val lone = (0L until 100L).find(bucket(_, 0) >= 1L).get
     val docs = Seq((lone, "a b c", 1L)).toDF("doc_id", "text", "y")
     val e = intercept[IllegalArgumentException] {
-      TrainOps.trainLrSampled(docs, col("y"), 8, 2, 1L, 1L, sampleMilli = 1)
+      TrainOps.trainLr(docs, col("y"), 8, 2, 1L, 1L, sampleMilli = 1)
     }
     assert(e.getMessage.contains("sampled zero docs"))
     intercept[IllegalArgumentException] {
-      TrainOps.trainLrSampled(docs, col("y"), 8, 2, 1L, 1L, sampleMilli = 0)
+      TrainOps.trainLr(docs, col("y"), 8, 2, 1L, 1L, sampleMilli = 0)
     }
     intercept[IllegalArgumentException] {
-      TrainOps.trainLrSampled(docs, col("y"), 8, 2, 1L, 1L,
+      TrainOps.trainLr(docs, col("y"), 8, 2, 1L, 1L,
         sampleMilli = 1001)
     }
     // the SQL twin carries the SAME diagnosis (a lazy error() CASE on
