@@ -377,8 +377,8 @@ object SparkEntry {
       hb.result(s).withColumn("value", round(col("value"), 6))
         .orderBy("i0", "i1")
     },
-    // Dense TypedImperativeAggregate fast path — same answer as the
-    // zero-filled dense grid, via one Array[Double] buffer per partition
+    // Dense fast path — same answer as the zero-filled dense grid, via one
+    // double[] buffer per partition filled in the scan's codegen loop
     "hist_dense_fast" -> { (s, dir) =>
       val spec = HistSpec(Seq(axQtyR), DoubleStorage)
       Hist.fillDense(spec, Tables.lineitem(s, dir), Seq(col("l_quantity")))

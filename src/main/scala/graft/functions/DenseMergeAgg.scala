@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   * the intermediate level of a bounded-fan-in dense-histogram reduction
   * tree ([[graft.hist.Hist.fillDense]]).
   *
-  * [[DenseHistAgg]] turns rows into per-partition dense buffers; this
-  * aggregate merges ALREADY-BUILT buffers, so stacking `groupBy(bucket)`
+  * [[graft.plans.DenseFill]] turns rows into per-partition dense buffers;
+  * this aggregate merges ALREADY-BUILT buffers, so stacking `groupBy(bucket)`
   * levels of it reproduces the reference's `split_every` tree
   * (`/root/reference/src/dask_histogram/core.py:856-885`) with each task
   * merging at most fan-in buffers — no single final reducer ever sees all

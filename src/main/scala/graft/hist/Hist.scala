@@ -3,6 +3,7 @@ package graft.hist
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import graft.plans.DenseFill
 
 /** One staged fill: which DataFrame/columns feed the histogram, with
   * optional weight and sample (reference stages dicts of
@@ -145,26 +146,37 @@ object Hist {
     }.reduce(_ + _)
   }
 
-  /** Dense fast path, any ndim: the whole histogram as ONE Array[Double]
-    * aggregation buffer ([[graft.functions.DenseHistAgg]]) — per-partition
-    * dense fill + BOUNDED-fan-in buffer merge, the literal analog of the
-    * reference's per-partition `bh.Histogram` + `split_every` tree reduce
-    * (`core.py:856-885`, `histogram.yaml:10`). Returns the same sparse
-    * relational shape as [[fill]] (flow rows included, zero bins kept) by
-    * exploding the merged array and decomposing the flat index.
+  /** Dense fast path, any ndim: the whole histogram as ONE `double[]`
+    * buffer per input partition — per-partition dense fill + BOUNDED-fan-in
+    * buffer merge, the literal analog of the reference's per-partition
+    * `bh.Histogram` + `split_every` tree reduce (`core.py:856-885`,
+    * `histogram.yaml:10`). Returns the same sparse relational shape as
+    * [[fill]] (flow rows included, zero bins kept) by exploding the merged
+    * array and decomposing the flat index.
     *
-    * Why the tree matters HERE specifically: a bare `.agg()` funnels every
-    * input partition's dense buffer into ONE final reducer — at 800k scan
-    * tasks × an n-bin buffer that single task is the reduction bottleneck
-    * the reference's `split_every` exists to prevent. So when the input has
-    * more partitions than the fan-in, partials are first grouped by
+    * The fill is [[graft.plans.DenseFill]]: `buf[(int) idx] += w` compiled
+    * into the whole-stage-codegen loop of the bin-index projection, one
+    * `array<double>` row out per input partition. Only those P buffers
+    * reach an exchange, never rows. Measured on 4 CPUs, 10^8 rows of 2-D
+    * normal coordinates into 10x10 bins in 10 partitions (`fill-1e8-2d`):
+    * 3.3–3.7 s per fill, against 7.1–7.9 s for the interpreted aggregate
+    * it replaces and 3.6 s for generating and binning the rows alone. On
+    * 10^7 rows in 64 partitions into 102^3 bins (state-bound) both take
+    * 2.2–3.1 s. The sparse [[fill]] stays the default because it handles
+    * growable category axes and huge, sparse bin spaces.
+    *
+    * Why the tree matters: a bare `.agg()` funnels every input partition's
+    * buffer into ONE final reducer — at 800k scan tasks × an n-bin buffer
+    * that single task is the reduction bottleneck the reference's
+    * `split_every` exists to prevent. So when the input has more
+    * partitions than the fan-in, buffers are first grouped by
     * `pmod(spark_partition_id, ceil(P / fanIn))` (each group merges ≤ fanIn
-    * buffers; only buffers cross the shuffle, never rows — the grouping key
-    * is constant within a partition so map-side combine leaves exactly one
-    * buffer per input partition), then [[graft.functions.DenseMergeAgg]]
-    * levels repeat the contraction until one buffer remains:
-    * depth = ceil(log_fanIn(P)), each task merging ≤ fanIn arrays.
-    * `splitEvery = None` reads [[SplitEveryConf]] (reference yaml config). */
+    * buffers), then [[graft.functions.DenseMergeAgg]] levels repeat the
+    * contraction until one buffer remains: depth = ceil(log_fanIn(P)).
+    * P is read from the input's physical plan without running it
+    * ([[graft.plans.DenseFill.plannedPartitions]]), so building the
+    * result runs no job. `splitEvery = None` reads [[SplitEveryConf]]
+    * (reference yaml config). */
   def fillDense(spec: HistSpec, df: DataFrame, cols: Seq[Column],
       weight: Option[Column] = None, splitEvery: Option[Int] = None): DataFrame = {
     val merged = denseBuffer(spec, df, cols, weight, splitEvery)
@@ -185,7 +197,7 @@ object Hist {
       weight: Option[Column], splitEvery: Option[Int]): DataFrame = {
     require(axesNumeric(spec), "dense fill requires numeric (indexed) axes")
     val totalL = spec.denseBinCount(flow = true)
-    require(totalL > 0 && totalL <= (1L << 26),
+    require(totalL > 0 && totalL <= DenseFill.MaxBins,
       s"dense fill buffer out of range: $totalL bins")
     val total = totalL.toInt
     val fanIn = splitEvery.getOrElse(resolveSplitEvery(df.sparkSession))
@@ -193,35 +205,19 @@ object Hist {
     // too — fanIn < 2 makes the merge loop non-contracting (fanIn = 1
     // never terminates, <= 0 leaves unmerged partial buffers)
     require(fanIn >= 2, s"splitEvery must be >= 2, got $fanIn")
-    val idx = flatIndexCol(spec, cols)
-    val w = weight.getOrElse(lit(1.0)).cast(DoubleType)
-    val rows = df.select(idx.as("__i"), w.as("__w"))
-    // plan-only partition probe (split enumeration for parquet scans) —
-    // sizes the reduction tree to the real partial count
-    val p = math.max(rows.rdd.getNumPartitions, 1)
-    if (p <= fanIn) {
-      // few enough partials that the final reducer's fan-in is already
-      // bounded — single-level aggregation
-      rows.agg(graft.functions.DenseHistAgg(col("__i"), col("__w"), total).as("__h"))
-    } else {
-      var groups = math.ceil(p.toDouble / fanIn).toInt
-      var h = rows
-        .select(pmod(spark_partition_id().cast("long"), lit(groups.toLong)).as("__g"),
-          col("__i"), col("__w"))
-        .groupBy(col("__g"))
-        .agg(graft.functions.DenseHistAgg(col("__i"), col("__w"), total).as("__h"))
-      while (groups > 1) {
-        val next = math.ceil(groups.toDouble / fanIn).toInt
-        h =
-          if (next <= 1)
-            h.agg(graft.functions.DenseMergeAgg(col("__h"), total).as("__h"))
-          else h.select(pmod(col("__g"), lit(next.toLong)).as("__g"), col("__h"))
-            .groupBy(col("__g"))
-            .agg(graft.functions.DenseMergeAgg(col("__h"), total).as("__h"))
-        groups = next
-      }
-      h.select(col("__h"))
+    val rows = df.select(flatIndexCol(spec, cols).as("__i"),
+      weight.getOrElse(lit(1.0)).cast(DoubleType).as("__w"))
+    val merge = graft.functions.DenseMergeAgg(col("__h"), total).as("__h")
+    var groups = DenseFill.plannedPartitions(rows)
+    var level = DenseFill(rows, total)
+      .select(spark_partition_id().cast("long").as("__g"), col("__h"))
+    // each level merges at most fanIn buffers per group; the last one,
+    // over at most fanIn groups, is a bare aggregate
+    while (groups > fanIn) {
+      groups = math.ceil(groups.toDouble / fanIn).toInt
+      level = level.groupBy(pmod(col("__g"), lit(groups.toLong)).as("__g")).agg(merge)
     }
+    level.agg(merge)
   }
 
   /** Density normalization: value / (Σvalue * binWidth). The reference

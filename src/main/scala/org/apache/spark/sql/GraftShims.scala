@@ -1,7 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
@@ -9,13 +9,18 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
   * Expression<->Column converters of `classic.ExpressionUtils` (Spark 4
   * moved Column to a backend-agnostic representation), and a Dataset over
   * a `LogicalRDD` with measured statistics for
-  * [[graft.ops.Checkpoints.materialize]], and the listener-bus drain.
+  * [[graft.ops.Checkpoints.materialize]], the DataFrame of a logical
+  * plan ([[graft.plans.DenseFill]]), and the listener-bus drain.
   */
 object GraftShims {
   def toColumn(e: Expression): Column =
     classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** The DataFrame of `plan`, analyzed on `spark`. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** `ds.checkpoint(eager = true)` (`reliable`) or
     * `ds.localCheckpoint(eager = true)` — same action name, jobs,

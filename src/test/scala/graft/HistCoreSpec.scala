@@ -1,9 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, RangeExec, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.hist._
+import graft.plans.DenseFillExec
 
 /** Core engine behavior, mirroring the reference's oracle-differential
   * style (/root/reference/tests/test_core.py) with hand-computed oracles
@@ -351,15 +356,102 @@ class HistCoreSpec extends AnyFunSuite {
     Hist.fill(HistSpec(Seq(ax), Int64Storage), xs.toDF("x"), Seq(col("x")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("dense TypedImperativeAggregate path == sparse fill + densify") {
-    val df = Seq.tabulate(1000)(i => math.sin(i * 0.7) * 6).toDF("x").repartition(5)
+  /** `body` with whole-stage codegen off: [[graft.plans.DenseFillExec]]
+    * runs its interpreted `doExecute`. */
+  private def interpreted[A](body: => A): A = {
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try body finally spark.conf.unset("spark.sql.codegen.wholeStage")
+  }
+
+  /** Every node of a stage's part of a physical plan: stops at the
+    * InputAdapter where the stage reads another stage or a scan. */
+  private def stageNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: InputAdapter => Seq(a)
+    case _ => p +: p.children.flatMap(stageNodes)
+  }
+
+  test("dense codegen fill path == sparse fill + densify") {
     val spec = HistSpec(Seq(Regular(8, -5.0, 5.0)), DoubleStorage)
+    def sparse(df: DataFrame, w: Option[Column]): Map[Long, Double] =
+      Hist.densify(spec, Hist.fill(spec, df, Seq(col("x")), w), flow = true)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def dense(df: DataFrame, w: Option[Column]): Map[Long, Double] =
+      Hist.fillDense(spec, df, Seq(col("x")), w)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val df = Seq.tabulate(1000)(i => math.sin(i * 0.7) * 6).toDF("x").repartition(5)
+    val plain = dense(df, None)
+    assert(plain == sparse(df, None))
+    assert(plain.size == 10)
+    // null weights are skipped, null and NaN coordinates land in the
+    // overflow bin; weights are multiples of 1/4, so every summation
+    // order gives the same doubles
+    val odd = Seq.tabulate(1000) { i =>
+      val x = if (i % 50 == 0) None else if (i % 70 == 0) Some(Double.NaN)
+        else Some(math.sin(i * 0.7) * 6)
+      val w = if (i % 9 == 0) None else Some((i % 7) * 0.25)
+      (x, w)
+    }.toDF("x", "w")
+    val w = Some(col("w"))
+    val want = sparse(odd, w)
+    assert(want(9L) > 0.0)
+    assert(want.values.sum == (0 until 1000).filter(_ % 9 != 0).map(i => (i % 7) * 0.25).sum)
+    for (n <- Seq(1, 7, 13)) assert(dense(odd.repartition(n), w) == want, s"repartition($n)")
+    interpreted {
+      val d = Hist.fillDense(spec, odd.repartition(7), Seq(col("x")), w)
+      assert(d.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap == want)
+      val nodes = ShuffledShapes.physicalNodes(d)
+      assert(nodes.exists(_.isInstanceOf[DenseFillExec]) &&
+        !nodes.exists(_.isInstanceOf[WholeStageCodegenExec]),
+        nodes.map(_.nodeName).mkString(", "))
+      assert(dense(df, None) == plain)
+    }
+  }
+
+  test("fillDense builds without a job under adaptive execution") {
+    // the input's exchange makes the plan adaptive; reading its partition
+    // count from an executed RDD would run that stage at build time
+    val df = spark.range(0, 1000000, 1, 4).select(rand(1).as("x")).repartition(12)
+    val spec = HistSpec(Seq(Regular(10, 0.0, 1.0)), DoubleStorage)
+    val (d, jobs) = JobCounts.of(spark)(Hist.fillDense(spec, df, Seq(col("x"))))
+    assert(jobs == 0)
+    val got = d.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val sparse = Hist.densify(spec, Hist.fill(spec, df, Seq(col("x"))), flow = true)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dense = Hist.fillDense(spec, df, Seq(col("x")))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(dense == sparse)
-    assert(dense.size == 10)
+    assert(got == sparse)
+    assert(got.values.sum == 1000000.0)
+  }
+
+  test("fillDense plan: fill and bin index share one codegen stage; P buffers shuffle") {
+    val parts = 6
+    val df = spark.range(0, 60000, 1, parts).select(rand(3).as("x"), rand(4).as("y"))
+    val spec = HistSpec(Seq(Regular(5, 0.0, 1.0), Regular(4, 0.0, 1.0)), DoubleStorage)
+    // fan-in 8: one merge level; fan-in 2: three
+    for ((fanIn, levels) <- Seq(8 -> 1, 2 -> 3)) {
+      val d = Hist.fillDense(spec, df, Seq(col("x"), col("y")), splitEvery = Some(fanIn))
+      val (rows, jobs) = JobCounts.of(spark)(d.collect())
+      assert(rows.map(_.getDouble(2)).sum == 60000.0)
+      val nodes = ShuffledShapes.physicalNodes(d)
+      def names = nodes.map(_.nodeName).mkString(", ")
+      // the fill, the bin-index projection and the range are one stage:
+      // no aggregate, exchange or stage boundary between them
+      val fill = nodes.collectFirst { case f: DenseFillExec => f }
+      assert(fill.isDefined, names)
+      val stage = nodes.collect { case w: WholeStageCodegenExec => stageNodes(w.child) }
+        .filter(_.exists(_.isInstanceOf[DenseFillExec]))
+      assert(stage.size == 1, names)
+      val below = stageNodes(fill.get.child)
+      assert(below.exists(_.isInstanceOf[ProjectExec]) &&
+        below.exists(_.isInstanceOf[RangeExec]), names)
+      assert(!below.exists(n => n.isInstanceOf[InputAdapter] ||
+        n.isInstanceOf[ObjectHashAggregateExec] ||
+        n.isInstanceOf[ShuffleExchangeLike]), names)
+      // only the P buffers cross the first exchange, then one per group
+      val shuffles = nodes.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size == levels, names)
+      assert(shuffles.head.metrics("shuffleRecordsWritten").value == parts)
+      // one job per exchange and one for the result
+      assert(jobs == levels + 1)
+    }
   }
 
   test("bins normalization errors mirror reference rules AND messages") {
@@ -443,14 +535,37 @@ class HistCoreSpec extends AnyFunSuite {
     // (no single final reducer sees all 9 partial buffers)
     val plan = denseDf.queryExecution.executedPlan.toString.toLowerCase
     assert(plan.contains("densemergeagg"), plan.take(2000))
+    // the same merged grid from the interpreted fill, and with null and
+    // NaN coordinates (overflow) under any partitioning
+    interpreted {
+      val viaInterpreted = Hist.fillDense(spec, df, Seq(col("x"), col("y")),
+        splitEvery = Some(2)).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(viaInterpreted == sparse)
+    }
+    val odd = df.select(
+      when(col("x") > 4.5, lit(null).cast("double")).otherwise(col("x")).as("x"),
+      when(col("y") < -2.5, lit(Double.NaN)).otherwise(col("y")).as("y"))
+    def grid(d: DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val want = grid(Hist.densify(spec, Hist.fill(spec, odd, Seq(col("x"), col("y"))),
+      flow = true))
+    assert(want.exists { case ((i, _), v) => i == 6L && v > 0 } &&
+      want.exists { case ((_, j), v) => j == 5L && v > 0 })
+    for (n <- Seq(1, 7, 13)) {
+      val got = grid(Hist.fillDense(spec, odd.repartition(n), Seq(col("x"), col("y")),
+        splitEvery = Some(2)))
+      assert(got == want, s"repartition($n)")
+    }
   }
 
   test("fillDense with few partials stays single-level (no merge stage)") {
     val df = Seq.tabulate(100)(i => math.sin(i) * 4).toDF("x").coalesce(2)
     val spec = HistSpec(Seq(Regular(4, -4.0, 4.0)), DoubleStorage)
     val d = Hist.fillDense(spec, df, Seq(col("x")), splitEvery = Some(8))
-    assert(!d.queryExecution.executedPlan.toString.toLowerCase
-      .contains("densemergeagg"))
+    // the two partition buffers meet in one merge: exactly one exchange
+    // beyond the input's
+    assert(exchanges(d) - exchanges(df) == 1)
     val got = d.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val sparse = Hist.densify(spec, Hist.fill(spec, df, Seq(col("x"))), flow = true)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Join strategy follows `spark.sql.autoBroadcastJoinThreshold` against
   * measured barrier sizes; at -1 nothing broadcasts unless it is hinted
@@ -20,12 +20,13 @@ object ShuffledShapes {
   def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
   /** Every node of `df`'s physical plan, children first, through AQE's
-    * wrapper (its current plan; the initial one before execution). A
-    * cached relation's build plan is not a child, so the nodes stop at
-    * an InMemoryTableScan. */
+    * wrapper (its current plan; the initial one before execution) and
+    * into its query stages (after execution). A cached relation's build
+    * plan is not a child, so the nodes stop at an InMemoryTableScan. */
   def physicalNodes(df: DataFrame): Seq[SparkPlan] = {
     def ops(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
+      case s: QueryStageExec => ops(s.plan)
       case other => other.children.flatMap(ops) :+ other
     }
     ops(df.queryExecution.executedPlan)

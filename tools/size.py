@@ -10,6 +10,13 @@
                    identifier character, so SparkContext variable
                    broadcasts (`sc.broadcast(...)`) are not counted; two
                    hints on one line count twice
+  codegen_fallback classes under src/main that mix in CodegenFallback
+                   (`extends` or `with` it, outside comments and strings):
+                   expressions whole-stage codegen runs interpreted
+  imperative_aggs  classes under src/main that extend
+                   TypedImperativeAggregate (same rule): aggregates that
+                   hold an object buffer and run in ObjectHashAggregate,
+                   outside whole-stage codegen
 
 Usage: python3 tools/size.py [REPO_ROOT]   (default: the current directory)
 """
@@ -20,6 +27,8 @@ import sys
 
 KEY = re.compile(r"spark\.graft\.[A-Za-z0-9_]+(?:\.[A-Za-z0-9_]+)*")
 HINT = re.compile(r"(?<![A-Za-z0-9_.$])broadcast\(")
+FALLBACK = re.compile(r"\b(?:extends|with)\s+CodegenFallback\b")
+IMPERATIVE = re.compile(r"\b(?:extends|with)\s+TypedImperativeAggregate\b")
 
 
 def split_scala(src):
@@ -81,7 +90,7 @@ def main():
     repo = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 else ".")
     main_src = os.path.join(repo, "src", "main")
     ops = os.path.join(main_src, "scala", "graft", "ops")
-    lines, keys, hints = 0, set(), 0
+    lines, keys, hints, fallback, imperative = 0, set(), 0, 0, 0
     for path in sorted(scala_files(main_src)):
         with open(path, encoding="utf-8") as fh:
             src = fh.read()
@@ -91,8 +100,11 @@ def main():
             keys.update(KEY.findall(s))
         if os.path.commonpath([path, ops]) == ops:
             hints += len(HINT.findall(code))
+        fallback += len(FALLBACK.findall(code))
+        imperative += len(IMPERATIVE.findall(code))
     print(json.dumps({"main_lines": lines, "graft_conf_keys": len(keys),
-                      "broadcast_hints": hints}))
+                      "broadcast_hints": hints, "codegen_fallback": fallback,
+                      "imperative_aggs": imperative}))
 
 
 if __name__ == "__main__":
