@@ -2127,13 +2127,9 @@ object ExtensionQueries {
         .select((get_json_object(col("props"), "$.k").cast("long") % 10L).as("k"))
       Hist.fill(spec, ev, Seq(col("k"))).orderBy("i0")
     },
-    // Join-enriched histogram: lineitem -> orders -> customer -> nation.
-    // Only nation (25 rows, a TRUE dim) gets a broadcast hint: orders and
-    // customer are fact-sized (they scale with SF), and a forced broadcast
-    // of a fact table blows the broadcast ceiling and the driver at 100×.
-    // AQE picks shuffle-vs-broadcast for those from runtime sizes; the
-    // exchange-free alternative at scale is bucketing both sides on the
-    // join key (BucketingSpec proves that layout).
+    // Join-enriched histogram: lineitem -> orders -> customer -> nation,
+    // no hints: the planner and AQE size each side; the exchange-free
+    // layout at scale buckets both sides on the join key (BucketingSpec).
     "hist_by_nation" -> { (s, dir) =>
       val li = Tables.lineitem(s, dir)
       val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
@@ -2142,7 +2138,7 @@ object ExtensionQueries {
       val joined = li
         .join(o, li("l_orderkey") === o("o_orderkey"))
         .join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+        .join(n, c("c_nationkey") === n("n_nationkey"))
       val spec = HistSpec(Seq(StrCategory(), Regular(10, 900.0, 105000.0)),
         DoubleStorage)
       Hist.fill(spec, joined, Seq(col("n_name"), col("l_extendedprice")),
@@ -2949,8 +2945,8 @@ object ExtensionQueries {
       def pairsOf(half: DataFrame) = SketchOps.quantileSketchPairs(
         half, Nil, col("event_id").cast("string"), col("value"), k)
       val merged = pairsOf(ev.filter(col("event_id") % 2 === 0))
-        .crossJoin(broadcast(pairsOf(ev.filter(col("event_id") % 2 === 1))
-          .withColumnRenamed("pairs", "pairs_b")))
+        .crossJoin(pairsOf(ev.filter(col("event_id") % 2 === 1))
+          .withColumnRenamed("pairs", "pairs_b"))
         .select(SketchOps.quantileSketchUnionCol(
           col("pairs"), col("pairs_b"), k).as("pairs"))
       merged.select(size(col("pairs")).cast("long").as("n_sample"),

@@ -68,6 +68,11 @@ sealed trait Axis extends Serializable {
   /** True when the bin key is the raw category value rather than an index. */
   def isCategorical: Boolean = false
 
+  /** True when a NULL key means the value has no bin (a circular axis'
+    * non-finite values): [[Hist]]'s fills drop the row. Growth category
+    * axes keep NULL input as a NULL category and leave this false. */
+  def nullKey: Boolean = false
+
   /** Bin edges (numeric axes), length nBins+1; flow edges are ±inf. */
   def edges: Array[Double] = Array.empty
 
@@ -206,6 +211,7 @@ final case class RegularCircular(n: Int, lo: Double, hi: Double, name: String = 
   require(n > 0 && lo < hi)
   override def nBins: Int = n
   override def keyType: DataType = LongType
+  override def nullKey: Boolean = true
   override def binCol(c: Column): Column = {
     val d = c.cast(DoubleType)
     // non-finite values have no position on a circle: NULL key (dropped),

@@ -49,7 +49,10 @@ object Hist {
     }
     val w = f.weight.getOrElse(lit(1.0)).cast(DoubleType).as("__w")
     val s = f.sample.getOrElse(lit(0.0)).cast(DoubleType).as("__s")
-    f.df.select(prefix ++ idx ++ Seq(w, s): _*)
+    val rows = f.df.select(prefix ++ idx ++ Seq(w, s): _*)
+    // a NULL key has no bin; only axes that can emit one pay the filter
+    spec.axes.zip(spec.indexCols).collect { case (a, c) if a.nullKey => col(c).isNotNull }
+      .reduceOption(_ && _).fold(rows)(rows.filter)
   }
 
   /** Multi-fill fused into ONE aggregation pass (reference fuses K staged
@@ -241,7 +244,7 @@ object Hist {
     // single-partition exchange (and a noisy warning) for no benefit
     val tot = h.agg(sum(when(col("i0") >= 1 && col("i0") <= ax.nBins,
       col("value")).otherwise(lit(0.0))).as("__total"))
-    h.crossJoin(broadcast(tot))
+    h.crossJoin(tot)
       .withColumn("density", col("value") / (col("__total") * widthCol))
       .drop("__total")
   }

@@ -63,7 +63,7 @@ object HistAlgebra {
   def binOp(spec: HistSpec, left: DataFrame, right: DataFrame, op: Op,
       commonSupportOnly: Boolean = false): DataFrame = {
     val keys = spec.indexCols
-    val vals = spec.stateColsForAlgebra
+    val vals = spec.storage.stateCols
     val l = vals.foldLeft(left)((d, c) => d.withColumnRenamed(c, s"__l_$c"))
     val r = vals.foldLeft(right)((d, c) => d.withColumnRenamed(c, s"__r_$c"))
     val joined =
@@ -89,7 +89,7 @@ object HistAlgebra {
     * h*s means every weight was s× larger). */
   def scalarOp(spec: HistSpec, h: DataFrame, s: Double, op: Op,
       scalarOnLeft: Boolean = false): DataFrame = {
-    val vals = spec.stateColsForAlgebra
+    val vals = spec.storage.stateCols
     val scaled = vals.foldLeft(h) { (d, c) =>
       val isVariance = spec.storage == WeightStorage && c == "variance" &&
         (op == Mul || op == Div)
@@ -107,10 +107,9 @@ object HistAlgebra {
     require(spec.ndim == 1, "arrayOp supports 1-D histograms")
     val spark = h.sparkSession
     import spark.implicits._
-    val lut = broadcast(arr.zipWithIndex.map { case (v, i) => (i + 1L, v) }
-      .toDF("i0", "__operand"))
+    val lut = arr.zipWithIndex.map { case (v, i) => (i + 1L, v) }.toDF("i0", "__operand")
     val joined = h.join(lut, Seq("i0"), "left")
-    val applied = spec.stateColsForAlgebra.foldLeft(joined) { (d, c) =>
+    val applied = spec.storage.stateCols.foldLeft(joined) { (d, c) =>
       d.withColumn(c, op(col(c), coalesce(col("__operand"), lit(0.0))))
     }.drop("__operand")
     refreshFinalizers(spec, applied)
@@ -135,7 +134,7 @@ object HistAlgebra {
     val keys = keep.zipWithIndex.map { case (orig, k) =>
       col(s"i$orig").as(s"i$k")
     }
-    val sums = spec.stateColsForAlgebra.map(c => sum(col(c)).as(c))
+    val sums = spec.storage.stateCols.map(c => sum(col(c)).as(c))
     refreshFinalizers(spec,
       h.groupBy(keys: _*).agg(sums.head, sums.tail: _*))
   }
@@ -154,7 +153,7 @@ object HistAlgebra {
       .when(col(ic) === (n + 1).toLong, lit((n / k + 1).toLong))
       .otherwise(expr(s"(`$ic` - 1) div $k") + lit(1L))
     val keys = spec.indexCols
-    val sums = spec.stateColsForAlgebra.map(c => sum(col(c)).as(c))
+    val sums = spec.storage.stateCols.map(c => sum(col(c)).as(c))
     refreshFinalizers(spec,
       h.withColumn(ic, newIdx)
         .groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*))
@@ -176,7 +175,7 @@ object HistAlgebra {
     val newIdx = when(col(ic) < lo.toLong, lit(0L))
       .when(col(ic) >= hi.toLong, lit(nNew + 1L))
       .otherwise(col(ic) - lit((lo - 1).toLong))
-    val sums = spec.stateColsForAlgebra.map(c => sum(col(c)).as(c))
+    val sums = spec.storage.stateCols.map(c => sum(col(c)).as(c))
     refreshFinalizers(spec,
       h.withColumn(ic, newIdx)
         .groupBy(spec.indexCols.map(col): _*).agg(sums.head, sums.tail: _*))
@@ -238,7 +237,7 @@ object HistAlgebra {
         org.apache.spark.sql.expressions.Window.partitionBy(pcols: _*)
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
             org.apache.spark.sql.expressions.Window.unboundedFollowing)))
-    val qdf = broadcast(qs.toDF("q"))
+    val qdf = qs.toDF("q")
     val hit = cum.crossJoin(qdf)
       .withColumn("__t", col("q") * col("__n"))
       .filter(col("__t") > col("__cb") && col("__t") <= col("__cb") + col("__c"))
@@ -249,9 +248,8 @@ object HistAlgebra {
           lit(w) * (col("__t") - col("__cb")) / col("__c"), 6).as("est"): _*)
     }
     def edgeEst(ax: Axis) = {
-      val ed = broadcast((1 to nb).map(i =>
-        (i.toLong, ax.binLo(i - 1), ax.binWidth(i - 1)))
-        .toDF("i0", "__blo", "__bw"))
+      val ed = (1 to nb).map(i => (i.toLong, ax.binLo(i - 1), ax.binWidth(i - 1)))
+        .toDF("i0", "__blo", "__bw")
       hit.join(ed, Seq("i0"))
         .select(pcols :+ col("q") :+
           round(col("__blo") +
@@ -371,6 +369,7 @@ object HistAlgebra {
       coalesce(sum(col("value")).over(wb), lit(0L)).as("__cb"),
       sum(col("value")).over(wa.orderBy(col("i0"))).as("__n"))
     df.withColumn("__i0", spec.axes.head.binCol(v))
+      // without it (sf0.1): BroadcastHashJoin BuildLeft, the input rows broadcast
       .join(broadcast(cdf), col("__i0") === cdf("i0"))
       .drop("i0").drop("__i0")
       .withColumn("pct", col("__cb") / col("__n"))

@@ -57,23 +57,12 @@ final case class HistSpec(axes: Seq[Axis], storage: Storage = DoubleStorage,
       if (from == to) d else d.withColumnRenamed(from, to)
     }
 
-  /** Schema of the sparse relational histogram DataFrame. */
-  def schema: StructType = StructType(
-    axes.zipWithIndex.map { case (a, i) => StructField(s"i$i", a.keyType) } ++
-      storage.stateCols.map { n =>
-        val isCountStorage =
-          storage == Int64Storage || storage == AtomicInt64Storage
-        StructField(n, if (isCountStorage && n == "value") LongType else DoubleType)
-      })
-
   /** Empty histogram (computable like the reference's unfilled hist,
-    * `tests/test_boost.py:13-26`). */
+    * `tests/test_boost.py:13-26`): a fill of no rows, so its columns,
+    * types and derived columns are the fill's by construction. */
   def empty(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** State columns participating in histogram algebra (sums only —
-    * derived finalizer columns are recomputed, not combined). */
-  def stateColsForAlgebra: Seq[String] = storage.stateCols
+    Hist.fill(this, spark.emptyDataFrame, axes.map(a => lit(null).cast(a.keyType)),
+      sample = Some(lit(null).cast(DoubleType)))
 
   /** Total in-range dense bin count (numeric axes). */
   def denseBinCount(flow: Boolean): Long =

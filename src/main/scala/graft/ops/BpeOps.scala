@@ -450,6 +450,7 @@ object BpeOps {
     * corpus-sized token stream. */
   private def tokenizeTail(pw: DataFrame, segmented: DataFrame): DataFrame = {
     // |vocab| <= alphabet + merges + 1: the one-partition window is fine
+    // without it (sf0.1, 1 KB threshold): SortMergeJoin + 2 Exchange
     val vocab = broadcast(
       segmented.select(explode(col("symbols")).as("token")).distinct()
         .withColumn("token_id",
@@ -953,10 +954,8 @@ object BpeOps {
       df.select(lit(kind).as("kind"), col("l").as("s0"), col("r").as("s1"),
         lit(null: String).as("s2"), col("pair_freq").as("cnt"),
         col("lf").as("sf0"), col("rf").as("sf1"))
-    val nbr = shape(scored.join(broadcast(syms.select(col("s").as("l"))),
-          Seq("l"), "leftsemi"), 1)
-      .unionByName(shape(scored.join(
-        broadcast(syms.select(col("s").as("r"))), Seq("r"), "leftsemi"), 1))
+    val nbr = shape(scored.join(syms.select(col("s").as("l")), Seq("l"), "leftsemi"), 1)
+      .unionByName(shape(scored.join(syms.select(col("s").as("r")), Seq("r"), "leftsemi"), 1))
       .limit(WpChainNbrCap + 1)
     val tri = dict.filter(size(col("symbols")) >= 3)
       .select(col("freq"), explode(expr(
@@ -966,7 +965,7 @@ object BpeOps {
       .groupBy(col("t.s0").as("s0"), col("t.s1").as("s1"),
         col("t.s2").as("s2"))
       .agg(sum(col("freq")).as("cnt"))
-    val topPairs = broadcast(topRel.select(col("l"), col("r")))
+    val topPairs = topRel.select(col("l"), col("r"))
     val tripL = tri.join(topPairs,
         tri("s1") === topPairs("l") && tri("s2") === topPairs("r"), "leftsemi")
       .select(lit(2).as("kind"), col("s0"), col("s1"), col("s2"),
@@ -1264,8 +1263,8 @@ object BpeOps {
       val ps = piecesB.value
       it.map(w => (w, greedySegBert(w, ps, maxCp, maxWordChars, unk)))
     }.toDF("word", "symbols").materialize()
-    val vocabDf = broadcast(vocab.zipWithIndex.toDF("token", "__i")
-      .select(col("token"), col("__i").cast("long").as("token_id")))
+    val vocabDf = vocab.zipWithIndex.toDF("token", "__i")
+      .select(col("token"), col("__i").cast("long").as("token_id"))
     pw.join(segmented, Seq("word"))
       .select(col("doc_id"), col("word_pos"),
         posexplode(col("symbols")).as(Seq("piece_idx", "token")))

@@ -732,6 +732,7 @@ object DedupOps {
     val evalGrams = shingles(evalSet, k, textCol, idCol)
       .select(graft.functions.PolyHash(col("shingle")).as("h")).distinct()
     val hits = gramOccurrences(base, k)
+      // without it (sf0.1, 16 KB threshold): SortMergeJoin + 1 Exchange
       .join(broadcast(evalGrams), Seq("h"), "left_semi")
     rewriteWithoutCoverage(base, hits, k)
   }
@@ -828,6 +829,7 @@ object DedupOps {
     val c = shingles(corpus, k, textCol, idCol)
     val e = shingles(evalSet, k, textCol, idCol)
       .select(col("doc_id").as("eval_id"), col("shingle"))
+    // without it (sf0.1, 16 KB threshold): SortMergeJoin + 2 Exchange
     val hits = c.join(broadcast(e), Seq("shingle"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shared_shingles"),

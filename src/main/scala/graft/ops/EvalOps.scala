@@ -122,7 +122,7 @@ object EvalOps {
     val pmi = round(log((col("n").cast("double") * col("c_xy").cast("double")) /
       (col("c_x").cast("double") * col("c_y").cast("double"))), 6)
     cells.join(mx, Seq("x")).join(my, Seq("y"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("x"), col("y"), col("c_xy"), col("c_x"), col("c_y"),
         col("n"), pmi.as("pmi"),
         round(pmi * col("c_xy").cast("double") / col("n").cast("double"), 9)
@@ -292,7 +292,7 @@ object EvalOps {
       sum("n2").as("t2"), sum("k2").as("s2"))
     def ratio(k: Column, n: Column): Column =
       when(n === 0L, 0.0).otherwise(k.cast("double") / n.cast("double"))
-    seg.crossJoin(broadcast(tot))
+    seg.crossJoin(tot)
       .select(col("segment"), col("n1"), col("n2"),
         ratio(col("k1"), col("n1")).as("r1"),
         ratio(col("k2"), col("n2")).as("r2"),
@@ -366,7 +366,7 @@ object EvalOps {
     require(minSupport >= 1, s"minSupport >= 1, got $minSupport")
     val items = baskets.select(col(basketCol).as("o"), col(itemCol).as("p"))
       .distinct()
-    val nB = broadcast(items.agg(count_distinct(col("o")).as("n_baskets")))
+    val nB = items.agg(count_distinct(col("o")).as("n_baskets"))
     val sup = items.groupBy("p").agg(count(lit(1)).as("sup"))
     val pairs = items.join(items.select(col("o"), col("p").as("p2")), Seq("o"))
       .filter(col("p") < col("p2"))
@@ -378,7 +378,7 @@ object EvalOps {
         Seq("item_a"))
       .join(sup.select(col("p").as("item_b"), col("sup").as("sup_b")),
         Seq("item_b"))
-      .crossJoin(broadcast(nB))
+      .crossJoin(nB)
       .select(col("item_a"), col("item_b"), col("sup_ab"), col("sup_a"),
         col("sup_b"),
         round(col("sup_ab").cast("double") / col("sup_a").cast("double"), 6)
@@ -542,7 +542,7 @@ object EvalOps {
     val tv = cells
       .join(glob, Seq("s"))
       .join(g, qidCols)
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .groupBy(qidCols.map(col): _*)
       .agg(max(col("n_g")).as("n_g"), max(col("n")).as("n"),
         sum(abs(dec(col("c_gs")) * dec(col("n")) -
@@ -836,7 +836,7 @@ object EvalOps {
         min(when(col("rn") === kHi, col("rm"))).as("hi"))
     val base = perUnit.agg(count(lit(1)).as("n_units"),
       sum(col("mu")).as("sm"))
-    base.crossJoin(broadcast(ci))
+    base.crossJoin(ci)
       .select(col("n_units"), lit(reps).as("reps"),
         round(col("sm").cast("double") / col("n_units").cast("double"), 6)
           .as("mean"),
@@ -1273,7 +1273,7 @@ object EvalOps {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val nCal = calG.agg(sum(col("cnt")).as("n_calib"))
     val ranked = calG.select(col("s"), sum(col("cnt")).over(w).as("cum"))
-      .crossJoin(broadcast(nCal))
+      .crossJoin(nCal)
       .withColumn("k",
         expr(s"((n_calib + 1) * ${1000 - alphaMilli}L + 999) div 1000L"))
     val qhat = ranked.filter(col("cum") >= col("k"))
@@ -1281,12 +1281,12 @@ object EvalOps {
     val meta = ranked.agg(max(col("n_calib")).as("n_calib"),
       max(col("k")).as("k"))
     val test = rows.filter(!col("calib"))
-      .crossJoin(broadcast(qhat))
+      .crossJoin(qhat)
       .agg(count(lit(1)).as("n_test"),
         sum(when(col("qhat_micro").isNull || col("s") <= col("qhat_micro"),
           1L).otherwise(0L)).as("n_covered"),
         max(col("qhat_micro")).as("qhat_micro"))
-    test.crossJoin(broadcast(meta))
+    test.crossJoin(meta)
       .select(col("n_calib"), col("n_test"), col("k"),
         when(col("qhat_micro").isNull, lit(null).cast("double"))
           .otherwise(round(col("qhat_micro").cast("double") / 1e6, 6))

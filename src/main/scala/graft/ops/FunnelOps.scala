@@ -300,17 +300,17 @@ object FunnelOps {
     val toTotals = counts.groupBy("to_type").agg(sum(col("n")).as("n_to"))
     val total = counts.agg(sum(col("n")).as("nn"))
     val cond = counts.join(fromTotals, Seq("from_type"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .agg(sum(expr(
         "CAST(round(1000000000.0 * (CAST(n AS DOUBLE) / CAST(nn AS DOUBLE))" +
           " * log2(CAST(n_from AS DOUBLE) / CAST(n AS DOUBLE))) AS BIGINT)"))
         .as("hc_e9"), max(col("nn")).as("nn"))
-    val marg = toTotals.crossJoin(broadcast(total))
+    val marg = toTotals.crossJoin(total)
       .agg(sum(expr(
         "CAST(round(1000000000.0 * (CAST(n_to AS DOUBLE) / CAST(nn AS DOUBLE))" +
           " * log2(CAST(nn AS DOUBLE) / CAST(n_to AS DOUBLE))) AS BIGINT)"))
         .as("hm_e9"))
-    cond.crossJoin(broadcast(marg))
+    cond.crossJoin(marg)
       .select(col("nn").as("n_pairs"),
         round(col("hc_e9").cast("double") / 1e9, 6).as("h_cond"),
         round(col("hm_e9").cast("double") / 1e9, 6).as("h_marginal"),
@@ -422,7 +422,7 @@ object FunnelOps {
     val u = events.groupBy(col(userCol))
       .agg(min(col(tsCol)).as("f"), max(col(tsCol)).as("l"))
     val end = events.agg(max(col(tsCol)).as("obs_end"))
-    u.crossJoin(broadcast(end))
+    u.crossJoin(end)
       .select(col(userCol).as("__u"),
         (col("l") <= col("obs_end") - gapUs).as("churned"),
         when(col("l") <= col("obs_end") - gapUs,
@@ -442,7 +442,7 @@ object FunnelOps {
       .rowsBetween(Window.unboundedPreceding, -1)
     val total = byDay.agg(sum(col("d") + col("c")).as("n_total"))
     def dbl(x: Column) = x.cast("double")
-    byDay.crossJoin(broadcast(total))
+    byDay.crossJoin(total)
       .withColumn("n_risk",
         col("n_total") - coalesce(sum(col("d") + col("c")).over(prior), lit(0L)))
       .withColumn("__f", lit(1.0) - dbl(col("d")) / dbl(col("n_risk")))
@@ -479,7 +479,7 @@ object FunnelOps {
       .rowsBetween(Window.unboundedPreceding, -1)
     val total = byDay.agg(sum(col("d") + col("c")).as("n_total"))
     def dbl(x: Column) = x.cast("double")
-    byDay.crossJoin(broadcast(total))
+    byDay.crossJoin(total)
       .withColumn("n_risk",
         col("n_total") - coalesce(sum(col("d") + col("c")).over(prior), lit(0L)))
       .withColumn("__h", sum(dbl(col("d")) / dbl(col("n_risk"))).over(w))
@@ -618,7 +618,7 @@ object FunnelOps {
     val cum = Window.orderBy("t_day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     def dbl(x: Column) = x.cast("double")
-    val risk = byDay.crossJoin(broadcast(tot))
+    val risk = byDay.crossJoin(tot)
       .withColumn("n1",
         col("nt1") - coalesce(sum(col("d1") + col("c1")).over(prior), lit(0L)))
       .withColumn("n2",

@@ -136,8 +136,7 @@ object GraphOps {
     // multiset of summed terms per group either way.
     val bcastRanks = fitsBroadcast(nodesS)
     def round(r: DataFrame): DataFrame = {
-      val dangling = broadcast(r.filter(col("__sink"))
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm")))
+      val dangling = r.filter(col("__sink")).agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
       val rSide = if (bcastRanks) broadcast(r) else r
       val contribs = ew.join(rSide, ew("src") === rSide("node"))
         .groupBy(col("dst"))
@@ -448,8 +447,8 @@ object GraphOps {
       auth = half(hub, "src", "dst")
       hub = half(auth, "dst", "src")
     }
-    val ta = broadcast(auth.agg(sum(col("v")).as("ta")))
-    val th = broadcast(hub.agg(sum(col("v")).as("th")))
+    val ta = auth.agg(sum(col("v")).as("ta"))
+    val th = hub.agg(sum(col("v")).as("th"))
     nodes
       .join(side(auth.select(col("node"), col("v").as("a"))), Seq("node"), "left")
       .join(side(hub.select(col("node"), col("v").as("h"))), Seq("node"), "left")

@@ -182,7 +182,7 @@ object LayoutOps {
       valueCol.cast("double").as("v")).filter(col("v").isNotNull)
     val bounds = rangeBoundsDf(vals, col("key"), col("v"), buckets, k)
       .withColumnRenamed("__bounds", "bounds")
-    vals.crossJoin(broadcast(bounds))
+    vals.crossJoin(bounds)
       .select(rangeBucketOf("v", "bounds").as("bucket"),
         col("bounds"))
       .groupBy("bucket")

@@ -68,7 +68,7 @@ object LmOps {
       .join(model, Seq("bg"))
       .withColumn("pfx", substring_index(col("bg"), " ", n - 1))
       .join(prefix, Seq("pfx"))
-      .crossJoin(broadcast(vocab))
+      .crossJoin(vocab)
       .groupBy("doc_id")
       .agg(
         sum(col("c")).as("n_ngrams"),
@@ -132,7 +132,7 @@ object LmOps {
       .join(model.select("bg", "c2", "pfx", "sfx"), Seq("bg"))
       .join(prefix, Seq("pfx"))
       .join(cont, Seq("sfx"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .groupBy("doc_id")
       .agg(sum(col("c")).as("n_ngrams"),
         (sum(col("c").cast("double") * -log(p)) /

@@ -319,7 +319,7 @@ object PipelineOps {
     val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
     val total = docs.agg(count(lit(1)).as("total"))
     counts.crossJoin(total)
-      .join(broadcast(targets), Seq("lang"))
+      .join(targets, Seq("lang"))
       .select(col("lang"), col("n_docs"),
         round((col("target_frac") * col("total").cast("double")) /
           col("n_docs").cast("double"), 6).as("weight"))
@@ -339,11 +339,11 @@ object PipelineOps {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     val counts = docs.groupBy(domainCol).agg(count(lit(1)).as("n_docs"))
     val total = docs.agg(count(lit(1)).cast("double").as("total"))
-    val shares = counts.crossJoin(broadcast(total))
+    val shares = counts.crossJoin(total)
       .withColumn("__pa", pow(col("n_docs").cast("double") / col("total"),
         lit(alpha)))
     val z = shares.agg(sum(col("__pa")).as("__z"))
-    shares.crossJoin(broadcast(z))
+    shares.crossJoin(z)
       .select(col(domainCol), col("n_docs"),
         round((col("__pa") / col("__z")) * col("total") /
           col("n_docs").cast("double"), 6).as("weight"))
@@ -397,6 +397,7 @@ object PipelineOps {
       when(idBucket(col("doc_id"), 2246822519L) < pmod(wk, lit(1000L)), 1L)
         .otherwise(0L)
     val passThrough = docs.columns.map(col).toSeq
+    // without it (sf0.1): BroadcastHashJoin BuildLeft, the documents broadcast
     docs.join(broadcast(weightsMilli), Seq("lang"))
       .withColumn("__copies", copies)
       .filter(col("__copies") > 0)
@@ -743,7 +744,7 @@ object PipelineOps {
     val cuts = scored
       .agg(expr(cutAgg).as("__c"))
       .select(transform(col("__c"), c => round(c, 6)).as("__c"))
-    scored.crossJoin(broadcast(cuts))
+    scored.crossJoin(cuts)
       .withColumn("bin",
         size(filter(col("__c"), c => col("score") > c)).cast("long"))
       .drop("__c")
@@ -910,7 +911,7 @@ object PipelineOps {
     require(buckets > 0, s"buckets must be positive: $buckets")
     val spark = docs.sparkSession
     import spark.implicits._
-    val t = broadcast(targets.toSeq.toDF(groupCol, "__target"))
+    val t = targets.toSeq.toDF(groupCol, "__target")
     // ceil(p / buckets) so every key lands in [0, buckets)
     val width = ShufflePrime / buckets + 1
     val base = docs.select(col(idCol), col(groupCol),
@@ -927,6 +928,7 @@ object PipelineOps {
     val wIn = Window.partitionBy(col(groupCol), col("__b"))
       .orderBy(col("__k"), col(idCol))
       .rowsBetween(Window.unboundedPreceding, -1)
+    // without it (sf0.1): SortMergeJoin + 1 Exchange
     base.join(broadcast(offsets), Seq(groupCol, "__b"))
       .withColumn("__before",
         col("__off") + coalesce(sum(col("n_tok")).over(wIn), lit(0L)))
@@ -1089,6 +1091,7 @@ object PipelineOps {
   def classifierScoreTrained(docs: DataFrame, weights: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
     val x = col("s").cast("double") / (lit(1000.0) * col("n").cast("double"))
+    // without it (sf0.1, 64 B threshold, a caller's table): SortMergeJoin + 2 Exchange
     tok.join(broadcast(weights), tok("tok") === weights("token"), "left")
       .select(col("doc_id"), coalesce(col("w_milli"), lit(0L)).as("w"))
       .groupBy("doc_id").agg(sum(col("w")).as("s"), count(lit(1)).as("n"))
@@ -1282,7 +1285,7 @@ object PipelineOps {
       col(scoreCol).cast("long").as("score"))
     val bounds = LayoutOps.rangeBoundsDf(base, col("tie"), col("score"),
       buckets)
-    val gbase = base.crossJoin(broadcast(bounds))
+    val gbase = base.crossJoin(bounds)
       .withColumn("bkt", LayoutOps.rangeBucketOf("score")).drop("__bounds")
 
     // group side: rn = within-group rank by (score, tie); n_g = group size
@@ -1305,6 +1308,7 @@ object PipelineOps {
       .select("bkt", "off")
     val wIn = Window.partitionBy("bkt").orderBy("score", "tie")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // without it (sf0.1, 256 KB threshold): SortMergeJoin + 1 Exchange
     val g = gbase.join(broadcast(offsets), Seq("bkt"))
       .withColumn("gr", col("off") + sum(lit(1L)).over(wIn))
       .select(col("gr"), col("score").as("g_score"))
@@ -1679,8 +1683,8 @@ object PipelineOps {
       .head.getLong(0)
     base
       .withColumn("__succ", lead(col("doc_id"), 1).over(wIn))
-      .join(broadcast(firsts.select(col("__b"), col("__nexthead"))),
-        Seq("__b"))
+      // without it (sf0.1, 16 KB threshold): SortMergeJoin + 1 Exchange
+      .join(broadcast(firsts.select(col("__b"), col("__nexthead"))), Seq("__b"))
       .select(col("doc_id"),
         coalesce(col("__succ"), col("__nexthead"), lit(globalFirst))
           .as("partner_id"))

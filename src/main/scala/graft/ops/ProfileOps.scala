@@ -321,10 +321,8 @@ object ProfileOps {
       .select(col("key"),
         coalesce(col("n_old"), lit(0L)).as("n_old"),
         coalesce(col("n_new"), lit(0L)).as("n_new"))
-    val totals = broadcast(joined.agg(
-      sum(col("n_old")).as("t_old"),
-      sum(col("n_new")).as("t_new"),
-      count(lit(1)).as("k")))
+    val totals = joined.agg(sum(col("n_old")).as("t_old"), sum(col("n_new")).as("t_new"),
+      count(lit(1)).as("k"))
     joined.crossJoin(totals)
       .select(col("key"), col("n_old"), col("n_new"),
         ((col("n_old") + lit(1L)).cast("double") /
@@ -549,7 +547,7 @@ object ProfileOps {
     binned
       .withColumn("ca", sum("a").over(w))
       .withColumn("cb", sum("b").over(w))
-      .crossJoin(broadcast(binned.agg(sum("a").as("na"), sum("b").as("nb"))))
+      .crossJoin(binned.agg(sum("a").as("na"), sum("b").as("nb")))
       .agg(
         round(max(abs(col("ca") * col("nb") - col("cb") * col("na")))
           .cast("double") /
@@ -616,7 +614,7 @@ object ProfileOps {
       .withColumn("cb", sum("b").over(cumW))
       .withColumn("gap", coalesce(lead(col("bin"), 1).over(leadW) - col("bin"),
         lit(0L)))
-      .crossJoin(broadcast(binned.agg(sum("a").as("na"), sum("b").as("nb"))))
+      .crossJoin(binned.agg(sum("a").as("na"), sum("b").as("nb")))
       .agg(
         round(sum(abs(col("ca").cast(DecimalType(38, 0)) *
               col("nb").cast(DecimalType(38, 0)) -
@@ -731,7 +729,7 @@ object ProfileOps {
     * GridWindowSpec plan assertions run against it directly. */
   private[graft] def gridCumCounts(g: DataFrame, buckets: Int): DataFrame = {
     val bounds = LayoutOps.rangeBoundsDf(g, col("v"), col("v"), buckets)
-    val gb = g.crossJoin(broadcast(bounds))
+    val gb = g.crossJoin(bounds)
       .withColumn("bkt", LayoutOps.rangeBucketOf("v")).drop("__bounds")
     val wOff = Window.orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -740,6 +738,7 @@ object ProfileOps {
       .select("bkt", "off")
     val wIn = Window.partitionBy("bkt").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, -1)
+    // without it (sf0.1, 256 KB threshold): SortMergeJoin + 1 Exchange
     gb.join(broadcast(offsets), Seq("bkt"))
       .withColumn("cb",
         col("off") + coalesce(sum(col("cnt")).over(wIn), lit(0L)))
@@ -1084,7 +1083,7 @@ object ProfileOps {
     val counts = df.groupBy(col(keyCol).cast("string").as("key"))
       .agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum("cnt").as("__total"))
-    counts.crossJoin(broadcast(total))
+    counts.crossJoin(total)
       .withColumn("share_ppm", expr("(cnt * 1000000L) div __total"))
       .orderBy(col("cnt").desc, col("key").asc)
       .limit(k)
@@ -1181,7 +1180,7 @@ object ProfileOps {
       .filter(col("n_ref") === refDays)
       .select(expr("(1000L * sx) div n_ref").as("mu0_milli"))
     val mon = ranked.filter(col("rn") > refDays)
-      .crossJoin(broadcast(ref))
+      .crossJoin(ref)
       .withColumn("y", lit(1000L) * col("x") - col("mu0_milli") -
         expr(s"CAST(mu0_milli * $slackPermille AS BIGINT) div 1000L"))
     val cw = Window.orderBy(col("day").asc)
@@ -1225,8 +1224,9 @@ object ProfileOps {
     val refDow = refRows.groupBy("dow")
       .agg(expr("(1000L * sum(x)) div count(1)").as("mu_dow_milli"))
     val mon = ranked.filter(col("rn") > refDays)
+      // without it (sf0.1, 64 B threshold): SortMergeJoin
       .join(broadcast(refDow), Seq("dow"), "left")
-      .crossJoin(broadcast(ref))
+      .crossJoin(ref)
       .withColumn("y", lit(1000L) * col("x") -
         coalesce(col("mu_dow_milli"), col("mu0_milli")) -
         expr(s"CAST(mu0_milli * $slackPermille AS BIGINT) div 1000L"))
@@ -1355,7 +1355,7 @@ object ProfileOps {
         signum(col("b.x") - col("a.x")).cast("long").as("sgn"))
     val w = Window.orderBy(col("slope").asc)
     val med = pairs.withColumn("rn", row_number().over(w))
-      .crossJoin(broadcast(pairs.agg(count(lit(1)).as("np"))))
+      .crossJoin(pairs.agg(count(lit(1)).as("np")))
       // integer div: Column `/` is double division and would never
       // match the integer row_number
       .filter(col("rn") === expr("(np + 1) div 2") ||
@@ -1366,8 +1366,8 @@ object ProfileOps {
     val ties = d.groupBy("x").agg(count(lit(1)).as("t"))
       .agg(coalesce(sum(expr("t * (t - 1) * (2 * t + 5)")), lit(0L))
         .as("tie_num"))
-    nDays.crossJoin(broadcast(sAgg)).crossJoin(broadcast(ties))
-      .crossJoin(broadcast(med.select("sen_slope")))
+    nDays.crossJoin(sAgg).crossJoin(ties)
+      .crossJoin(med.select("sen_slope"))
       .select(col("n_days"),
         when(col("n_days") < 2, lit(null).cast("double"))
           .otherwise(round(col("sen_slope"), 6)).as("sen_slope"),
@@ -1506,7 +1506,7 @@ object ProfileOps {
         sum(dec(col("x_prev")) * dec(col("x"))).as("p"),
         sum(col("x_prev")).as("a"), sum(col("x")).as("b"))
     def dbl(c: Column) = c.cast("double")
-    pairs.crossJoin(broadcast(glob))
+    pairs.crossJoin(glob)
       .withColumn("mu", dbl(col("s")) / dbl(col("n")))
       .select(col("lag").cast("int").as("lag"), col("n_pairs"),
         when(dbl(col("q")) - dbl(col("n")) * col("mu") * col("mu") <= 0.0,
@@ -1594,7 +1594,7 @@ object ProfileOps {
         .otherwise(0L)), lit(0L)).as("n_excluded"))
     val digits = (1L to 9L).toDF("digit")
     digits.join(counts, Seq("digit"), "left")
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("digit"), coalesce(col("n"), lit(0L)).as("n"),
         col("n_excluded"),
         round(col("nn").cast("double") *

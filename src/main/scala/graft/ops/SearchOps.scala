@@ -68,9 +68,10 @@ object SearchOps {
       .toDF("query_id", "term")
 
     val scored = tf
+      // without it (sf0.1, 16 KB threshold): SortMergeJoin + 1 Exchange
       .join(broadcast(dfreq), Seq("term"))
-      .join(broadcast(qterms), Seq("term"))
-      .crossJoin(broadcast(stats))
+      .join(qterms, Seq("term"))
+      .crossJoin(stats)
       // idf = ln((N - df + 0.5)/(df + 0.5) + 1)  (Lucene's non-negative form)
       .withColumn("idf", log((col("n_docs") - col("df") + lit(0.5)) /
         (col("df") + lit(0.5)) + lit(1.0)))
@@ -245,9 +246,10 @@ object SearchOps {
     val qterms = queries.flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
       .toDF("query_id", "term")
     val scored = tf
+      // without it (sf0.1, 256 KB threshold): SortMergeJoin + 1 Exchange
       .join(broadcast(dfreq), Seq("term"))
-      .join(broadcast(qterms), Seq("term"))
-      .crossJoin(broadcast(stats))
+      .join(qterms, Seq("term"))
+      .crossJoin(stats)
       .withColumn("idf", log((col("n_docs") - col("df") + lit(0.5)) /
         (col("df") + lit(0.5)) + lit(1.0)))
       .withColumn("contrib", col("idf") * col("tf") /
@@ -396,7 +398,7 @@ object SearchOps {
       .withColumn("term", element_at(typedlit(vocab), col("vidx") + 1))
     val qterms = queries.flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
       .toDF("query_id", "term")
-    hits.join(broadcast(qterms), Seq("term"))
+    hits.join(qterms, Seq("term"))
       .groupBy("query_id", "doc_id")
       .agg(count(lit(1)).as("rel"))
   }

@@ -39,27 +39,32 @@ object SimilarityOps {
   def cosineSql(a: String, b: String): String =
     s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
 
-  /** Brute-force cosine top-k: for each query vector, the k nearest corpus
-    * vectors. Query side is broadcast (small); ranking uses the *rounded*
-    * similarity (6 dp) with id tie-break so ordering is engine-portable. */
   /** Spread a (possibly single-split) corpus before per-pair work —
     * conditional pass-through for well-split inputs; see [[Spread]]. */
   private def spread(df: DataFrame): DataFrame = Spread(df)
 
+  /** The k best-scored (query_id, neighbor_id, sim) rows per query, ranked
+    * by rounded sim descending, neighbor id ascending. */
+  private def topKBySim(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("sim").desc, col("neighbor_id").asc)))
+      .filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", "sim", "rank")
+
+  /** Brute-force cosine top-k: for each query vector, the k nearest corpus
+    * vectors. Query side is broadcast (small); ranking uses the *rounded*
+    * similarity (6 dp) with id tie-break so ordering is engine-portable. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val c = spread(corpus).select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
+    // without it (sf0.1): BroadcastNestedLoopJoin BuildRight, the corpus broadcast
     val scored = broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", round(cosine(col("qe"), col("ce")), 6))
       // zero-norm embeddings give NaN cosine, and Spark orders NaN above
       // every double — without this filter a zero vector ranks #1 for
       // every query
       .filter(!isnan(col("sim")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    topKBySim(scored, k)
   }
 
   /** Hard-negative mining for contrastive training: for each query
@@ -84,14 +89,11 @@ object SimilarityOps {
       col("label").as("qlabel"), col("embedding").as("qe"))
     val c = spread(corpus).select(col("vec_id").as("neighbor_id"),
       col("label").as("nlabel"), col("embedding").as("ce"))
+    // without it (sf0.1): BroadcastNestedLoopJoin BuildRight, the corpus broadcast
     val scored = broadcast(q).join(c, col("qlabel") =!= col("nlabel"))
       .withColumn("sim", round(cosine(col("qe"), col("ce")), 6))
       .filter(!isnan(col("sim")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    topKBySim(scored, k)
   }
 
   /** Seeded integer centroid matrix for [[ivfTopK]]'s coarse quantizer:
@@ -136,15 +138,12 @@ object SimilarityOps {
     val qs = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
       explode(graft.functions.NearestCentroid(col("embedding"), cents, nprobe))
         .as("cell"))
+    // without it (sf0.1, 256 KB threshold): SortMergeJoin + 2 Exchange
     val scored = broadcast(qs).join(cs, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", round(cosine(col("qe"), col("ce")), 6))
       .filter(!isnan(col("sim"))) // zero-norm guard (see bruteForceTopK)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    topKBySim(scored, k)
   }
 
   // ---- persisted IVF index ----------------------------------------------
@@ -205,6 +204,7 @@ object SimilarityOps {
   def nearDupStats(corpus: DataFrame, threshold: Double): DataFrame = {
     val a = spread(corpus).select(col("vec_id"), col("embedding").as("ea"))
     val b = corpus.select(col("vec_id").as("vb"), col("embedding").as("eb"))
+    // without it (sf0.1, 256 KB threshold): CartesianProduct
     val stats = a.join(broadcast(b), col("vec_id") =!= col("vb"))
       .withColumn("sim", round(cosine(col("ea"), col("eb")), 6))
       .filter(!isnan(col("sim")))
@@ -380,6 +380,18 @@ object SimilarityOps {
   private def explodeSigs(df: DataFrame, idAlias: String): DataFrame =
     df.select(col("vec_id").as(idAlias), posexplode(col("sigs")).as(Seq("b", "sig")))
 
+  /** Distinct (query_id, neighbor_id) pairs, other than a vector with
+    * itself, that share a signature in some band. */
+  private def lshCandidates(queries: DataFrame, corpus: DataFrame, dim: Int,
+      bands: Int, rowsPerBand: Int, seed: Long): DataFrame = {
+    val qs = explodeSigs(lshSignatures(queries, dim, bands, rowsPerBand, seed), "query_id")
+    val cs = explodeSigs(lshSignatures(spread(corpus), dim, bands, rowsPerBand, seed), "neighbor_id")
+    // without it (sf0.1): BroadcastHashJoin BuildRight, the corpus signatures broadcast
+    broadcast(qs).join(cs, Seq("b", "sig"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select("query_id", "neighbor_id").distinct()
+  }
+
   /** ANN via LSH: bucket-join candidates on (band, signature), exact cosine
     * re-rank, top-k. Same output schema as [[bruteForceTopK]]; recall < 1
     * by construction (checked against brute force in OpsSpec). Embeddings
@@ -387,23 +399,15 @@ object SimilarityOps {
     * vectors, flow through the shuffle. */
   def annTopK(queries: DataFrame, corpus: DataFrame, dim: Int, k: Int,
       bands: Int = 8, rowsPerBand: Int = 8, seed: Long = 42L): DataFrame = {
-    val qs = explodeSigs(lshSignatures(queries, dim, bands, rowsPerBand, seed), "query_id")
-    val cs = explodeSigs(lshSignatures(spread(corpus), dim, bands, rowsPerBand, seed), "neighbor_id")
-    val cand = broadcast(qs).join(cs, Seq("b", "sig"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val scored = cand
+    val scored = lshCandidates(queries, corpus, dim, bands, rowsPerBand, seed)
+      // without it (sf0.1, 256 KB threshold): SortMergeJoin + 2 Exchange
       .join(broadcast(queries.select(col("vec_id").as("query_id"),
         col("embedding").as("qe"))), Seq("query_id"))
       .join(corpus.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("ce")), Seq("neighbor_id"))
       .withColumn("sim", round(cosine(col("qe"), col("ce")), 6))
       .filter(!isnan(col("sim"))) // zero-norm guard (see bruteForceTopK)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    topKBySim(scored, k)
   }
 
   /** The SCALE path for [[hardNegatives]]: LSH-bucketed candidate
@@ -417,12 +421,8 @@ object SimilarityOps {
   def hardNegativesLsh(queries: DataFrame, corpus: DataFrame, dim: Int,
       k: Int, bands: Int = 8, rowsPerBand: Int = 8,
       seed: Long = 42L): DataFrame = {
-    val qs = explodeSigs(lshSignatures(queries, dim, bands, rowsPerBand, seed), "query_id")
-    val cs = explodeSigs(lshSignatures(spread(corpus), dim, bands, rowsPerBand, seed), "neighbor_id")
-    val cand = broadcast(qs).join(cs, Seq("b", "sig"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val scored = cand
+    val scored = lshCandidates(queries, corpus, dim, bands, rowsPerBand, seed)
+      // without it (sf0.1, 256 KB threshold): SortMergeJoin + 2 Exchange
       .join(broadcast(queries.select(col("vec_id").as("query_id"),
         col("label").as("qlabel"), col("embedding").as("qe"))), Seq("query_id"))
       .join(corpus.select(col("vec_id").as("neighbor_id"),
@@ -430,11 +430,7 @@ object SimilarityOps {
       .filter(col("qlabel") =!= col("nlabel"))
       .withColumn("sim", round(cosine(col("qe"), col("ce")), 6))
       .filter(!isnan(col("sim")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    topKBySim(scored, k)
   }
 
   // ---- covariance / PCA -------------------------------------------------
@@ -745,6 +741,7 @@ object SimilarityOps {
       s"codebook shape mismatch (want $m x $k x ${dim / m})")
     val q = queries.select(col("vec_id").as("query_id"),
       pqLut(cb, dim / m).as("__lut"))
+    // without it (sf0.1): BroadcastNestedLoopJoin BuildRight, the encoded corpus broadcast
     val scored = broadcast(q)
       .join(encoded.select(col("vec_id").as("neighbor_id"), col("codes")),
         col("query_id") =!= col("neighbor_id"))
@@ -897,6 +894,7 @@ object SimilarityOps {
           .as("__cells"))
       .select(col("query_id"), col("__lut"),
         explode(col("__cells")).as("cell"))
+    // without it (sf0.1): BroadcastHashJoin BuildRight, the encoded corpus broadcast
     val scored = broadcast(qp)
       .join(idx.encoded.select(col("vec_id").as("neighbor_id"),
         col("cell"), col("codes")), Seq("cell"))
@@ -941,6 +939,7 @@ object SimilarityOps {
           .as("__cells"))
       .select(col("query_id"), col("__lut"),
         explode(col("__cells")).as("cell"))
+    // without it (sf0.1): BroadcastHashJoin BuildRight, the encoded corpus broadcast
     val scored = broadcast(qp).join(enc, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("adc", pqAdc(m, k))
@@ -1010,6 +1009,7 @@ object SimilarityOps {
       val d = element_at(col("qcodes"), i) - element_at(col("codes"), i)
       d * d
     }.reduce(_ + _)
+    // without it (sf0.1): BroadcastNestedLoopJoin BuildRight, the encoded corpus broadcast
     val scored = broadcast(q)
       .join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("dist", dist)
@@ -1085,6 +1085,7 @@ object SimilarityOps {
     val n = col("n").cast("double")
     val meanQ = s / n
     val varQ = ss / n - (s / n) * (s / n)
+    // without it (sf0.1): BroadcastHashJoin BuildLeft, the per-dimension corpus values broadcast
     qd.join(broadcast(mom), Seq("dim"))
       .select(col("vec_id"), col("dim"),
         when(varQ <= 0.0, lit(0.0))
@@ -1145,11 +1146,13 @@ object SimilarityOps {
       .drop("v")
     val cent = qd.groupBy("label", "dim")
       .agg(expr("(2 * sum(q) + count(q)) div (2 * count(q))").as("c"))
+    // without it (sf0.1, 256 KB threshold): SortMergeJoin + 1 Exchange (and again in st)
     val dist = qd.join(broadcast(cent), Seq("label", "dim"))
       .withColumn("d1", (col("q") - col("c")) * (col("q") - col("c")))
       .groupBy("vec_id", "label").agg(sum(col("d1")).as("dist"))
     val st = dist.groupBy("label")
       .agg(sum(col("dist")).as("s"), count(lit(1)).as("n"))
+    // without it (sf0.1, 256 KB threshold): SortMergeJoin + 1 Exchange
     dist.join(broadcast(st), Seq("label"))
       .select(col("vec_id"), col("label"), col("dist"),
         (col("dist").cast("decimal(38,0)") * col("n") >
@@ -1226,6 +1229,7 @@ object SimilarityOps {
     val a = corpus.select(col("vec_id").as("src"), col("embedding").as("qe"))
     val b = spread(corpus).select(col("vec_id").as("dst"),
       col("embedding").as("ce"))
+    // without it (sf0.1): BroadcastNestedLoopJoin BuildRight, the spread corpus broadcast
     val scored = broadcast(a).join(b, col("src") =!= col("dst"))
       .withColumn("sim", round(cosine(col("qe"), col("ce")), 6))
       .filter(!isnan(col("sim")))

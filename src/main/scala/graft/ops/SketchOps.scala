@@ -155,7 +155,7 @@ object SketchOps {
         .as(Seq("r", "bucket")))
     // left join: a probe whose cell no token ever hit estimates 0. The
     // sketch (≤ depth·width rows by construction) is the broadcast side.
-    val est = probeBuckets.join(broadcast(sketch), Seq("r", "bucket"), "left")
+    val est = probeBuckets.join(sketch, Seq("r", "bucket"), "left")
       .groupBy("token")
       .agg(min(coalesce(col("cnt"), lit(0L))).as("cms_est"))
     // exact counts for the error exhibit: native per-doc term counts

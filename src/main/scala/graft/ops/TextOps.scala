@@ -268,7 +268,7 @@ object TextOps {
     val cand = first.getMap[String, Long](1).keys.toSeq
     val spark = docs.sparkSession
     import spark.implicits._
-    words.join(broadcast(cand.toDF("w")), Seq("w"))
+    words.join(cand.toDF("w"), Seq("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
   }
@@ -300,10 +300,7 @@ object TextOps {
       .agg(count(lit(1)).as("n"),
         graft.functions.MisraGriesAgg(col("w"), k).as("mg"))
       .select(col("window"), col("n"), explode(map_keys(col("mg"))).as("w"))
-    // candidates are windows×k rows by construction — broadcast them so
-    // the token stream is pruned map-side at any corpus scale (without
-    // the hint the planner sees unknown post-aggregate stats and may
-    // broadcast the STREAM side instead, which only works at toy scale)
+    // without it (sf0.1): BroadcastHashJoin BuildLeft, the token stream broadcast
     wtok.join(broadcast(cand), Seq("window", "w"))
       .groupBy(col("window"), col("w"), col("n"))
       .agg(count(lit(1)).as("cnt"))
@@ -419,7 +416,8 @@ object TextOps {
       .filter(col("tok_a") < col("tok_b"))
       .groupBy("tok_a", "tok_b").agg(count(lit(1)).as("c_ab"))
       .filter(col("c_ab") >= minCount)
-    co.crossJoin(broadcast(n))
+    co.crossJoin(n)
+      // without them (sf0.1, 16 KB threshold): 2 SortMergeJoin + 2 Exchange
       .join(broadcast(dfreq.select(col("tok").as("tok_a"), col("c").as("c_a"))),
         Seq("tok_a"))
       .join(broadcast(dfreq.select(col("tok").as("tok_b"), col("c").as("c_b"))),
@@ -542,7 +540,7 @@ object TextOps {
     pairs.filter(col("n_pairs") >= minPairs)
       .join(marg.select(col("tok").as("tok_a"), col("m").as("m_a")), Seq("tok_a"))
       .join(marg.select(col("tok").as("tok_b"), col("m").as("m_b")), Seq("tok_b"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("tok_a"), col("tok_b"), col("n_pairs"),
         // factor-wise double cast before multiply — same int64-overflow
         // guard (and identical operation order) as [[pmiPairs]]
@@ -604,7 +602,7 @@ object TextOps {
     val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val scored = tf.join(dfreq, Seq("tok"))
-      .crossJoin(broadcast(nDocs))
+      .crossJoin(nDocs)
       .withColumn("score", round(col("tf").cast("double") *
         log(col("n_docs").cast("double") / col("df").cast("double")), 6))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
@@ -652,7 +650,7 @@ object TextOps {
     val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
     val nd = docs.agg(countDistinct(col(groupCol)).as("n_domains"))
     val scored = tf.join(dfreq, Seq("tok"))
-      .crossJoin(broadcast(nd))
+      .crossJoin(nd)
       .withColumn("score", round(col("tf").cast("double") *
         log(col("n_domains").cast("double") / col("df").cast("double")), 6))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("domain")
@@ -752,7 +750,7 @@ object TextOps {
     val model = tri.groupBy(col(langCol).as("lang"), col("tri"))
       .agg(count(lit(1)).as("c"))
     val tl = model.groupBy("lang").agg(sum(col("c")).as("t"))
-    val vocab = broadcast(model.agg(count_distinct(col("tri")).as("v")))
+    val vocab = model.agg(count_distinct(col("tri")).as("v"))
     val w = model.join(tl, Seq("lang")).crossJoin(vocab)
       .select(col("lang"), col("tri"),
         round(log((col("c") + 1).cast("double") /
@@ -760,6 +758,7 @@ object TextOps {
     val oov = tl.crossJoin(vocab).select(col("lang"),
       round(log(lit(1.0) / (col("t") + col("v")).cast("double")) * 1e6)
         .cast("long").as("w0"))
+    // without it (sf0.1): BroadcastNestedLoopJoin BuildLeft, the per-document counts broadcast
     val scored = dt.crossJoin(broadcast(oov))
       .join(w, Seq("lang", "tri"), "left")
       .groupBy(col("doc_id"), col("lang"))
@@ -855,7 +854,7 @@ object TextOps {
         sum(when(col("in_a"), 0L).otherwise(1L)).as("y_b"))
     val tot = counts.agg(sum("y_a").as("n_a"), sum("y_b").as("n_b"))
     val scored = counts.filter(col("y_a") + col("y_b") >= minCount)
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .withColumn("aw", lit(alpha0) *
         (col("y_a") + col("y_b")).cast("double") /
         (col("n_a") + col("n_b")).cast("double"))

@@ -104,12 +104,12 @@ object UnigramOps {
     val wd = wordFreq(docs, textCol)
     val n = wd.agg(sum("freq").as("n"))
     val selected = pieceCandidates(wd)
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .filter(length(col("piece")) === 1 ||
         col("pfreq") >= expr(s"(${ratioPpm}L * n) div 1000000L"))
       .select("piece", "pfreq")
     val tot = selected.agg(sum("pfreq").as("tot"))
-    selected.crossJoin(broadcast(tot))
+    selected.crossJoin(tot)
       .withColumn("cost",
         round(lit(1000000.0) * log(col("tot").cast("double") /
           col("pfreq").cast("double")), 0).cast("long"))
@@ -188,6 +188,7 @@ object UnigramOps {
     pw.join(segmented, Seq("word"))
       .select(col("doc_id"), col("word_pos"),
         posexplode(col("pieces")).as(Seq("piece_idx", "token")))
+      // without it (sf0.1): SortMergeJoin + 2 Exchange
       .join(broadcast(voc.select(col("piece").as("token"), col("token_id"))),
         Seq("token"))
       .withColumn("pos", row_number().over(
@@ -330,7 +331,7 @@ object UnigramOps {
     val support = used.join(floor, Seq("piece"), "full")
       .select(col("piece"), (coalesce(col("used"), lit(0L)) + 1L).as("cnt"))
     val tot = support.agg(sum("cnt").as("tot"))
-    support.crossJoin(broadcast(tot))
+    support.crossJoin(tot)
       .withColumn("cost",
         round(lit(1000000.0) * log(col("tot").cast("double") /
           col("cnt").cast("double")), 0).cast("long"))

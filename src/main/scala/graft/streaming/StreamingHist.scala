@@ -160,11 +160,13 @@ object StreamingHist {
       col("n").as("n_win")).lineageBarrier(eager = false)
     val ref = reference.select(col("key"), col("n").as("n_ref"))
     val wins = wc.select("window").distinct()
+    // without it (sf0.1, 1 KB threshold, events-sized reference): CartesianProduct
     val grid = wins.crossJoin(broadcast(ref.select("key")))
       .unionByName(wc.select("window", "key"))
       .distinct()
     val j = grid
       .join(wc, Seq("window", "key"), "left")
+      // without it (sf0.1, 1 KB threshold, events-sized reference): SortMergeJoin + 1 Exchange
       .join(broadcast(ref), Seq("key"), "left")
       .select(col("window"), col("key"),
         coalesce(col("n_win"), lit(0L)).as("n_win"),

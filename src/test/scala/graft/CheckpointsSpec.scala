@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Checkpoints
@@ -83,6 +84,25 @@ class CheckpointsSpec extends AnyFunSuite {
     val joined = big.join(m, "node")
     assert(hasBhj(joined.queryExecution.sparkPlan))
     assert(joined.count() == 3000)
+  }
+
+  test("with no hint, small sides broadcast in the executed plan") {
+    // the ops leave these joins to the planner: a one-row aggregate and a
+    // driver-built local relation, each against a side larger than the
+    // threshold (a measured barrier: the node-sized test above). Turning
+    // automatic broadcast off in GraftSession.confs fails this test.
+    import spark.implicits._
+    def broadcastOnly(df: DataFrame, rows: Long): Unit = {
+      assert(df.count() == rows)
+      val nodes = ShuffledShapes.physicalNodes(df)
+      assert(nodes.exists(n => n.isInstanceOf[BroadcastHashJoinExec] ||
+        n.isInstanceOf[BroadcastNestedLoopJoinExec]), nodes.map(_.nodeName))
+      assert(!nodes.exists(n => n.isInstanceOf[SortMergeJoinExec] ||
+        n.isInstanceOf[CartesianProductExec]), nodes.map(_.nodeName))
+    }
+    val counts = big.groupBy((col("node") % 1000).as("k")).agg(count(lit(1)).as("n"))
+    broadcastOnly(counts.crossJoin(counts.agg(sum(col("n")).as("t"))), 1000)
+    broadcastOnly(big.join((0L until 100L).map(i => (i, i * 2)).toDF("node", "v"), "node"), 100)
   }
 
   test("few rows with long strings past the threshold do not broadcast") {

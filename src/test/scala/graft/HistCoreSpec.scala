@@ -75,6 +75,12 @@ class HistCoreSpec extends AnyFunSuite {
     val got = df.select(ax.binCol(col("x")).as("i")).collect()
     assert(got.count(_.isNullAt(0)) == 3)
     assert(got.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq == Seq(2L))
+    // the fill drops the NULL-key rows, so the result collects
+    val spec = HistSpec(Seq(ax))
+    val h = Hist.fill(spec, df.repartition(3), Seq(col("x")))
+    assert(h.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((2L, 1.0)))
+    assert(HistResult.collect(spec, h).counts(flow = false).toSeq ==
+      Seq(0.0, 1.0, 0.0, 0.0))
   }
 
   test("RegularSqrt bins uniformly in sqrt(x)") {
@@ -197,6 +203,21 @@ class HistCoreSpec extends AnyFunSuite {
   test("unfilled histogram is computable and empty (ref tests/test_boost.py:13-26)") {
     val hb = new Histogram(HistSpec(Seq(Regular(3, 0.0, 1.0)), DoubleStorage))
     assert(hb.result(spark).count() == 0)
+  }
+
+  test("unfilled histogram has the filled one's schema, every storage") {
+    val storages = Seq(DoubleStorage, Int64Storage, AtomicInt64Storage,
+      UnlimitedStorage, WeightStorage, MeanStorage, WeightedMeanStorage,
+      ShiftedMeanStorage(10.0), ShiftedWeightedMeanStorage(-2.5))
+    val df = Seq((Option(0.5), Option(1.0), Option(3.0))).toDF("x", "w", "s")
+    for (st <- storages) {
+      val spec = HistSpec(Seq(Regular(4, 0.0, 4.0), RegularCircular(3, 0.0, 3.0)), st)
+      val filled = Hist.fill(spec, df, Seq(col("x"), col("x")), Some(col("w")),
+        Some(col("s")))
+      val empty = new Histogram(spec).result(spark)
+      assert(empty.schema == filled.schema, st)
+      assert(empty.count() == 0, st)
+    }
   }
 
   test("lazy + between staged histograms throws (ref boost.py:112-121)") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.hist._
@@ -45,7 +46,7 @@ class HistIOSpec extends AnyFunSuite {
     val (spec2, h2) = HistIO.read(spark, path)
     assert(spec2 == spec)
     assert(h2.count() == 0L)
-    assert(h2.schema == spec.schema)
+    assert(h2.schema == StructType(spec.empty(spark).schema.map(_.copy(nullable = true))))
   }
 
   test("shifted-moment storages round-trip with their shift parameter") {
