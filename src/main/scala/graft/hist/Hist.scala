@@ -2,7 +2,7 @@ package graft.hist
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.plans.DenseFill
 
 /** One staged fill: which DataFrame/columns feed the histogram, with
@@ -19,12 +19,19 @@ final case class FillSpec(df: DataFrame, cols: Seq[Column],
   *
   * The reference's whole pipeline — per-partition `bh.Histogram.fill`
   * (`core.py:63-257`) followed by a bounded-fan-in tree reduction
-  * (`core.py:856-885`) — is one declarative Spark aggregation here:
-  * `select(binIndex*) .groupBy(idx*) .agg(storage sums)`. Catalyst plans it
-  * as partial HashAggregate (map-side combine ≈ per-partition fill) +
-  * shuffle of bin rows only + final HashAggregate (≈ tree reduce); only
-  * histograms move across the wire, never rows — the reference's key design
-  * property, preserved (SURVEY.md §4).
+  * (`core.py:856-885`) — runs on one of two engines, chosen per fill from
+  * what the plan shows ([[fillMulti]]):
+  *  - the compiled dense fill ([[graft.plans.DenseFill]]): one buffer per
+  *    input partition, filled inside the whole-stage-codegen loop of the
+  *    scan, then merged buffer by buffer in a bounded-fan-in tree — the
+  *    reference's own shape, for numeric axes whose bins fit the rows;
+  *  - the sparse aggregate `select(binIndex*) .groupBy(idx*) .agg(storage
+  *    sums)`: partial HashAggregate, a shuffle of bin rows, final
+  *    HashAggregate — for category axes and bin spaces larger than the
+  *    rows that fill them.
+  * Either way only histograms move across the wire, never rows — the
+  * reference's key design property (SURVEY.md §4) — and both give the
+  * same rows, columns and types.
   */
 object Hist {
 
@@ -47,26 +54,84 @@ object Hist {
     val idx = spec.axes.zip(f.cols).zipWithIndex.map { case ((ax, c), i) =>
       ax.binCol(c).as(s"i$i")
     }
-    val w = f.weight.getOrElse(lit(1.0)).cast(DoubleType).as("__w")
-    val s = f.sample.getOrElse(lit(0.0)).cast(DoubleType).as("__s")
-    val rows = f.df.select(prefix ++ idx ++ Seq(w, s): _*)
+    val (w, s) = weightSample(f)
+    val rows = f.df.select(prefix ++ idx ++ Seq(w.as("__w"), s.as("__s")): _*)
     // a NULL key has no bin; only axes that can emit one pay the filter
     spec.axes.zip(spec.indexCols).collect { case (a, c) if a.nullKey => col(c).isNotNull }
       .reduceOption(_ && _).fold(rows)(rows.filter)
   }
 
+  /** A fill's weight (default 1) and sample (default 0) as doubles. */
+  private def weightSample(f: FillSpec): (Column, Column) =
+    (f.weight.getOrElse(lit(1.0)).cast(DoubleType), f.sample.getOrElse(lit(0.0)).cast(DoubleType))
+
   /** Multi-fill fused into ONE aggregation pass (reference fuses K staged
-    * fills into one task per partition, `core.py:409-434`, `:978-1005`):
-    * union of narrow projections → single groupBy → one shuffle total. */
+    * fills into one task per partition, `core.py:409-434`, `:978-1005`).
+    * On the dense engine ([[dense]]) fills over one input share its scan;
+    * on the sparse one the narrow projections are unioned under a single
+    * groupBy. One shuffle of histograms either way. */
   def fillMulti(spec: HistSpec, fills: Seq[FillSpec]): DataFrame = {
     require(fills.nonEmpty, "at least one fill required")
-    val projected = fills.map(project(spec, _)).reduce(_ unionByName _)
     val aggs = spec.storage.aggs(col("__w"), col("__s"))
-    val base = projected
+    val sparse = fills.map(project(spec, _)).reduce(_ unionByName _)
       .groupBy(spec.indexCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    spec.storage.finalizers.foldLeft(base) { case (d, (n, c)) => d.withColumn(n, c) }
+    val h = dense(spec, fills, sparse.schema).getOrElse(sparse)
+    spec.storage.finalizers.foldLeft(h) { case (d, (n, c)) => d.withColumn(n, c) }
   }
+
+  /** [[fillMulti]] on the compiled dense fill, with the sparse fill's rows
+    * and `schema`: None unless every axis is numeric and bins x slots is
+    * within [[DenseFill.MaxBins]] and within the estimated rows per planned
+    * partition of every input ([[DenseFill.fits]]).
+    *
+    * A bin's slots: one per storage accumulator; a hit count, so exactly
+    * the bins that some row reaches are emitted (a count accumulator over
+    * a term that is never null is one); and for each factor set (w, d or
+    * both) of a sum over a nullable term, the count of rows where it is
+    * set, so that such a sum is NULL where SQL's `sum` is. Fills whose
+    * DataFrames are filters of one input ([[DenseFill.shared]]) are
+    * branches of one scan. */
+  private def dense(spec: HistSpec, fills: Seq[FillSpec], schema: StructType): Option[DataFrame] = {
+    if (!axesNumeric(spec) || fills.exists(_.df.isStreaming)) return None
+    val accs = spec.storage.accs
+    // the values of a branch: one term per accumulator, then the literal 1
+    val branches = fills.map { f =>
+      val (w, s) = weightSample(f)
+      DenseFill.branch(f.df, flatIndexCol(spec, f.cols),
+        accs.map(spec.storage.term(_, w, s)) :+ lit(1))
+    }
+    def nullable(k: Int): Boolean = branches.exists(_.exprs(k + 2).nullable)
+    val guarded = accs.indices.filter(k => !accs(k).count && nullable(k))
+      .map(k => k -> (accs(k).wPow > 0, accs(k).sPow > 0))
+    val factorSets = guarded.map(_._2).distinct
+    val hitAcc = accs.indices.find(k => accs(k).count && !nullable(k))
+    // (value index, count) per slot: accumulators, hit, non-null counts
+    val slots = accs.indices.map(k => (k, accs(k).count)) ++
+      hitAcc.fold(Seq((accs.size, true)))(_ => Nil) ++
+      factorSets.map(fs => (guarded.find(_._2 == fs).get._1, true))
+    val firstGuard = slots.size - factorSets.size
+    val nonNull = accs.indices.map(k =>
+      guarded.find(_._1 == k).fold(-1)(g => firstGuard + factorSets.indexOf(g._2)))
+    val bins = spec.denseBinCount(flow = true)
+    val width = bins * slots.size
+    val spark = fills.head.df.sparkSession
+    val groups = DenseFill.shared(branches)
+    val parts = if (width > DenseFill.MaxBins) Nil
+      else groups.flatMap { case (in, _) => DenseFill.fits(spark, in, width) }
+    if (parts.size < groups.size) None
+    else {
+      val buffers = groups.map { case (in, bs) =>
+        DenseFill(spark, in, bs.map(e => e.take(2) ++ slots.map { case (i, _) => e(i + 2) }),
+          slots.map(_._2), bins.toInt)
+      }.reduce(_ union _)
+      Some(DenseFill.bins(merge(buffers, parts.sum, width.toInt, None), dims(spec),
+        slots.size, hitAcc.getOrElse(accs.size), accs.indices, nonNull, schema))
+    }
+  }
+
+  /** Per-axis bin counts with flow bins. */
+  private def dims(spec: HistSpec): Seq[Int] = spec.axes.map(_.nBins + 2)
 
   /** Partial (per-partition) histograms — the reference's
     * `partitioned_factory` (`core.py:1313-1344`): expose pre-reduction
@@ -149,13 +214,14 @@ object Hist {
     }.reduce(_ + _)
   }
 
-  /** Dense fast path, any ndim: the whole histogram as ONE `double[]`
-    * buffer per input partition — per-partition dense fill + BOUNDED-fan-in
-    * buffer merge, the literal analog of the reference's per-partition
-    * `bh.Histogram` + `split_every` tree reduce (`core.py:856-885`,
-    * `histogram.yaml:10`). Returns the same sparse relational shape as
-    * [[fill]] (flow rows included, zero bins kept) by exploding the merged
-    * array and decomposing the flat index.
+  /** The dense view of a fill, any ndim: every bin of the flow-inclusive
+    * grid, zero bins kept, as rows (i0..iD, value = Σw). It is the same
+    * engine [[fillMulti]] picks for numeric axes — one `double[]` buffer
+    * per input partition plus a BOUNDED-fan-in buffer merge, the literal
+    * analog of the reference's per-partition `bh.Histogram` +
+    * `split_every` tree reduce (`core.py:856-885`, `histogram.yaml:10`) —
+    * taken here unconditionally and read without the hit count, so bins
+    * no row reaches are rows too ([[graft.plans.DenseBins]]).
     *
     * The fill is [[graft.plans.DenseFill]]: `buf[(int) idx] += w` compiled
     * into the whole-stage-codegen loop of the bin-index projection, one
@@ -163,10 +229,9 @@ object Hist {
     * reach an exchange, never rows. Measured on 4 CPUs, 10^8 rows of 2-D
     * normal coordinates into 10x10 bins in 10 partitions (`fill-1e8-2d`):
     * 3.3–3.7 s per fill, against 7.1–7.9 s for the interpreted aggregate
-    * it replaces and 3.6 s for generating and binning the rows alone. On
+    * it replaced and 3.6 s for generating and binning the rows alone. On
     * 10^7 rows in 64 partitions into 102^3 bins (state-bound) both take
-    * 2.2–3.1 s. The sparse [[fill]] stays the default because it handles
-    * growable category axes and huge, sparse bin spaces.
+    * 2.2–3.1 s.
     *
     * Why the tree matters: a bare `.agg()` funnels every input partition's
     * buffer into ONE final reducer — at 800k scan tasks × an n-bin buffer
@@ -182,38 +247,38 @@ object Hist {
     * (reference yaml config). */
   def fillDense(spec: HistSpec, df: DataFrame, cols: Seq[Column],
       weight: Option[Column] = None, splitEvery: Option[Int] = None): DataFrame = {
-    val merged = denseBuffer(spec, df, cols, weight, splitEvery)
-    // flat index → per-axis indices (row-major strides, matching
-    // flatIndexCol); `div` keeps everything integral
-    val dims = spec.axes.map(a => (a.nBins + 2).toLong)
-    val strides = dims.scanRight(1L)(_ * _).tail
-    val idxCols = strides.zip(dims).zipWithIndex.map { case ((s, n), d) =>
-      expr(s"CAST(__pos AS BIGINT) div ${s}L % ${n}L").as(s"i$d")
-    }
-    merged.select(posexplode(col("__h")).as(Seq("__pos", "value")))
-      .select(idxCols :+ col("value"): _*)
+    val schema = StructType(spec.indexCols.map(StructField(_, LongType, nullable = false)) :+
+      StructField("value", DoubleType, nullable = false))
+    DenseFill.bins(denseBuffer(spec, df, cols, weight, splitEvery), dims(spec), 1, -1,
+      Seq(0), Seq(-1), schema)
   }
 
   /** [[fillDense]]'s reduction: one row, one column `__h`, the merged
-    * dense buffer. */
+    * dense buffer of Σw per bin. */
   private def denseBuffer(spec: HistSpec, df: DataFrame, cols: Seq[Column],
       weight: Option[Column], splitEvery: Option[Int]): DataFrame = {
     require(axesNumeric(spec), "dense fill requires numeric (indexed) axes")
     val totalL = spec.denseBinCount(flow = true)
     require(totalL > 0 && totalL <= DenseFill.MaxBins,
       s"dense fill buffer out of range: $totalL bins")
-    val total = totalL.toInt
-    val fanIn = splitEvery.getOrElse(resolveSplitEvery(df.sparkSession))
+    val b = DenseFill.branch(df, flatIndexCol(spec, cols),
+      Seq(weight.getOrElse(lit(1.0)).cast(DoubleType)))
+    val buffers = DenseFill(df.sparkSession, b.input, Seq(b.exprs), Seq(false), totalL.toInt)
+    merge(buffers, DenseFill.plannedPartitions(buffers), totalL.toInt, splitEvery)
+  }
+
+  /** The bounded-fan-in merge of `buffers`' `partitions` rows (`__h`,
+    * `total` doubles each) into one. */
+  private def merge(buffers: DataFrame, partitions: Int, total: Int,
+      splitEvery: Option[Int]): DataFrame = {
+    val fanIn = splitEvery.getOrElse(resolveSplitEvery(buffers.sparkSession))
     // the conf path validates in resolveSplitEvery; the explicit path must
     // too — fanIn < 2 makes the merge loop non-contracting (fanIn = 1
     // never terminates, <= 0 leaves unmerged partial buffers)
     require(fanIn >= 2, s"splitEvery must be >= 2, got $fanIn")
-    val rows = df.select(flatIndexCol(spec, cols).as("__i"),
-      weight.getOrElse(lit(1.0)).cast(DoubleType).as("__w"))
     val merge = graft.functions.DenseMergeAgg(col("__h"), total).as("__h")
-    var groups = DenseFill.plannedPartitions(rows)
-    var level = DenseFill(rows, total)
-      .select(spark_partition_id().cast("long").as("__g"), col("__h"))
+    var groups = partitions
+    var level = buffers.select(spark_partition_id().cast("long").as("__g"), col("__h"))
     // each level merges at most fanIn buffers per group; the last one,
     // over at most fanIn groups, is a bare aggregate
     while (groups > fanIn) {

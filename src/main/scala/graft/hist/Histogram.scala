@@ -32,9 +32,10 @@ final class Histogram(val spec: HistSpec) extends Serializable {
     this
   }
 
-  /** Materialize: all staged fills fused into one aggregation pass
-    * (one shuffle — reference fuses K fills per partition task,
-    * `core.py:978-1005`). */
+  /** Materialize: all staged fills fused into one pass
+    * ([[Hist.fillMulti]], one shuffle of histograms — the reference fuses
+    * K fills per partition task, `core.py:978-1005`). On the dense engine
+    * fills over filters of one DataFrame scan it once. */
   def result(spark: SparkSession): DataFrame =
     if (staged.isEmpty) spec.empty(spark)
     else Hist.fillMulti(spec, staged)

@@ -1,60 +1,138 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{BlockingOperatorWithCodegen, CodegenSupport,
   SparkPlan, SparkStrategy, UnaryExecNode, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructType}
 
-/** Dense histogram fill as a plan node: ONE `double[totalBins]` buffer per
-  * input partition, filled by `buf[(int) idx] += weight` for every row, and
-  * emitted as one `array<double>` row when the partition is exhausted.
+/** Dense histogram fill as a plan node: ONE `double[bins * slots]` buffer
+  * per input partition, filled row by row and emitted as one
+  * `array<double>` row when the partition is exhausted.
   *
   * This is the per-partition `bh.Histogram.fill` of the reference
-  * (`core.py:63-140`) as an operator: [[DenseFillExec]] runs the fill loop
-  * inside the whole-stage-codegen stage of the projection that computes
-  * the flat bin index, so no row leaves the generated loop, no group key
-  * is hashed and no value is boxed. A partition's buffer is the only
-  * thing it emits; [[graft.functions.DenseMergeAgg]] levels merge those
-  * P buffers ([[graft.hist.Hist.fillDense]]).
+  * (`core.py:63-140`) as an operator, with its staged fills fused into one
+  * task per partition (`core.py:409-434`, `:978-1005`): [[DenseFillExec]]
+  * runs every branch inside the whole-stage-codegen stage of the shared
+  * input, so no row leaves the generated loop, no group key is hashed and
+  * no value is boxed. A partition's buffer is the only thing it emits;
+  * [[graft.functions.DenseMergeAgg]] levels merge those P buffers and
+  * [[DenseBins]] turns the merged one into rows ([[graft.hist.Hist]]).
   *
-  * Rows whose `idx` is null or outside `[0, totalBins)` and rows whose
-  * `weight` is null are skipped; a NaN weight is added. Every partition,
-  * an empty one too, emits exactly one row.
+  * Each branch is `cond +: idx +: values`, all over the child's output:
+  * a row counts in the branch when `cond` is true, lands in bin `idx`
+  * (a bigint flat index; null or outside `[0, bins)` skips the row), and
+  * adds to slot `k` of that bin `values(k)` (a double), or 1 when
+  * `counts(k)`; a null value leaves its slot unchanged. Slot `k` of bin
+  * `b` is `buf[b * slots + k]`. Branch expressions are deterministic.
+  * Every partition, an empty one too, emits exactly one row.
   */
-case class DenseFill(idx: Expression, weight: Expression, totalBins: Int,
+case class DenseFill(branches: Seq[Seq[Expression]], counts: Seq[Boolean], bins: Int,
     buffer: Attribute, child: LogicalPlan) extends UnaryNode {
-  require(totalBins > 0 && totalBins <= DenseFill.MaxBins,
-    s"totalBins out of range: $totalBins")
+  require(bins > 0 && bins.toLong * counts.size <= DenseFill.MaxBins,
+    s"dense buffer out of range: $bins bins x ${counts.size} slots")
+  require(branches.nonEmpty && branches.forall(_.size == counts.size + 2),
+    "each branch is a condition, an index and one value per slot")
   override def output: Seq[Attribute] = buffer :: Nil
   override def producedAttributes: AttributeSet = AttributeSet(buffer)
   override protected def withNewChildInternal(c: LogicalPlan): DenseFill = copy(child = c)
 }
 
 object DenseFill {
-  /** 2^26 bins: a 512 MiB buffer of doubles per task. */
+  /** 2^26 doubles: a 512 MiB buffer per task. */
   final val MaxBins: Int = 1 << 26
 
-  /** The dense fill of `rows`, whose first column is the flat bin index
-    * (bigint) and whose second is the weight (double): one row per input
-    * partition, one column `__h` (`array<double>`, `totalBins` long).
-    * Installs [[DenseFillStrategy]] on the session. */
-  def apply(rows: DataFrame, totalBins: Int): DataFrame = {
-    val spark = rows.sparkSession
+  /** One fill over `input`: its condition, flat bin index and slot values,
+    * as in a [[DenseFill]] branch. */
+  final case class Branch(input: LogicalPlan, exprs: Seq[Expression])
+
+  /** `df`'s rows as a [[Branch]]: `df.select(idx +: values)`, analyzed,
+    * with the deterministic `Filter`s directly under that projection
+    * peeled off into the branch's condition. So fills over filters of one
+    * DataFrame get one input, which [[shared]] then scans once. A
+    * subquery stays in its own operator, where the planner rewrites it. */
+  def branch(df: DataFrame, idx: Column, values: Seq[Column]): Branch = {
+    def plain(e: Expression) = e.deterministic && !SubqueryExpression.hasSubquery(e)
+    val cols = (idx +: values).zipWithIndex.map { case (c, i) => c.as(s"__d$i") }
+    df.select(cols: _*).queryExecution.analyzed match {
+      case Project(list, child) if list.forall(plain) =>
+        // innermost filter first: an outer condition is evaluated only on
+        // the rows an inner one keeps, as the stacked filters would
+        def peel(p: LogicalPlan, outer: List[Expression]): Branch = p match {
+          case Filter(c, in) if plain(c) => peel(in, c :: outer)
+          case in =>
+            val cond = outer.reduceOption((a, b) => If(a, b, Literal.FalseLiteral))
+            Branch(in, cond.getOrElse(Literal.TrueLiteral) +:
+              list.map { case Alias(e, _) => e; case e => e })
+        }
+        peel(child, Nil)
+      case plan => Branch(plan, Literal.TrueLiteral +: plan.output)
+    }
+  }
+
+  /** `branches` grouped by shared input: one input per group, the group's
+    * branches rewritten onto its attributes. Inputs are shared when they
+    * are the same analyzed plan instance, or deterministic plans with the
+    * same result: dask's shared collection key. */
+  def shared(branches: Seq[Branch]): Seq[(LogicalPlan, Seq[Seq[Expression]])] =
+    branches.foldLeft(Vector.empty[(LogicalPlan, Vector[Seq[Expression]])]) { (groups, b) =>
+      val i = groups.indexWhere { case (in, _) =>
+        (in eq b.input) || (in.deterministic && b.input.deterministic && in.sameResult(b.input))
+      }
+      if (i < 0) groups :+ (b.input -> Vector(b.exprs))
+      else {
+        val (in, bs) = groups(i)
+        val onto = AttributeMap(b.input.output.zip(in.output))
+        val exprs = b.exprs.map(_.transform { case a: Attribute if onto.contains(a) => onto(a) })
+        groups.updated(i, in -> (bs :+ exprs))
+      }
+    }
+
+  /** The dense fill of `branches` over `input`: one row per input
+    * partition, one column `__h` (`array<double>`, `bins * counts.size`
+    * long). Installs [[DenseFillStrategy]] on the session. */
+  def apply(spark: SparkSession, input: LogicalPlan, branches: Seq[Seq[Expression]],
+      counts: Seq[Boolean], bins: Int): DataFrame = {
     DenseFillStrategy.setup(spark)
-    val child = rows.queryExecution.analyzed
-    val Seq(idx, weight) = child.output
     val buffer = AttributeReference("__h",
       ArrayType(DoubleType, containsNull = false), nullable = false)()
-    GraftShims.ofRows(spark, DenseFill(idx, weight, totalBins, buffer, child))
+    GraftShims.ofRows(spark, DenseFill(branches, counts, bins, buffer, input))
+  }
+
+  /** The rows of `merged`'s one buffer, as [[DenseBins]] with columns
+    * `schema`. */
+  def bins(merged: DataFrame, dims: Seq[Int], slots: Int, hit: Int,
+      values: Seq[Int], nonNull: Seq[Int], schema: StructType): DataFrame = {
+    val spark = merged.sparkSession
+    DenseFillStrategy.setup(spark)
+    val child = merged.queryExecution.analyzed
+    val out = schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+    GraftShims.ofRows(spark,
+      DenseBins(dims, slots, hit, values, nonNull, child.output.head, out, child))
+  }
+
+  /** The planned partitions of `input` when it is estimated to hold at
+    * least `width` rows per partition, `width` being the buffer length a
+    * dense fill gives each; None otherwise, so a buffer is never larger
+    * than the rows it sums. The rows come from the optimized plan's
+    * statistics: the row count, else the size over the row size. `input`
+    * is planned physically only when its rows alone reach `width`. */
+  def fits(spark: SparkSession, input: LogicalPlan, width: Long): Option[Int] = {
+    val df = GraftShims.ofRows(spark, input)
+    val plan = df.queryExecution.optimizedPlan
+    val st = plan.stats
+    val rows = st.rowCount.getOrElse(st.sizeInBytes / EstimationUtils.getSizePerRow(plan.output))
+    if (rows < width) None
+    else Some(plannedPartitions(df)).filter(p => rows / p.max(1) >= width)
   }
 
   /** The number of partitions `df` will have, read from its physical plan
@@ -75,11 +153,26 @@ object DenseFill {
   }
 }
 
-/** Plans [[DenseFill]] as [[DenseFillExec]]. */
+/** The rows of one merged [[DenseFill]] buffer (`buffer`, the child's
+  * only row): one row per bin whose `hit` slot is positive, or per bin
+  * when `hit` < 0. A row is the bin's per-axis indices (row-major over
+  * `dims`), then one column per `values` slot: a bigint count, or a double
+  * sum that is null where slot `nonNull(j)` (when >= 0) is 0. */
+case class DenseBins(dims: Seq[Int], slots: Int, hit: Int, values: Seq[Int],
+    nonNull: Seq[Int], buffer: Attribute, output: Seq[Attribute], child: LogicalPlan)
+    extends UnaryNode {
+  override def producedAttributes: AttributeSet = AttributeSet(output)
+  override protected def withNewChildInternal(c: LogicalPlan): DenseBins = copy(child = c)
+}
+
+/** Plans [[DenseFill]] as [[DenseFillExec]] and [[DenseBins]] as
+  * [[DenseBinsExec]]. */
 object DenseFillStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case DenseFill(idx, weight, totalBins, buffer, child) =>
-      DenseFillExec(idx, weight, totalBins, buffer, planLater(child)) :: Nil
+    case DenseFill(branches, counts, bins, buffer, child) =>
+      DenseFillExec(branches, counts, bins, buffer, planLater(child)) :: Nil
+    case DenseBins(dims, slots, hit, values, nonNull, buffer, output, child) =>
+      DenseBinsExec(dims, slots, hit, values, nonNull, buffer, output, planLater(child)) :: Nil
     case _ => Nil
   }
 
@@ -95,8 +188,10 @@ object DenseFillStrategy extends SparkStrategy {
   * partition (`doProduce`), as an aggregate without grouping keys does.
   * `doExecute` is the same loop over the child's rows, for plans that run
   * without whole-stage codegen. */
-case class DenseFillExec(idx: Expression, weight: Expression, totalBins: Int,
+case class DenseFillExec(branches: Seq[Seq[Expression]], counts: Seq[Boolean], bins: Int,
     buffer: Attribute, child: SparkPlan) extends UnaryExecNode with BlockingOperatorWithCodegen {
+
+  private val slots = counts.size
 
   override def output: Seq[Attribute] = buffer :: Nil
   override def producedAttributes: AttributeSet = AttributeSet(buffer)
@@ -109,18 +204,25 @@ case class DenseFillExec(idx: Expression, weight: Expression, totalBins: Int,
 
   protected override def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")
-    val boundIdx = BindReferences.bindReference(idx, child.output)
-    val boundWeight = BindReferences.bindReference(weight, child.output)
-    val n = totalBins
+    val bound = branches.map(_.map(BindReferences.bindReference(_, child.output)).toArray)
+    val (n, s, isCount) = (bins, slots, counts.toArray)
     child.execute().mapPartitions { rows =>
-      val buf = new Array[Double](n)
+      val buf = new Array[Double](n * s)
       rows.foreach { row =>
-        val i = boundIdx.eval(row)
-        if (i != null) {
-          val bin = i.asInstanceOf[Long]
-          if (bin >= 0 && bin < n) {
-            val w = boundWeight.eval(row)
-            if (w != null) buf(bin.toInt) += w.asInstanceOf[Double]
+        bound.foreach { b =>
+          if (b(0).eval(row) == true) {
+            val i = b(1).eval(row)
+            if (i != null) {
+              val bin = i.asInstanceOf[Long]
+              if (bin >= 0 && bin < n) {
+                var k = 0
+                while (k < s) {
+                  val v = b(k + 2).eval(row)
+                  if (v != null) buf(bin.toInt * s + k) += (if (isCount(k)) 1.0 else v.asInstanceOf[Double])
+                  k += 1
+                }
+              }
+            }
           }
         }
       }
@@ -152,7 +254,7 @@ case class DenseFillExec(idx: Expression, weight: Expression, totalBins: Int,
     s"""
        |while (!$filled) {
        |  $filled = true;
-       |  $bufTerm = new double[$totalBins];
+       |  $bufTerm = new double[${bins.toLong * slots}];
        |  $fillFnName();
        |  ${classOf[ArrayData].getName} $result =
        |    ${classOf[UnsafeArrayData].getName}.fromPrimitiveArray($bufTerm);
@@ -163,22 +265,105 @@ case class DenseFillExec(idx: Expression, weight: Expression, totalBins: Int,
      """.stripMargin
   }
 
+  // branches that differ only in their condition (staged fills of one
+  // input) share one bin index: the row adds its value once per branch
+  // whose condition holds
   override def doConsume(ctx: CodegenContext, input: Seq[ExprCode], row: ExprCode): String = {
     ctx.currentVars = input
-    val i = BindReferences.bindReference(idx, child.output).genCode(ctx)
-    val w = BindReferences.bindReference(weight, child.output).genCode(ctx)
-    val bin = ctx.freshName("bin")
-    s"""
-       |${i.code}
-       |if (!${i.isNull}) {
-       |  long $bin = ${i.value};
-       |  if ($bin >= 0L && $bin < ${totalBins}L) {
-       |    ${w.code}
-       |    if (!${w.isNull}) $bufTerm[(int) $bin] += ${w.value};
-       |  }
-       |}
-     """.stripMargin
+    def gen(e: Expression) = BindReferences.bindReference(e, child.output).genCode(ctx)
+    val keys = branches.map(_.tail.map(_.canonicalized))
+    keys.distinct.map(k => keys.zip(branches).collect { case (`k`, b) => b }).map { group =>
+      val b = group.head
+      val idx = gen(b(1))
+      val base = ctx.freshName("base")
+      val times = ctx.freshName("times")
+      val adds = b.drop(2).zip(counts).zipWithIndex.map { case ((e, count), k) =>
+        val v = gen(e)
+        val one = if (count) "1.0" else v.value.toString
+        val add = if (group.size == 1) one else s"($times == 1 ? $one : $one * $times)"
+        s"""
+           |${v.code}
+           |if (!${v.isNull}) $bufTerm[$base + $k] += $add;
+         """.stripMargin
+      }
+      val fill =
+        s"""
+           |${idx.code}
+           |if (!${idx.isNull} && ${idx.value} >= 0L && ${idx.value} < ${bins}L) {
+           |  int $base = (int) ${idx.value} * $slots;
+           |  ${adds.mkString}
+           |}
+         """.stripMargin
+      if (group.size == 1 && b.head == Literal.TrueLiteral) fill
+      else {
+        val conds = group.map { br =>
+          val c = gen(br.head)
+          s"""
+             |${c.code}
+             |if (!${c.isNull} && ${c.value}) $times++;
+           """.stripMargin
+        }
+        s"""
+           |int $times = 0;
+           |${conds.mkString}
+           |if ($times > 0) {
+           |  $fill
+           |}
+         """.stripMargin
+      }
+    }.mkString
   }
 
   override protected def withNewChildInternal(c: SparkPlan): DenseFillExec = copy(child = c)
+}
+
+/** Physical [[DenseBins]]: at most `dims.product` rows from one buffer,
+  * written without codegen. */
+case class DenseBinsExec(dims: Seq[Int], slots: Int, hit: Int, values: Seq[Int],
+    nonNull: Seq[Int], buffer: Attribute, output: Seq[Attribute], child: SparkPlan)
+    extends UnaryExecNode {
+
+  override def producedAttributes: AttributeSet = AttributeSet(output)
+  // rows stay in their buffer's partition: one partition stays one, so a
+  // sort or join above needs no exchange
+  override def outputPartitioning: Partitioning = child.outputPartitioning match {
+    case SinglePartition => SinglePartition
+    case p => UnknownPartitioning(p.numPartitions)
+  }
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
+  protected override def doExecute(): RDD[InternalRow] = {
+    val numOutputRows = longMetric("numOutputRows")
+    val at = child.output.indexWhere(_.exprId == buffer.exprId)
+    val (d, s, h, vs, nn) = (dims.toArray, slots, hit, values.toArray, nonNull.toArray)
+    val strides = d.scanRight(1L)(_ * _).tail
+    val isLong = output.drop(d.length).map(_.dataType == LongType).toArray
+    val types = output.map(_.dataType).toArray
+    child.execute().mapPartitions { rows =>
+      val proj = UnsafeProjection.create(types)
+      rows.flatMap { r =>
+        val buf = r.getArray(at).toDoubleArray()
+        Iterator.range(0, d.product).filter(b => h < 0 || buf(b * s + h) > 0).map { b =>
+          val out = new GenericInternalRow(types.length)
+          var k = 0
+          while (k < d.length) { out.update(k, b / strides(k) % d(k)); k += 1 }
+          var j = 0
+          while (j < vs.length) {
+            val v = buf(b * s + vs(j))
+            out.update(k + j,
+              if (isLong(j)) v.toLong
+              else if (nn(j) >= 0 && buf(b * s + nn(j)) == 0) null
+              else v)
+            j += 1
+          }
+          numOutputRows += 1
+          proj(out)
+        }
+      }
+    }
+  }
+
+  override protected def withNewChildInternal(c: SparkPlan): DenseBinsExec = copy(child = c)
 }

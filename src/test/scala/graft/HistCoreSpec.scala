@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, RangeExec, SparkPlan,
-  WholeStageCodegenExec}
-import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+  UnionExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -299,26 +299,76 @@ class HistCoreSpec extends AnyFunSuite {
     assert(g2.toSeq == Seq(0L, 1L, 1L, 2L, 3L, 4L))
   }
 
-  /** The sparse [[Hist.fill]] of column x as a dense flow-inclusive
-    * array: an independent path to compare the dense tree against. */
-  private def sparseAsDense(spec: HistSpec, df: org.apache.spark.sql.DataFrame)
-      : Seq[Double] = {
-    val out = Array.fill(spec.denseBinCount(flow = true).toInt)(0.0)
-    Hist.fill(spec, df, Seq(col("x"))).collect()
-      .foreach(r => out(r.getLong(0).toInt) = r.getDouble(1))
-    out.toSeq
+  /** The sparse fill as a plain groupBy, kept here as the oracle of the
+    * engine that [[Hist]] picks: bin keys from `Axis.binCol`, NULL-key
+    * rows dropped, `storage.aggs` over the union of the fills' rows, then
+    * the finalizers. */
+  private def reference(spec: HistSpec, fills: Seq[FillSpec]): DataFrame = {
+    val rows = fills.map { f =>
+      val keys = spec.axes.zip(f.cols).zipWithIndex.map { case ((a, c), i) => a.binCol(c).as(s"i$i") }
+      val w = f.weight.getOrElse(lit(1.0)).cast("double").as("__w")
+      val s = f.sample.getOrElse(lit(0.0)).cast("double").as("__s")
+      val r = f.df.select(keys :+ w :+ s: _*)
+      spec.axes.zip(spec.indexCols).collect { case (a, c) if a.nullKey => col(c).isNotNull }
+        .reduceOption(_ && _).fold(r)(r.filter)
+    }.reduce(_ unionByName _)
+    val aggs = spec.storage.aggs(col("__w"), col("__s"))
+    val h = rows.groupBy(spec.indexCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    spec.storage.finalizers.foldLeft(h) { case (d, (n, c)) => d.withColumn(n, c) }
   }
+
+  /** [[reference]]'s Σw of coordinate columns `cols` on the flow-inclusive
+    * grid, zero where no row lands: the dense views' oracle. */
+  private def referenceGrid(spec: HistSpec, df: DataFrame, cols: Seq[Column],
+      w: Option[Column] = None): Map[Seq[Long], Double] = {
+    val d = spec.ndim
+    val hit: Map[Seq[Long], Double] = reference(spec, Seq(FillSpec(df, cols, w))).collect()
+      .map(r => ((0 until d).map(r.getLong): Seq[Long]) -> Option(r.get(d)).fold(0.0)(_.asInstanceOf[Double]))
+      .toMap
+    val keys = spec.axes.foldLeft(Seq(Seq.empty[Long])) { (ks, a) =>
+      for (k <- ks; i <- 0L until a.nBins + 2L) yield k :+ i
+    }
+    keys.map(k => k -> hit.getOrElse(k, 0.0)).toMap
+  }
+
+  /** [[referenceGrid]] of column x as a row-major array. */
+  private def referenceDense(spec: HistSpec, df: DataFrame): Seq[Double] =
+    referenceGrid(spec, df, Seq(col("x"))).toSeq.sortBy(_._1.head).map(_._2)
+
+  /** A fill's rows keyed by bin. */
+  private def byBin(h: DataFrame, d: Int): Map[Seq[Any], Seq[Any]] =
+    h.collect().map(r => r.toSeq.take(d) -> r.toSeq.drop(d)).toMap
+
+  /** Equal, NaN to NaN, doubles to 1e-9 relative (summation order). */
+  private def same(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) => x == y || x.isNaN && y.isNaN ||
+      math.abs(x - y) <= 1e-9 * math.max(math.abs(x), math.abs(y))
+    case _ => a == b
+  }
+
+  /** `got` has `want`'s schema (names, types, nullability), bins and values. */
+  private def assertSameHist(got: DataFrame, want: DataFrame, d: Int, clue: String): Unit = {
+    assert(got.schema == want.schema, clue)
+    val (g, w) = (byBin(got, d), byBin(want, d))
+    assert(g.keySet == w.keySet, s"$clue: bins ${g.keySet.size} vs ${w.keySet.size}")
+    w.foreach { case (k, v) =>
+      assert(v.zip(g(k)).forall { case (a, b) => same(a, b) }, s"$clue bin $k: ${g(k)} vs $v")
+    }
+  }
+
+  private def denseFills(h: DataFrame): Seq[DenseFillExec] =
+    ShuffledShapes.physicalNodes(h).collect { case f: DenseFillExec => f }
 
   /** Shuffle exchanges in a Dataset's physical plan (AQE's initial plan). */
   private def exchanges(df: org.apache.spark.sql.DataFrame): Int =
     ShuffledShapes.physicalNodes(df).count(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
 
-  test("fillTree (split_every analog) == sparse fill") {
+  test("fillTree (split_every analog) == groupBy reference") {
     val df = Seq.tabulate(500)(i => math.sin(i * 1.1) * 4).toDF("x").repartition(9)
     val spec = HistSpec(Seq(Regular(6, -4.0, 4.0)), DoubleStorage)
     val viaTree = Hist.fillTree(spec, df, Seq(col("x")), splitEvery = Some(2))
-    assert(viaTree.toSeq == sparseAsDense(spec, df))
+    assert(viaTree.toSeq == referenceDense(spec, df))
     assert(viaTree.sum == 500.0)
   }
 
@@ -337,7 +387,7 @@ class HistCoreSpec extends AnyFunSuite {
       assert(levels == 3)
       // end-to-end: conf-driven fan-in produces the same histogram
       val viaConf = Hist.fillTree(spec, df, Seq(col("x")))
-      assert(viaConf.toSeq == sparseAsDense(spec, df))
+      assert(viaConf.toSeq == referenceDense(spec, df))
       spark.conf.set(Hist.SplitEveryConf, "1")
       intercept[IllegalArgumentException](Hist.resolveSplitEvery(spark))
     } finally spark.conf.unset(Hist.SplitEveryConf)
@@ -391,17 +441,16 @@ class HistCoreSpec extends AnyFunSuite {
     case _ => p +: p.children.flatMap(stageNodes)
   }
 
-  test("dense codegen fill path == sparse fill + densify") {
+  test("dense codegen fill path == groupBy reference + zero grid") {
     val spec = HistSpec(Seq(Regular(8, -5.0, 5.0)), DoubleStorage)
-    def sparse(df: DataFrame, w: Option[Column]): Map[Long, Double] =
-      Hist.densify(spec, Hist.fill(spec, df, Seq(col("x")), w), flow = true)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def want(df: DataFrame, w: Option[Column]): Map[Long, Double] =
+      referenceGrid(spec, df, Seq(col("x")), w).map { case (k, v) => k.head -> v }
     def dense(df: DataFrame, w: Option[Column]): Map[Long, Double] =
       Hist.fillDense(spec, df, Seq(col("x")), w)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val df = Seq.tabulate(1000)(i => math.sin(i * 0.7) * 6).toDF("x").repartition(5)
     val plain = dense(df, None)
-    assert(plain == sparse(df, None))
+    assert(plain == want(df, None))
     assert(plain.size == 10)
     // null weights are skipped, null and NaN coordinates land in the
     // overflow bin; weights are multiples of 1/4, so every summation
@@ -413,13 +462,13 @@ class HistCoreSpec extends AnyFunSuite {
       (x, w)
     }.toDF("x", "w")
     val w = Some(col("w"))
-    val want = sparse(odd, w)
-    assert(want(9L) > 0.0)
-    assert(want.values.sum == (0 until 1000).filter(_ % 9 != 0).map(i => (i % 7) * 0.25).sum)
-    for (n <- Seq(1, 7, 13)) assert(dense(odd.repartition(n), w) == want, s"repartition($n)")
+    val oddWant = want(odd, w)
+    assert(oddWant(9L) > 0.0)
+    assert(oddWant.values.sum == (0 until 1000).filter(_ % 9 != 0).map(i => (i % 7) * 0.25).sum)
+    for (n <- Seq(1, 7, 13)) assert(dense(odd.repartition(n), w) == oddWant, s"repartition($n)")
     interpreted {
       val d = Hist.fillDense(spec, odd.repartition(7), Seq(col("x")), w)
-      assert(d.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap == want)
+      assert(d.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap == oddWant)
       val nodes = ShuffledShapes.physicalNodes(d)
       assert(nodes.exists(_.isInstanceOf[DenseFillExec]) &&
         !nodes.exists(_.isInstanceOf[WholeStageCodegenExec]),
@@ -436,9 +485,7 @@ class HistCoreSpec extends AnyFunSuite {
     val (d, jobs) = JobCounts.of(spark)(Hist.fillDense(spec, df, Seq(col("x"))))
     assert(jobs == 0)
     val got = d.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val sparse = Hist.densify(spec, Hist.fill(spec, df, Seq(col("x"))), flow = true)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got == sparse)
+    assert(got == referenceGrid(spec, df, Seq(col("x"))).map { case (k, v) => k.head -> v })
     assert(got.values.sum == 1000000.0)
   }
 
@@ -538,19 +585,18 @@ class HistCoreSpec extends AnyFunSuite {
     assert(h == Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
   }
 
-  test("fillDense N-D bounded merge tree == sparse fill + densify") {
+  test("fillDense N-D bounded merge tree == groupBy reference + zero grid") {
     val df = Seq.tabulate(2000)(i => (math.sin(i * 0.7) * 6, math.cos(i * 1.3) * 3))
       .toDF("x", "y").repartition(9)
     val spec = HistSpec(Seq(Regular(5, -5.0, 5.0), Regular(4, -3.0, 3.0)), DoubleStorage)
-    val sparse = Hist.densify(spec, Hist.fill(spec, df, Seq(col("x"), col("y"))),
-        flow = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val xy = Seq(col("x"), col("y"))
+    def grid(d: DataFrame) = d.collect()
+      .map(r => Seq(r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val want = referenceGrid(spec, df, xy)
     // fan-in 2 over 9 partitions forces the multi-level contraction
-    val denseDf = Hist.fillDense(spec, df, Seq(col("x"), col("y")),
-      splitEvery = Some(2))
-    val dense = denseDf.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(dense == sparse)
+    val denseDf = Hist.fillDense(spec, df, xy, splitEvery = Some(2))
+    val dense = grid(denseDf)
+    assert(dense == want)
     assert(dense.size == 7 * 6)
     // bounded merge: the plan must carry DenseMergeAgg contraction levels
     // (no single final reducer sees all 9 partial buffers)
@@ -559,24 +605,17 @@ class HistCoreSpec extends AnyFunSuite {
     // the same merged grid from the interpreted fill, and with null and
     // NaN coordinates (overflow) under any partitioning
     interpreted {
-      val viaInterpreted = Hist.fillDense(spec, df, Seq(col("x"), col("y")),
-        splitEvery = Some(2)).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      assert(viaInterpreted == sparse)
+      assert(grid(Hist.fillDense(spec, df, xy, splitEvery = Some(2))) == want)
     }
     val odd = df.select(
       when(col("x") > 4.5, lit(null).cast("double")).otherwise(col("x")).as("x"),
       when(col("y") < -2.5, lit(Double.NaN)).otherwise(col("y")).as("y"))
-    def grid(d: DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val want = grid(Hist.densify(spec, Hist.fill(spec, odd, Seq(col("x"), col("y"))),
-      flow = true))
-    assert(want.exists { case ((i, _), v) => i == 6L && v > 0 } &&
-      want.exists { case ((_, j), v) => j == 5L && v > 0 })
+    val oddWant = referenceGrid(spec, odd, xy)
+    assert(oddWant.exists { case (k, v) => k.head == 6L && v > 0 } &&
+      oddWant.exists { case (k, v) => k(1) == 5L && v > 0 })
     for (n <- Seq(1, 7, 13)) {
-      val got = grid(Hist.fillDense(spec, odd.repartition(n), Seq(col("x"), col("y")),
-        splitEvery = Some(2)))
-      assert(got == want, s"repartition($n)")
+      val got = grid(Hist.fillDense(spec, odd.repartition(n), xy, splitEvery = Some(2)))
+      assert(got == oddWant, s"repartition($n)")
     }
   }
 
@@ -588,9 +627,7 @@ class HistCoreSpec extends AnyFunSuite {
     // beyond the input's
     assert(exchanges(d) - exchanges(df) == 1)
     val got = d.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val sparse = Hist.densify(spec, Hist.fill(spec, df, Seq(col("x"))), flow = true)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got == sparse)
+    assert(got == referenceGrid(spec, df, Seq(col("x"))).map { case (k, v) => k.head -> v })
   }
 
   test("axis names survive fill -> result round-trip (named-axis protocol)") {
@@ -736,5 +773,126 @@ class HistCoreSpec extends AnyFunSuite {
     val mh = Hist.fill(mspec, df, Seq(col("v")), sample = Some(col("v")))
     intercept[IllegalArgumentException](
       HistAlgebra.percentileRank(mspec, mh, df, col("v")))
+  }
+
+  test("dense engine == groupBy reference: every storage, nulls, NaN, flow, partitionings") {
+    val rnd = new scala.util.Random(11)
+    def coord(): Option[Double] = rnd.nextInt(40) match {
+      case 0 => None
+      case 1 => Some(Double.NaN)
+      case 2 => Some(Double.PositiveInfinity)
+      case 3 => Some(Double.NegativeInfinity)
+      case _ => Some(rnd.nextGaussian() * 1.5)
+    }
+    // by x: all-null weights in [-2, -1) (a NULL sum), zero weights in
+    // [-1, 0) (bins with Σw = 0 are still rows), NaN weights past 1
+    def weight(x: Option[Double]): Option[Double] = x match {
+      case Some(v) if v >= -2 && v < -1 => None
+      case Some(v) if v >= -1 && v < 0 => Some(0.0)
+      case Some(v) if v >= 1 && rnd.nextInt(50) == 0 => Some(Double.NaN)
+      case _ => if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(8) * 0.25)
+    }
+    // null samples everywhere, and every sample null in circular bin 1
+    def sample(y: Option[Double]): Option[Double] = y match {
+      case Some(v) if v >= 0 && v < 1 => None
+      case _ => rnd.nextInt(12) match {
+        case 0 => None
+        case 1 => Some(Double.NaN)
+        case _ => Some(rnd.nextInt(16) * 0.5 - 3)
+      }
+    }
+    def table(n: Int) = Seq.fill(n) {
+      val (x, y) = (coord(), coord())
+      (x, y, weight(x), sample(y))
+    }.toDF("x", "y", "w", "s")
+    val df = table(6000)
+    val other = table(3000)
+    val xy = Seq(col("x"), col("y"))
+    val axes = Seq(Regular(4, -2.0, 2.0), RegularCircular(3, 0.0, 3.0))
+    val storages = Seq(DoubleStorage, Int64Storage, AtomicInt64Storage, UnlimitedStorage,
+      WeightStorage, MeanStorage, WeightedMeanStorage, ShiftedMeanStorage(1.5),
+      ShiftedWeightedMeanStorage(-0.5))
+    for (st <- storages) {
+      val spec = HistSpec(axes, st)
+      def check(fills: Seq[FillSpec], dense: Boolean, clue: String): DataFrame = {
+        val h = new Histogram(spec)
+        fills.foreach(f => h.fill(f.df, f.cols, f.weight, f.sample))
+        val got = h.result(spark)
+        assert(denseFills(got).nonEmpty == dense, s"$st $clue: dense engine")
+        assertSameHist(got, reference(spec, fills), 2, s"$st $clue")
+        got
+      }
+      for (n <- Seq(1, 7, 13))
+        check(Seq(FillSpec(df.repartition(n), xy, Some(col("w")), Some(col("s")))),
+          dense = true, s"repartition($n)")
+      // non-null inputs get no non-null counts: at most one slot beyond
+      // the accumulators, the hit count
+      val plain = check(Seq(FillSpec(df, xy, None, Some(coalesce(col("s"), lit(1.0))))),
+        dense = true, "non-null inputs")
+      assert(denseFills(plain).forall(_.counts.size <= st.accs.size + 1), st)
+      // empty: an empty relation stays sparse; a filter that keeps no
+      // row is a dense branch that reaches no bin
+      check(Seq(FillSpec(df.limit(0), xy, Some(col("w")), Some(col("s")))), dense = false, "empty")
+      check(Seq(FillSpec(df.where(col("x") > 100), xy, Some(col("w")), Some(col("s")))),
+        dense = true, "no row kept")
+      // K fused == K unfused: overlapping filters count a row in each, a
+      // NULL condition (null x or s) counts it in none, and a fill over
+      // another input gets its own scan
+      val fused = check(Seq(
+        FillSpec(df.where(col("x") > 0), xy, Some(col("w")), Some(col("s"))),
+        FillSpec(df.where(col("x") > -1).where(col("s") > 0), xy, Some(col("w")), Some(col("s"))),
+        FillSpec(df, xy, Some(lit(2.0)), Some(col("s"))),
+        FillSpec(other, xy, Some(col("w")), Some(col("s")))), dense = true, "fused")
+      assert(denseFills(fused).map(_.branches.size).sorted == Seq(1, 3), st)
+    }
+  }
+
+  test("staged fills over one generated input run one scan and one dense fill") {
+    val df = spark.range(0, 200000, 1, 4)
+      .select(col("id"), randn(5).as("x"), randn(6).as("y"))
+    val xy = Seq(col("x"), col("y"))
+    val spec = HistSpec(Seq(Regular(10, -3.0, 3.0), Regular(10, -3.0, 3.0)), DoubleStorage)
+    val h = new Histogram(spec).fill(df.where(col("id") % 2 === 0), xy)
+      .fill(df.where(col("id") % 2 === 1), xy).result(spark)
+    assert(h.collect().map(_.getDouble(2)).sum == 200000.0)
+    val nodes = ShuffledShapes.physicalNodes(h)
+    def names = nodes.map(_.nodeName).mkString(", ")
+    assert(nodes.count(_.isInstanceOf[RangeExec]) == 1, names)
+    assert(nodes.count(_.isInstanceOf[DenseFillExec]) == 1, names)
+    assert(!nodes.exists(n => n.isInstanceOf[UnionExec] || n.isInstanceOf[HashAggregateExec]),
+      names)
+  }
+
+  test("a bin space larger than the rows per partition stays on the sparse aggregate") {
+    // 10^6 bins over 10^4 rows: a dense buffer would outweigh its rows
+    val df = spark.range(0, 10000, 1, 2).select(rand(1).as("x"), rand(2).as("y"))
+    val spec = HistSpec(Seq(Regular(998, 0.0, 1.0), Regular(998, 0.0, 1.0)), DoubleStorage)
+    val h = Hist.fill(spec, df, Seq(col("x"), col("y")))
+    val nodes = ShuffledShapes.physicalNodes(h)
+    assert(nodes.exists(_.isInstanceOf[HashAggregateExec]) &&
+      !nodes.exists(_.isInstanceOf[DenseFillExec]), nodes.map(_.nodeName).mkString(", "))
+    assert(h.collect().map(_.getDouble(2)).sum == 10000.0)
+  }
+
+  test("building any fill runs no job") {
+    val path = java.nio.file.Files.createTempDirectory("hist-build").resolve("t").toString
+    spark.range(0, 20000, 1, 3).select(rand(7).as("x")).write.parquet(path)
+    val inputs = Seq(
+      "range" -> spark.range(0, 100000, 1, 4).select(rand(1).as("x")),
+      "adaptive" -> spark.range(0, 100000, 1, 4).select(rand(2).as("x")).repartition(6),
+      "local" -> Seq(0.1, 0.5, 0.9).toDF("x"),
+      "parquet" -> spark.read.parquet(path))
+    val spec = HistSpec(Seq(Regular(10, 0.0, 1.0)), WeightedMeanStorage)
+    val dbl = HistSpec(Seq(Regular(10, 0.0, 1.0)), DoubleStorage)
+    for ((name, df) <- inputs) {
+      val x = Seq(col("x"))
+      val builds = Seq[() => Any](
+        () => Hist.fill(spec, df, x, Some(col("x")), Some(col("x"))),
+        () => new Histogram(dbl).fill(df.where(col("x") > 0.5), x).fill(df, x).result(spark),
+        () => Routines.histogram(df, col("x"), BinsSpec.Count(10), Some(BinsSpec.RangePair(0.0, 1.0))),
+        () => Hist.fillDense(dbl, df, x))
+      for ((b, i) <- builds.zipWithIndex)
+        assert(JobCounts.of(spark)(b())._2 == 0, s"$name build $i")
+    }
   }
 }

@@ -10,8 +10,10 @@ counts the plan nodes named
 
 from the node-detail lines `(N) <Node> ...` of the formatted plan
 (subquery plans included). `Exchange` is the shuffle exchange only;
-`BroadcastExchange` and `ReusedExchange` are other nodes. An sbt
-`[info] ` prefix on each line is ignored.
+`BroadcastExchange` and `ReusedExchange` are other nodes. `Scan` counts
+the leaves that read input rows: `Scan <source>` (parquet, ExistingRDD,
+...), `Range` and `LocalTableScan`. An sbt `[info] ` prefix on each line
+is ignored.
 
 Usage:
   python3 tools/planshape.py PLANS
@@ -20,7 +22,7 @@ Usage:
       one JSON line per query whose counts differ (or that is in only
       one file): {"query", "before", "after", "worse"}, then a summary
       line. `worse` is true when the query gains a SortMergeJoin,
-      ShuffledHashJoin, CartesianProduct or Exchange, or loses a
+      ShuffledHashJoin, CartesianProduct, Exchange or Scan, or loses a
       broadcast join. Exit status 1 if any query is worse.
 
 Example:
@@ -31,8 +33,10 @@ import re
 import sys
 
 NODES = ("BroadcastHashJoin", "BroadcastNestedLoopJoin", "SortMergeJoin",
-         "ShuffledHashJoin", "CartesianProduct", "Exchange")
-WORSE_IF_MORE = ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct", "Exchange")
+         "ShuffledHashJoin", "CartesianProduct", "Exchange", "Scan")
+# detail-line node names counted as `Scan`
+SCANS = ("Scan", "Range", "LocalTableScan")
+WORSE_IF_MORE = ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct", "Exchange", "Scan")
 BROADCAST = ("BroadcastHashJoin", "BroadcastNestedLoopJoin")
 
 HEADER = re.compile(r"^========== (\S+) ==========$")
@@ -52,8 +56,9 @@ def shapes(path):
                 cur = out.setdefault(h.group(1), dict.fromkeys(NODES, 0))
                 continue
             d = DETAIL.match(line)
-            if cur is not None and d and d.group(1) in cur:
-                cur[d.group(1)] += 1
+            node = d and ("Scan" if d.group(1) in SCANS else d.group(1))
+            if cur is not None and node in cur:
+                cur[node] += 1
     return out
 
 
