@@ -23,7 +23,8 @@ final case class FillSpec(df: DataFrame, cols: Seq[Column],
   * what the plan shows ([[fillMulti]]):
   *  - the compiled dense fill ([[graft.plans.DenseFill]]): one buffer per
   *    input partition, filled inside the whole-stage-codegen loop of the
-  *    scan, then merged buffer by buffer in a bounded-fan-in tree — the
+  *    scan, then merged by [[graft.plans.DenseMerge]] levels in a tree
+  *    where each task adds at most `split_every` buffers — the
   *    reference's own shape, for numeric axes whose bins fit the rows;
   *  - the sparse aggregate `select(binIndex*) .groupBy(idx*) .agg(storage
   *    sums)`: partial HashAggregate, a shuffle of bin rows, final
@@ -236,11 +237,12 @@ object Hist {
     * Why the tree matters: a bare `.agg()` funnels every input partition's
     * buffer into ONE final reducer — at 800k scan tasks × an n-bin buffer
     * that single task is the reduction bottleneck the reference's
-    * `split_every` exists to prevent. So when the input has more
-    * partitions than the fan-in, buffers are first grouped by
-    * `pmod(spark_partition_id, ceil(P / fanIn))` (each group merges ≤ fanIn
-    * buffers), then [[graft.functions.DenseMergeAgg]] levels repeat the
-    * contraction until one buffer remains: depth = ceil(log_fanIn(P)).
+    * `split_every` exists to prevent. So each level sends the buffer of
+    * partition p to partition `pmod(p, ceil(P / fanIn))` of an exchange
+    * with exactly that many partitions (`repartitionById`), and a
+    * [[graft.plans.DenseMerge]] adds up each partition's at most fanIn
+    * buffers; the levels repeat the contraction down to one partition:
+    * depth = ceil(log_fanIn(P)), at most fanIn buffers per task.
     * P is read from the input's physical plan without running it
     * ([[graft.plans.DenseFill.plannedPartitions]]), so building the
     * result runs no job. `splitEvery = None` reads [[SplitEveryConf]]
@@ -268,24 +270,21 @@ object Hist {
   }
 
   /** The bounded-fan-in merge of `buffers`' `partitions` rows (`__h`,
-    * `total` doubles each) into one. */
+    * `total` doubles each) into one: levels of [[DenseFill.merge]], the
+    * last over one partition. */
   private def merge(buffers: DataFrame, partitions: Int, total: Int,
       splitEvery: Option[Int]): DataFrame = {
     val fanIn = splitEvery.getOrElse(resolveSplitEvery(buffers.sparkSession))
-    // the conf path validates in resolveSplitEvery; the explicit path must
-    // too — fanIn < 2 makes the merge loop non-contracting (fanIn = 1
-    // never terminates, <= 0 leaves unmerged partial buffers)
+    // as resolveSplitEvery checks the conf: below 2 the levels never contract
     require(fanIn >= 2, s"splitEvery must be >= 2, got $fanIn")
-    val merge = graft.functions.DenseMergeAgg(col("__h"), total).as("__h")
     var groups = partitions
-    var level = buffers.select(spark_partition_id().cast("long").as("__g"), col("__h"))
-    // each level merges at most fanIn buffers per group; the last one,
-    // over at most fanIn groups, is a bare aggregate
-    while (groups > fanIn) {
-      groups = math.ceil(groups.toDouble / fanIn).toInt
-      level = level.groupBy(pmod(col("__g"), lit(groups.toLong)).as("__g")).agg(merge)
-    }
-    level.agg(merge)
+    var level = buffers
+    // at most fanIn buffers go to each group of a level
+    do {
+      groups = if (groups > fanIn) math.ceil(groups.toDouble / fanIn).toInt else 1
+      level = DenseFill.merge(level, groups, total)
+    } while (groups > 1)
+    level
   }
 
   /** Density normalization: value / (Σvalue * binWidth). The reference

@@ -2,10 +2,12 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, pmod, spark_partition_id}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Statistics,
+  UnaryNode}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -13,7 +15,7 @@ import org.apache.spark.sql.execution.{BlockingOperatorWithCodegen, CodegenSuppo
   SparkPlan, SparkStrategy, UnaryExecNode, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructType}
 
 /** Dense histogram fill as a plan node: ONE `double[bins * slots]` buffer
   * per input partition, filled row by row and emitted as one
@@ -25,8 +27,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructType}
   * runs every branch inside the whole-stage-codegen stage of the shared
   * input, so no row leaves the generated loop, no group key is hashed and
   * no value is boxed. A partition's buffer is the only thing it emits;
-  * [[graft.functions.DenseMergeAgg]] levels merge those P buffers and
-  * [[DenseBins]] turns the merged one into rows ([[graft.hist.Hist]]).
+  * [[DenseMerge]] levels merge those P buffers, at most `split_every` per
+  * task, and [[DenseBins]] turns the merged one into rows
+  * ([[graft.hist.Hist]]).
   *
   * Each branch is `cond +: idx +: values`, all over the child's output:
   * a row counts in the branch when `cond` is true, lands in bin `idx`
@@ -50,6 +53,16 @@ case class DenseFill(branches: Seq[Seq[Expression]], counts: Seq[Boolean], bins:
 object DenseFill {
   /** 2^26 doubles: a 512 MiB buffer per task. */
   final val MaxBins: Int = 1 << 26
+
+  /** The type of a dense buffer column. */
+  final val BufferType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  /** `buf` as a partition's one buffer row, counted in `rows`. */
+  def emit(buf: Array[Double], rows: SQLMetric): Iterator[InternalRow] = {
+    rows += 1
+    Iterator.single(UnsafeProjection.create(Array(BufferType))(
+      InternalRow(UnsafeArrayData.fromPrimitiveArray(buf))))
+  }
 
   /** One fill over `input`: its condition, flat bin index and slot values,
     * as in a [[DenseFill]] branch. */
@@ -103,21 +116,33 @@ object DenseFill {
   def apply(spark: SparkSession, input: LogicalPlan, branches: Seq[Seq[Expression]],
       counts: Seq[Boolean], bins: Int): DataFrame = {
     DenseFillStrategy.setup(spark)
-    val buffer = AttributeReference("__h",
-      ArrayType(DoubleType, containsNull = false), nullable = false)()
+    val buffer = AttributeReference("__h", BufferType, nullable = false)()
     GraftShims.ofRows(spark, DenseFill(branches, counts, bins, buffer, input))
   }
+
+  /** One merge level: the `__h` buffer (`length` doubles) of partition p
+    * of `buffers` goes to partition `pmod(p, groups)` of an exchange with
+    * `groups` partitions, where [[DenseMerge]] sums them into one `__h`.
+    * Adaptive execution does not coalesce an explicit partition count. */
+  def merge(buffers: DataFrame, groups: Int, length: Int): DataFrame =
+    over(buffers.select(spark_partition_id().as("__g"), col("__h"))
+        .repartitionById(groups, pmod(col("__g"), lit(groups)))) { child =>
+      val input = child.output.last
+      DenseMerge(groups, length, input, input.newInstance(), child)
+    }
 
   /** The rows of `merged`'s one buffer, as [[DenseBins]] with columns
     * `schema`. */
   def bins(merged: DataFrame, dims: Seq[Int], slots: Int, hit: Int,
-      values: Seq[Int], nonNull: Seq[Int], schema: StructType): DataFrame = {
-    val spark = merged.sparkSession
-    DenseFillStrategy.setup(spark)
-    val child = merged.queryExecution.analyzed
-    val out = schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
-    GraftShims.ofRows(spark,
-      DenseBins(dims, slots, hit, values, nonNull, child.output.head, out, child))
+      values: Seq[Int], nonNull: Seq[Int], schema: StructType): DataFrame = over(merged) { child =>
+    DenseBins(dims, slots, hit, values, nonNull, child.output.head,
+      schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)()), child)
+  }
+
+  /** `node` over `df`'s analyzed plan, planned by [[DenseFillStrategy]]. */
+  private def over(df: DataFrame)(node: LogicalPlan => LogicalPlan): DataFrame = {
+    DenseFillStrategy.setup(df.sparkSession)
+    GraftShims.ofRows(df.sparkSession, node(df.queryExecution.analyzed))
   }
 
   /** The planned partitions of `input` when it is estimated to hold at
@@ -153,6 +178,20 @@ object DenseFill {
   }
 }
 
+/** One level of the merge of [[DenseFill]] buffers: the sum of a
+  * partition's `input` buffers (`length` doubles, else the task fails) as
+  * one row `buffer`, an empty partition's too; `child` has `partitions`. */
+case class DenseMerge(partitions: Int, length: Int, input: Attribute, buffer: Attribute,
+    child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = buffer :: Nil
+  override def producedAttributes: AttributeSet = AttributeSet(buffer)
+  // one row per partition however large the input, as an aggregate
+  // without grouping estimates its one row
+  override def stats: Statistics = Statistics(rowCount = Some(partitions),
+    sizeInBytes = EstimationUtils.getSizePerRow(output) * partitions)
+  override protected def withNewChildInternal(c: LogicalPlan): DenseMerge = copy(child = c)
+}
+
 /** The rows of one merged [[DenseFill]] buffer (`buffer`, the child's
   * only row): one row per bin whose `hit` slot is positive, or per bin
   * when `hit` < 0. A row is the bin's per-axis indices (row-major over
@@ -165,12 +204,14 @@ case class DenseBins(dims: Seq[Int], slots: Int, hit: Int, values: Seq[Int],
   override protected def withNewChildInternal(c: LogicalPlan): DenseBins = copy(child = c)
 }
 
-/** Plans [[DenseFill]] as [[DenseFillExec]] and [[DenseBins]] as
-  * [[DenseBinsExec]]. */
+/** Plans [[DenseFill]] as [[DenseFillExec]], [[DenseMerge]] as
+  * [[DenseMergeExec]] and [[DenseBins]] as [[DenseBinsExec]]. */
 object DenseFillStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case DenseFill(branches, counts, bins, buffer, child) =>
       DenseFillExec(branches, counts, bins, buffer, planLater(child)) :: Nil
+    case DenseMerge(_, length, input, buffer, child) =>
+      DenseMergeExec(length, input, buffer, planLater(child)) :: Nil
     case DenseBins(dims, slots, hit, values, nonNull, buffer, output, child) =>
       DenseBinsExec(dims, slots, hit, values, nonNull, buffer, output, planLater(child)) :: Nil
     case _ => Nil
@@ -182,6 +223,18 @@ object DenseFillStrategy extends SparkStrategy {
       spark.experimental.extraStrategies = this +: spark.experimental.extraStrategies
 }
 
+/** A physical dense node: new columns only, in its child's partitions;
+  * one partition stays one, so a sort or join above needs no exchange. */
+trait DenseExec extends UnaryExecNode {
+  override def producedAttributes: AttributeSet = AttributeSet(output)
+  override def outputPartitioning: Partitioning = child.outputPartitioning.numPartitions match {
+    case 1 => SinglePartition
+    case n => UnknownPartitioning(n)
+  }
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+}
+
 /** Physical [[DenseFill]]. Under whole-stage codegen the fill is the
   * consumer of its child's generated loop (`doConsume`), and the buffer
   * row is produced once the child's `produce` loop has drained the
@@ -189,18 +242,11 @@ object DenseFillStrategy extends SparkStrategy {
   * `doExecute` is the same loop over the child's rows, for plans that run
   * without whole-stage codegen. */
 case class DenseFillExec(branches: Seq[Seq[Expression]], counts: Seq[Boolean], bins: Int,
-    buffer: Attribute, child: SparkPlan) extends UnaryExecNode with BlockingOperatorWithCodegen {
+    buffer: Attribute, child: SparkPlan) extends DenseExec with BlockingOperatorWithCodegen {
 
   private val slots = counts.size
 
   override def output: Seq[Attribute] = buffer :: Nil
-  override def producedAttributes: AttributeSet = AttributeSet(buffer)
-  // one row per input partition, with none of the child's columns
-  override def outputPartitioning: Partitioning =
-    UnknownPartitioning(child.outputPartitioning.numPartitions)
-
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   protected override def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")
@@ -226,9 +272,7 @@ case class DenseFillExec(branches: Seq[Seq[Expression]], counts: Seq[Boolean], b
           }
         }
       }
-      numOutputRows += 1
-      val out = UnsafeProjection.create(Array(buffer.dataType))
-      Iterator.single(out(InternalRow(UnsafeArrayData.fromPrimitiveArray(buf))))
+      DenseFill.emit(buf, numOutputRows)
     }
   }
 
@@ -317,22 +361,36 @@ case class DenseFillExec(branches: Seq[Seq[Expression]], counts: Seq[Boolean], b
   override protected def withNewChildInternal(c: SparkPlan): DenseFillExec = copy(child = c)
 }
 
+/** Physical [[DenseMerge]], without codegen: a task reads at most
+  * `split_every` buffers, each element in place. */
+case class DenseMergeExec(length: Int, input: Attribute, buffer: Attribute, child: SparkPlan)
+    extends DenseExec {
+
+  override def output: Seq[Attribute] = buffer :: Nil
+
+  protected override def doExecute(): RDD[InternalRow] = {
+    val numOutputRows = longMetric("numOutputRows")
+    val (at, n) = (child.output.indexWhere(_.exprId == input.exprId), length)
+    child.execute().mapPartitions { rows =>
+      val buf = new Array[Double](n)
+      rows.foreach { r =>
+        val a = r.getArray(at)
+        require(a.numElements() == n, s"buffer length ${a.numElements()} != $n")
+        var i = 0
+        while (i < n) { buf(i) += a.getDouble(i); i += 1 }
+      }
+      DenseFill.emit(buf, numOutputRows)
+    }
+  }
+
+  override protected def withNewChildInternal(c: SparkPlan): DenseMergeExec = copy(child = c)
+}
+
 /** Physical [[DenseBins]]: at most `dims.product` rows from one buffer,
   * written without codegen. */
 case class DenseBinsExec(dims: Seq[Int], slots: Int, hit: Int, values: Seq[Int],
     nonNull: Seq[Int], buffer: Attribute, output: Seq[Attribute], child: SparkPlan)
-    extends UnaryExecNode {
-
-  override def producedAttributes: AttributeSet = AttributeSet(output)
-  // rows stay in their buffer's partition: one partition stays one, so a
-  // sort or join above needs no exchange
-  override def outputPartitioning: Partitioning = child.outputPartitioning match {
-    case SinglePartition => SinglePartition
-    case p => UnknownPartitioning(p.numPartitions)
-  }
-
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+    extends DenseExec {
 
   protected override def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")

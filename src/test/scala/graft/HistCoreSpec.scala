@@ -1,14 +1,22 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, RangeExec, SparkPlan,
-  UnionExec, WholeStageCodegenExec}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, QueryExecution, RangeExec,
+  SparkPlan, UnionExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.hist._
-import graft.plans.DenseFillExec
+import graft.plans.{DenseFill, DenseFillExec, DenseMergeExec}
 
 /** Core engine behavior, mirroring the reference's oracle-differential
   * style (/root/reference/tests/test_core.py) with hand-computed oracles
@@ -598,10 +606,10 @@ class HistCoreSpec extends AnyFunSuite {
     val dense = grid(denseDf)
     assert(dense == want)
     assert(dense.size == 7 * 6)
-    // bounded merge: the plan must carry DenseMergeAgg contraction levels
-    // (no single final reducer sees all 9 partial buffers)
-    val plan = denseDf.queryExecution.executedPlan.toString.toLowerCase
-    assert(plan.contains("densemergeagg"), plan.take(2000))
+    // bounded merge: ceil(log2 9) = 4 DenseMerge levels (no single final
+    // reducer sees all 9 partial buffers)
+    val nodes = ShuffledShapes.physicalNodes(denseDf)
+    assert(nodes.count(_.isInstanceOf[DenseMergeExec]) == 4, nodes.map(_.nodeName).mkString(", "))
     // the same merged grid from the interpreted fill, and with null and
     // NaN coordinates (overflow) under any partitioning
     interpreted {
@@ -894,5 +902,102 @@ class HistCoreSpec extends AnyFunSuite {
       for ((b, i) <- builds.zipWithIndex)
         assert(JobCounts.of(spark)(b())._2 == 0, s"$name build $i")
     }
+  }
+
+  /** The shuffle records each task of `body` read, per stage in stage
+    * order, for the stages that read any. */
+  private def shuffleReads(body: => Any): Seq[Seq[Long]] = {
+    val sc = spark.sparkContext
+    val reads = new ConcurrentLinkedQueue[(Int, Long)]
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) reads.add(e.stageId -> e.taskMetrics.shuffleReadMetrics.recordsRead)
+    }
+    GraftShims.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try { body; GraftShims.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
+    reads.asScala.toSeq.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2)).filter(_.sum > 0)
+  }
+
+  /** The executed plans of the queries `body` runs. */
+  private def executedPlans(body: => Any): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; GraftShims.drainListenerBus(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  test("every merge task reads at most splitEvery buffers") {
+    val spec = HistSpec(Seq(Regular(10, 0.0, 1.0)), DoubleStorage)
+    for (p <- Seq(10, 9, 64); fanIn <- Seq(2, 8)) {
+      val df = spark.range(0, p * 100L, 1, p).select(rand(p).as("x"))
+      val clue = s"P = $p, fan-in $fanIn"
+      val reads = shuffleReads {
+        assert(Hist.fillTree(spec, df, Seq(col("x")), splitEvery = Some(fanIn)).sum == p * 100.0, clue)
+      }
+      // level k runs ceil(P / fanIn^k) tasks, down to one
+      val tasks = Iterator.iterate(p)(g => (g + fanIn - 1) / fanIn).drop(1)
+        .takeWhile(_ > 1).toSeq :+ 1
+      assert(reads.map(_.size) == tasks, clue)
+      assert(reads.flatten.forall(_ <= fanIn), s"$clue: $reads")
+    }
+  }
+
+  test("dense fills run no interpreted aggregate and no CodegenFallback expression") {
+    val df = spark.range(0, 100000, 1, 10).select(rand(1).as("x"), rand(2).as("w"))
+    val x = Seq(col("x"))
+    val weighted = HistSpec(Seq(Regular(10, 0.0, 1.0)), WeightStorage)
+    val dbl = HistSpec(Seq(Regular(10, 0.0, 1.0)), DoubleStorage)
+    val runs = Seq[(String, () => Any)](
+      "Hist.fill" -> (() => Hist.fill(weighted, df, x, Some(col("w"))).collect()),
+      "Histogram.result" -> (() =>
+        new Histogram(dbl).fill(df.where(col("x") > 0.5), x).fill(df, x).result(spark).collect()),
+      "fillDense" -> (() => Hist.fillDense(dbl, df, x).collect()),
+      "fillTree" -> (() => Hist.fillTree(dbl, df, x)))
+    for ((name, run) <- runs) {
+      val nodes = executedPlans(run()).flatMap(ShuffledShapes.planNodes)
+      def names = s"$name: ${nodes.map(_.nodeName).mkString(", ")}"
+      assert(nodes.count(_.isInstanceOf[DenseMergeExec]) == 2, names)
+      assert(!nodes.exists(_.isInstanceOf[ObjectHashAggregateExec]), names)
+      assert(!nodes.flatMap(_.expressions).exists(_.exists(_.isInstanceOf[CodegenFallback])), names)
+    }
+    // the merged buffer is one partition: a sort adds no exchange
+    val d = Hist.fillDense(dbl, df, x)
+    val sorted = d.orderBy("i0")
+    assert(exchanges(sorted) == exchanges(d))
+    assert(sorted.collect().map(_.getLong(0)).toSeq == (0L to 11L))
+  }
+
+  test("a fill over an input with no partitions merges to the zero buffer") {
+    val spec = HistSpec(Seq(Regular(4, 0.0, 1.0)), DoubleStorage)
+    val schema = StructType(Seq(StructField("x", DoubleType)))
+    val inputs = Seq(
+      "local" -> Seq.empty[Double].toDF("x"),
+      "rdd" -> spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
+    for ((name, df) <- inputs) {
+      assert(DenseFill.plannedPartitions(df) == 0, name)
+      assert(Hist.fillTree(spec, df, Seq(col("x"))).toSeq == Seq.fill(6)(0.0), name)
+      assert(Hist.fillDense(spec, df, Seq(col("x"))).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toSeq.sorted == (0L to 5L).map(_ -> 0.0), name)
+    }
+  }
+
+  test("DenseMerge sums each group's buffers, is estimated at one row each, rejects a wrong length") {
+    val buffers = Seq(Seq(1.0, 2.0, 3.0), Seq(0.5, 0.5, 0.5), Seq(4.0, 0.0, 1.0)).toDF("__h")
+      .repartition(3)
+    val merged = DenseFill.merge(buffers, 1, 3)
+    assert(merged.collect().map(_.getSeq[Double](0)).toSeq == Seq(Seq(5.5, 2.5, 4.5)))
+    // however large the input, like an aggregate without grouping
+    assert(merged.queryExecution.optimizedPlan.stats.rowCount.contains(1))
+    assert(DenseFill.merge(buffers, 2, 3).queryExecution.optimizedPlan.stats.rowCount.contains(2))
+    val e = intercept[Exception](DenseFill.merge(buffers, 1, 2).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("buffer length 3 != 2")), e.toString)
   }
 }

@@ -23,12 +23,12 @@ object ShuffledShapes {
     * wrapper (its current plan; the initial one before execution) and
     * into its query stages (after execution). A cached relation's build
     * plan is not a child, so the nodes stop at an InMemoryTableScan. */
-  def physicalNodes(df: DataFrame): Seq[SparkPlan] = {
-    def ops(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
-      case s: QueryStageExec => ops(s.plan)
-      case other => other.children.flatMap(ops) :+ other
-    }
-    ops(df.queryExecution.executedPlan)
+  def physicalNodes(df: DataFrame): Seq[SparkPlan] = planNodes(df.queryExecution.executedPlan)
+
+  /** Every node of physical plan `p`, as [[physicalNodes]]. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case other => other.children.flatMap(planNodes) :+ other
   }
 }

@@ -12,8 +12,10 @@ from the node-detail lines `(N) <Node> ...` of the formatted plan
 (subquery plans included). `Exchange` is the shuffle exchange only;
 `BroadcastExchange` and `ReusedExchange` are other nodes. `Scan` counts
 the leaves that read input rows: `Scan <source>` (parquet, ExistingRDD,
-...), `Range` and `LocalTableScan`. An sbt `[info] ` prefix on each line
-is ignored.
+...), `Range` and `LocalTableScan`. `InterpretedAgg` counts the
+aggregate nodes that run outside whole-stage codegen:
+`ObjectHashAggregate` and `SortAggregate`. An sbt `[info] ` prefix on
+each line is ignored.
 
 Usage:
   python3 tools/planshape.py PLANS
@@ -22,8 +24,8 @@ Usage:
       one JSON line per query whose counts differ (or that is in only
       one file): {"query", "before", "after", "worse"}, then a summary
       line. `worse` is true when the query gains a SortMergeJoin,
-      ShuffledHashJoin, CartesianProduct, Exchange or Scan, or loses a
-      broadcast join. Exit status 1 if any query is worse.
+      ShuffledHashJoin, CartesianProduct, Exchange, Scan or
+      InterpretedAgg, or loses a broadcast join. Exit status 1 if any query is worse.
 
 Example:
   SPARK_GRAFT_SF_DIR=/path/to/sf0.1 sbt -batch "runMain graft.Cli explain" > plans.txt
@@ -33,10 +35,12 @@ import re
 import sys
 
 NODES = ("BroadcastHashJoin", "BroadcastNestedLoopJoin", "SortMergeJoin",
-         "ShuffledHashJoin", "CartesianProduct", "Exchange", "Scan")
-# detail-line node names counted as `Scan`
-SCANS = ("Scan", "Range", "LocalTableScan")
-WORSE_IF_MORE = ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct", "Exchange", "Scan")
+         "ShuffledHashJoin", "CartesianProduct", "Exchange", "Scan", "InterpretedAgg")
+# detail-line node names counted under another name
+GROUPED = {**dict.fromkeys(("Scan", "Range", "LocalTableScan"), "Scan"),
+           **dict.fromkeys(("ObjectHashAggregate", "SortAggregate"), "InterpretedAgg")}
+WORSE_IF_MORE = ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct", "Exchange", "Scan",
+                 "InterpretedAgg")
 BROADCAST = ("BroadcastHashJoin", "BroadcastNestedLoopJoin")
 
 HEADER = re.compile(r"^========== (\S+) ==========$")
@@ -56,7 +60,7 @@ def shapes(path):
                 cur = out.setdefault(h.group(1), dict.fromkeys(NODES, 0))
                 continue
             d = DETAIL.match(line)
-            node = d and ("Scan" if d.group(1) in SCANS else d.group(1))
+            node = d and GROUPED.get(d.group(1), d.group(1))
             if cur is not None and node in cur:
                 cur[node] += 1
     return out
