@@ -1,20 +1,97 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import scala.util.control.NonFatal
 import graft.ops.Checkpoints
 object Bench {
   def main(args: Array[String]): Unit = Cli.main("bench" +: args)
 
+  /** What the stages that ran inside a body read and shuffled: input
+    * records read from sources, shuffle records and bytes written. */
+  private[graft] final case class StageCounts(inputRecords: Long, shuffleRecords: Long, shuffleBytes: Long)
+
+  /** Runs `body` and sums the [[StageCounts]] of the stages it ran. */
+  private def withStageCounts[A](spark: SparkSession)(body: => A): (A, StageCounts) = {
+    val input, records, bytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        input.addAndGet(m.inputMetrics.recordsRead)
+        records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      GraftShims.drainListenerBus(sc)
+      (a, StageCounts(input.get(), records.get(), bytes.get()))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** One query's timed reps: each rep's seconds (None if it failed) and
+    * the [[StageCounts]] of the fastest rep that succeeded. */
+  private[graft] final case class QueryRun(secs: Seq[Option[Double]], fastest: Option[StageCounts])
+
+  /** The per-query runner of `bench` and `ladder`: an untimed staging
+    * pass, then `reps` timed runs into the noop sink, all inside
+    * [[Checkpoints.released]], so the query's persisted and checkpointed
+    * RDDs are released after its reps and do not pressure the queries
+    * after it. A failed rep is reported on stderr under `tag`. */
+  private[graft] def runQuery(spark: SparkSession, tag: String, name: String,
+      fn: (SparkSession, String) => DataFrame, sfDir: String, reps: Int): QueryRun =
+    Checkpoints.released(spark) {
+      // Staging pass (untimed): building the DataFrame once runs every
+      // eager fixture-staging step of the query (fixture writes, format
+      // mirrors, index builds, memoized weights), so every timed rep,
+      // rep 1 included, measures the query itself. The DataFrame is
+      // discarded unexecuted; staging errors surface in the timed loop.
+      try fn(spark, sfDir) catch { case NonFatal(_) => () }
+      // noop sink: materializes every result column (count() would let
+      // Catalyst prune the aggregates)
+      val runs = (1 to reps).map { _ =>
+        withStageCounts(spark) {
+          val t0 = System.nanoTime()
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            Some((System.nanoTime() - t0) / 1e9)
+          } catch { case NonFatal(e) => System.err.println(s"[$tag] $name: $e"); None }
+        }
+      }
+      val ok = runs.collect { case (Some(t), c) => (t, c) }
+      QueryRun(runs.map(_._1), if (ok.isEmpty) None else Some(ok.minBy(_._1)._2))
+    }
+
+  /** `SPARK_GRAFT_BENCH_REPS`, default 3. */
+  private[graft] def reps: Int = {
+    val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    require(n >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $n")
+    n
+  }
+
+  /** Absorbs session and first-job overhead outside any query's
+    * measurement. */
+  private[graft] def warmUp(spark: SparkSession): Unit =
+    spark.range(1000000L).selectExpr("sum(id)").write
+      .format("noop").mode("overwrite").save()
+
+  /** Writes `line` to `bench/<name>` and returns that path ("" if the
+    * write failed, which is reported, not fatal). */
+  private[graft] def writeDetail(name: String, line: String): String =
+    try {
+      val dir = new java.io.File("bench"); dir.mkdirs()
+      val w = new java.io.PrintWriter(new java.io.File(dir, name))
+      try w.println(line) finally w.close()
+      s"bench/$name"
+    } catch { case NonFatal(e) => System.err.println(s"[bench] detail file write failed: $e"); "" }
+
   /** `graft.Cli bench [query,...]`: every registered query at
     * `SPARK_GRAFT_SF_DIR`, best of `SPARK_GRAFT_BENCH_REPS` reps. */
   def run(spark: SparkSession, args: Seq[String]): Unit = {
     val sfDir = Cli.sfDir("0.1")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
-    // absorb session/first-job overhead outside any query's measurement,
-    // and fix the query order so per-round numbers are comparable
-    spark.range(1000000L).selectExpr("sum(id)").write
-      .format("noop").mode("overwrite").save()
+    val reps = this.reps
+    warmUp(spark)
     def r3(v: Double): Double = math.rint(v * 1000.0) / 1000.0
     var failures = 0
     // optional arg (local iteration only; the driver passes none): a
@@ -22,33 +99,16 @@ object Bench {
     val only: Option[Set[String]] =
       args.headOption.map(_.split(",").toSet)
     val perIter = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    // a fixed query order, so per-round numbers are comparable
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => only.forall(_.contains(kv._1))).map { case (name, fn) =>
-      // the query's persisted and checkpointed RDDs are released after
-      // its reps, so its blocks do not pressure the queries after it
-      Checkpoints.released(spark) {
-        // Staging pass (untimed): building the DataFrame once runs every
-        // eager fixture-staging step of the query (fixture writes, format
-        // mirrors, index builds, memoized weights), so every timed rep,
-        // rep 1 included, measures the query itself. The DataFrame is
-        // discarded unexecuted; staging errors surface in the timed loop.
-        try fn(spark, sfDir) catch { case NonFatal(_) => () }
-        // noop sink: materializes every result column (count() would let
-        // Catalyst prune the aggregates). Best of `reps`; every rep is
-        // reported, so a noise-dominated run shows in the artifact.
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case NonFatal(e) =>
-              System.err.println(s"[bench] $name: $e"); failures += 1; false
-            }
-          // a query that dies in ~0ms must not report a flattering time
-          if (ok) (System.nanoTime() - t0) / 1e9 else Double.MaxValue
-        }
-        perIter(name) = times.map(t => if (t == Double.MaxValue) -1.0 else r3(t))
-        name -> (if (times.min == Double.MaxValue) -1.0 else times.min)
-      }
+      // Best of `reps`; every rep is reported, so a noise-dominated run
+      // shows in the artifact. A query that dies in ~0 ms must not
+      // report a flattering time: a failed rep counts as -1.
+      val secs = runQuery(spark, "bench", name, fn, sfDir, reps).secs
+      failures += secs.count(_.isEmpty)
+      perIter(name) = secs.map(_.fold(-1.0)(r3))
+      name -> secs.flatten.minOption.getOrElse(-1.0)
     }
     // noise audit: flag queries whose slowest WARM rep exceeds 3x the
     // fastest. With 3+ reps the first is excluded: it carries the query's
@@ -74,16 +134,14 @@ object Bench {
     val nOk = results.count(_._2 >= 0)
     val secPerQuery = if (nOk > 0) r3(total / nOk) else -1.0
     // Output contract: the full detail line (per-query minima, every
-    // rep, noise flags, totals) goes to stdout and bench/last_run.json;
-    // the LAST stdout line is a compact summary (~250 chars, `metric` and
-    // `value` last) that fits whole in a 2000-char tail capture.
+    // rep, noise flags, totals) goes to stdout and
+    // bench/last_run_c<cpus>.json (one file per core count, so runs at
+    // different core counts do not overwrite each other); the LAST stdout
+    // line is a compact summary (~250 chars, `metric` and `value` last)
+    // that fits whole in a 2000-char tail capture.
     val detail = s"""{"queries":$qs,"iterations":$iters,"noisy":$noisyJson,"reps":$reps,"failures":$failures,"sf":"$sfDir","unit":"sec","n_queries":$nOk,"sec_per_query":$secPerQuery,"metric":"total","value":${r3(total)}}"""
-    try {
-      val dir = new java.io.File("bench"); dir.mkdirs()
-      val w = new java.io.PrintWriter(new java.io.File(dir, "last_run.json"))
-      try w.println(detail) finally w.close()
-    } catch { case NonFatal(e) => System.err.println(s"[bench] detail file write failed: $e") }
+    val file = writeDetail(s"last_run_c${spark.sparkContext.defaultParallelism}.json", detail)
     println(detail)
-    println(s"""{"queries_file":"bench/last_run.json","reps":$reps,"failures":$failures,"noisy_count":${noisy.size},"sf":"$sfDir","unit":"sec","n_queries":$nOk,"sec_per_query":$secPerQuery,"metric":"total","value":${r3(total)}}""")
+    println(s"""{"queries_file":"$file","reps":$reps,"failures":$failures,"noisy_count":${noisy.size},"sf":"$sfDir","unit":"sec","n_queries":$nOk,"sec_per_query":$secPerQuery,"metric":"total","value":${r3(total)}}""")
   }
 }

@@ -5,8 +5,9 @@ import scala.util.control.NonFatal
 
 /** The one command line, `graft.Cli <mode> [args]` (modes and env vars:
   * docs/USAGE.md "Running"). Arguments are checked first; then one
-  * [[GraftSession.local]] session runs the mode and is stopped. A bad
-  * mode or argument exits 2 with the mode list, a failed mode 1. */
+  * [[GraftSession.local]] session runs the mode and is stopped, unless it
+  * was running before. A bad mode or argument exits 2 with the mode list,
+  * a failed mode 1. */
 object Cli {
   /** `parse` checks the mode's arguments and returns its work. */
   private final case class Mode(name: String, usage: String,
@@ -22,6 +23,11 @@ object Cli {
 
   private val modes: Seq[Mode] = Seq(
     Mode("bench", "[query,...]", args => Bench.run(_, args)),
+    Mode("ladder", "<query,...> [sfDir ...]", args => {
+      require(args.nonEmpty, "ladder needs <query,...>")
+      val names = args.head.split(",").toSeq.map(known)
+      Ladder.run(_, names, if (args.size > 1) args.tail else Ladder.defaultRungs)
+    }),
     Mode("verify", "<sfDir> <outDir> [query,...]", args => {
       require(args.size >= 2, "verify needs <sfDir> <outDir>")
       Verify.run(_, args)
@@ -69,13 +75,16 @@ object Cli {
         Console.err.println(usage)
         2
       case Right(body) =>
+        // a session that was already running (an embedding JVM, a test
+        // suite) is its owner's to stop
+        val owned = SparkSession.getDefaultSession.isEmpty
         val spark = GraftSession.local(GraftSession.cpus)
         try { body(spark); 0 }
         catch { case NonFatal(e) =>
           Console.err.println(s"[cli] ${args.head} failed: $e")
           e.printStackTrace()
           1
-        } finally spark.stop()
+        } finally if (owned) spark.stop()
     }
   }
 

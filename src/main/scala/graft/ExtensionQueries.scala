@@ -79,8 +79,8 @@ object ExtensionQueries {
   // FULL co-purchase graph at sf0.1 is dense (mean degree ~88 — every
   // part co-occurs with most others), so exact triangle counting on it
   // is a 16 s wedge-volume stress test; the sampled graph exercises the
-  // identical plan at exhibit cost, and the dense-graph/hub behavior is
-  // soak-covered (SCALE.md soak-triangles)
+  // identical plan at exhibit cost; its growth with the input is in
+  // SCALE.md's scaling ladder (`graph_triangles`)
   private def coPurchaseEdgesSampled(s: SparkSession, dir: String,
       mod: Int): DataFrame = {
     val li = Tables.lineitem(s, dir).filter(col("l_orderkey") % mod === 0)

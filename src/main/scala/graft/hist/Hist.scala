@@ -44,7 +44,7 @@ object Hist {
   /** Project one FillSpec to the pre-aggregation shape
     * ([prefix cols,] i0..iD, w, s). Narrow (no shuffle) — whole-stage
     * codegen fuses scan + bin index. */
-  private def project(spec: HistSpec, f: FillSpec,
+  private[graft] def project(spec: HistSpec, f: FillSpec,
       prefix: Seq[Column] = Nil): DataFrame = {
     require(f.cols.size == spec.ndim,
       s"fill needs ${spec.ndim} coordinate columns, got ${f.cols.size}")

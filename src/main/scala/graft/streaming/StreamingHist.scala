@@ -93,20 +93,12 @@ object StreamingHist {
   def windowedFill(spec: HistSpec, df: DataFrame, tsCol: Column,
       windowDuration: String, cols: Seq[Column],
       weight: Option[Column] = None, sample: Option[Column] = None): DataFrame = {
-    // same contract as the batch fill (Hist.project): zip would silently
-    // truncate extra columns / fail opaquely on missing ones
-    require(cols.size == spec.ndim,
-      s"fill needs ${spec.ndim} coordinate columns, got ${cols.size}")
-    require(sample.isDefined || !spec.storage.usesSample,
-      s"${spec.storage} requires a sample column")
-    val idx = spec.axes.zip(cols).zipWithIndex.map { case ((ax, c), i) =>
-      ax.binCol(c).as(s"i$i")
-    }
-    val w = weight.getOrElse(lit(1.0)).cast("double").as("__w")
-    val s = sample.getOrElse(lit(0.0)).cast("double").as("__s")
-    val projected = df.select(Seq(window(tsCol, windowDuration).as("window")) ++ idx ++ Seq(w, s): _*)
+    // the batch fill's projection (arity and sample checks, NULL-key
+    // filter) with the window as a prefix column
     val aggs = spec.storage.aggs(col("__w"), col("__s"))
-    val base = projected.groupBy((col("window") +: spec.indexCols.map(col)): _*)
+    val base = Hist.project(spec, FillSpec(df, cols, weight, sample),
+        prefix = Seq(window(tsCol, windowDuration).as("window")))
+      .groupBy((col("window") +: spec.indexCols.map(col)): _*)
       .agg(aggs.head, aggs.tail: _*)
     spec.storage.finalizers.foldLeft(base) { case (d, (n, c)) => d.withColumn(n, c) }
   }

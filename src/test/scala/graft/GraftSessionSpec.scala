@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every entry point runs the one session [[GraftSession.local]] builds:
   * the test session carries its confs, no other code builds a session,
-  * `graft.Cli` is the only command line, and the soaks the docs cite
-  * resolve in its soak table.
+  * `graft.Cli` is the only command line, and the soaks and ladder
+  * queries the docs cite resolve in its soak table and the registry.
   */
 class GraftSessionSpec extends AnyFunSuite {
   test("library session defaults are applied to the shared session") {
@@ -60,6 +60,14 @@ class GraftSessionSpec extends AnyFunSuite {
       if (mode == "soak") // `<name>` placeholders have no arg
         assert(arg.forall(Examples.soaks.map(_.name).contains), s"$file cites unknown soak $arg")
     }
+    // every query of a `graft.Cli ladder q1,q2,...` citation is registered
+    val ladder = """graft\.Cli ladder ([\w,]+)""".r
+    val laddered = docs.flatMap(p => ladder.findAllMatchIn(Files.readString(p))
+      .flatMap(_.group(1).split(",")).map(q => (p.getFileName.toString, q)))
+    assert(laddered.nonEmpty, "no ladder citation found")
+    laddered.foreach { case (file, q) =>
+      assert(SparkEntry.queries.contains(q), s"$file cites unknown ladder query $q")
+    }
   }
 
   test("a bad mode or argument exits non-zero with the mode list") {
@@ -69,11 +77,12 @@ class GraftSessionSpec extends AnyFunSuite {
       (code, err.toString("UTF-8"))
     }
     for (args <- Seq(Seq("no-such-mode"), Seq(), Seq("soak", "no-such-soak"),
-        Seq("verify"))) {
+        Seq("verify"), Seq("ladder"), Seq("ladder", "hist1d_regular,no_such_query"))) {
       val (code, out) = run(args: _*)
       assert(code != 0, s"$args")
       Cli.modeNames.foreach(m => assert(out.contains(s"  $m"), s"$args: $m missing"))
     }
-    assert(run("soak", "no-such-soak")._2.contains("soak-cusum"))
+    assert(run("soak", "no-such-soak")._2.contains("soak-quantile"))
+    assert(run("ladder", "no_such_query")._2.contains("unknown query no_such_query"))
   }
 }

@@ -129,6 +129,27 @@ class StreamingHistSpec extends AnyFunSuite {
     assert(got.nonEmpty)
   }
 
+  test("windowed fill drops a circular axis' NaN/inf rows, as Hist.fill does") {
+    val spec = HistSpec(Seq(RegularCircular(4, 0.0, 4.0)), DoubleStorage)
+    // each hour gets finite and non-finite values (even i: hour 0)
+    val xs = Seq(1.5, Double.NaN, Double.PositiveInfinity, 2.5, 5.5,
+      Double.NegativeInfinity, Double.NaN, 0.5)
+    val df = xs.zipWithIndex.map { case (x, i) =>
+      (java.sql.Timestamp.valueOf(f"2024-01-01 ${i % 2}%02d:10:00"), x)
+    }.toDF("ts", "v")
+    // (bin, value) per window; a NULL bin shows as None
+    def bins(h: org.apache.spark.sql.DataFrame): Set[(Option[Long], Double)] =
+      h.select($"i0", $"value").collect()
+        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getDouble(1))).toSet
+    val windowed = StreamingHist.windowedFill(spec, df, $"ts", "1 hour", Seq($"v"))
+    for (h <- Seq(0, 1)) {
+      val start = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
+      val got = bins(windowed.filter($"window.start" === lit(start)))
+      val want = bins(Hist.fill(spec, df.filter(hour($"ts") === h), Seq($"v")))
+      assert(want.nonEmpty && got == want, s"window $h")
+    }
+  }
+
   test("streamed windowed quantiles == batch quantiles on the same windows") {
     val dir = java.nio.file.Files.createTempDirectory("graft-squant").toFile
     // 3 hourly windows with different value distributions, so per-window
